@@ -79,14 +79,7 @@ object IndexBuilder {
       // precisely for feedback-style consumers: RM3 fetches its nQueries ×
       // fbDocs feedback vectors by key instead of re-tokenizing the corpus.
       // Costs one extra shuffle+write of the narrow token table at build.
-      storeDocVectors: Boolean = true,
-      // cache the segments table across its three consumers. Default OFF:
-      // each consumer column-prunes a different subset, and re-scanning
-      // narrow parquet columns measured FASTER than materializing the full
-      // 4-column columnar cache (the first consumer pays the cache build —
-      // docs stage 21.5s cached vs 5.6s uncached at 2.4M docs), besides the
-      // eviction cliff once the corpus outgrows storage memory.
-      cacheSegments: Boolean = false)
+      storeDocVectors: Boolean = true)
 
   def saltOf(docIntId: Column): Column =
     shiftrightunsigned(docIntId, SaltShift).cast(IntegerType)
@@ -161,8 +154,9 @@ object IndexBuilder {
     * ~2^16 terms per bucket keeps each bucket a handful of MB-scale,
     * row-group-prunable files; the candidate scan's read fraction is then
     * ∝ nQueryTerms × rowGroup regardless of bucket count (measured across
-    * numBuckets ∈ {4..64} at 480k docs — graft.tools.BucketSweep), so the
-    * rule just keeps file/dir counts sane at both ends of the scale.
+    * numBuckets ∈ {4..64} at 480k docs — BASELINE.md "Round-7 postings
+    * bucket sweep"), so the rule just keeps file/dir counts sane at both
+    * ends of the scale.
     */
   val TermsPerBucketTarget: Long = 1L << 16
 
@@ -242,11 +236,12 @@ object IndexBuilder {
     * (top-k hits land anywhere in the corpus), which row-group MIN/MAX
     * stats cannot skip — measured: a 100-id scattered fetch read 100% of
     * records under the default 128 MB row groups, vs 10% with 256 KB
-    * groups + a bloom filter (graft.tools.DocvecIo). Small row groups +
-    * a docIntId bloom filter make skipped-record volume ∝ nIds × rowGroup
-    * instead of ∝ table size; the cost is a few % of table size in
-    * metadata. Contiguous-range fetches keep pruning via the min/max
-    * stats as before.
+    * groups + a bloom filter (BASELINE.md "Round-6 A/B: packed doc
+    * vectors", point-lookup layout). Small row groups + a docIntId bloom
+    * filter make skipped-record volume ∝ nIds × rowGroup instead of ∝
+    * table size; the cost is a few % of table size in metadata.
+    * Contiguous-range fetches keep pruning via the min/max stats as
+    * before.
     */
   private val DocvecsWriteOptions: Map[String, String] = Map(
     "parquet.bloom.filter.enabled#docIntId" -> "true",
@@ -256,10 +251,11 @@ object IndexBuilder {
   /** Same point-lookup layout for the postings table, keyed by term: a
     * query batch's distinct terms are SCATTERED across the term-sorted row
     * groups, so with default 128 MB groups the candidate scan read 100% of
-    * posting rows per batch (graft.tools.PostingsIo: 736k records for
-    * 1,312 matching rows at 480k docs). Term bloom filter + 1 MB row
-    * groups: 6.0% of records, 4× faster scan, table no larger — and the
-    * fraction keeps falling with corpus size (IO ∝ nTerms × rowGroup).
+    * posting rows per batch (BASELINE.md "Round-6 postings point-lookup
+    * layout": 736k records for 1,312 matching rows at 480k docs). Term
+    * bloom filter + 1 MB row groups: 6.0% of records, 4× faster scan,
+    * table no larger — and the fraction keeps falling with corpus size
+    * (IO ∝ nTerms × rowGroup).
     * Bucket partition pruning and the In(term) row-group stats pruning
     * for narrow term sets are unchanged.
     */
@@ -412,15 +408,14 @@ object IndexBuilder {
         throw new IllegalStateException(s"injected failure after group $g (test hook)")
     }
 
-    // Three downstream stages consume segments (docs, termstats, postings):
-    // optionally cache it instead of re-reading/decoding parquet three
-    // times (spills to disk when it exceeds memory).
-    val segments0 = spark.read.parquet(segBase)
+    // Three downstream stages consume segments (docs, termstats, postings).
+    // They re-read the parquet uncached: each column-prunes a different
+    // subset, and re-scanning narrow columns measured FASTER than building
+    // the full 4-column columnar cache (docs stage 21.5 s cached vs 5.6 s
+    // uncached at 2.4M docs, BASELINE.md "Segments cache"), with no
+    // eviction cliff once the corpus outgrows storage memory.
+    val segments = spark.read.parquet(segBase)
       .select("docIntId", "len", "term", "tf") // drop partition col g
-    val segments =
-      if (cfg.cacheSegments)
-        segments0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else segments0
 
     // ---- stage 2a: docvecs — stored document term vectors (packed).
     // Runs BEFORE the docs table: the packed rows then feed the doc-length
@@ -528,7 +523,8 @@ object IndexBuilder {
         // In(term) pushdown prunes row groups even for scattered term sets
         // (the per-shuffle-task files the previous layout produced each
         // spanned the bucket's whole term range — measured as a 100%
-        // postings scan per batch, graft.tools.PostingsIo). The extra
+        // postings scan per batch, BASELINE.md "Round-6 postings
+        // point-lookup layout"). The extra
         // exchange moves only the encoded rows, a few % of the original
         // token volume; also satisfies the partition writer's ordering
         // requirement (no writer sort).
@@ -542,7 +538,6 @@ object IndexBuilder {
         (System.nanoTime() - s) / 1e9))
     }
 
-    if (cfg.cacheSegments) segments.unpersist(blocking = false)
     store.writeProperties(Map(
       "engine" -> "graft-bm25",
       "method" -> p.method, "k1" -> p.k1.toString, "b" -> p.b.toString,

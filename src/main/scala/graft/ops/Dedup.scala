@@ -262,23 +262,6 @@ object Dedup {
                          maxDist: Int = 3): DataFrame =
     simhashPairsFrom(simhashMd5(docs, tokens, idCol), maxDist)
 
-  /** Connected components over an undirected near-dup pair list
-    * (id_a, id_b) — the step that turns pairwise similarity output into
-    * dedup CLUSTERS. Iterative min-label propagation: each round every
-    * node takes the min of its own and its neighbors' labels (one
-    * partial+final `groupBy(min)` + one join per round — no windows, no
-    * single-task hot spots; a boilerplate hub with 10^6 neighbors is just
-    * a big aggregation group). Converges in O(component diameter) rounds;
-    * near-dup clusters are shallow (similarity is near-transitive), so
-    * the default cap is generous. Lineage is truncated per round —
-    * without it the plan doubles every iteration; set
-    * `spark.graft.ccCheckpointDir` for a fault-tolerant reliable
-    * checkpoint instead of the local-mode `localCheckpoint` default.
-    * Convergence is observed inside the label job (no extra probe job).
-    *
-    * @return (id, label) for every id appearing in `pairs`; label = min
-    *         id of the component.
-    */
   /** Max edge rows the CC fast path may collect to the driver for a local
     * union-find (~32 bytes/edge boxed → the default 2^20 bound caps the
     * collect at ~32 MB transient driver heap). 0 disables the fast path.
@@ -319,7 +302,36 @@ object Dedup {
     out.toSeq
   }
 
+  /** Connected components over an undirected near-dup pair list
+    * (id_a, id_b) — the step that turns pairwise similarity output into
+    * dedup CLUSTERS. Iterative min-label propagation: each round every
+    * node takes the min of its own and its neighbors' labels (one
+    * partial+final `groupBy(min)` + one join per round — no windows, no
+    * single-task hot spots; a boilerplate hub with 10^6 neighbors is just
+    * a big aggregation group). Converges in O(component diameter) rounds;
+    * near-dup clusters are shallow (similarity is near-transitive), so
+    * the default cap is generous. Lineage is truncated per round —
+    * without it the plan doubles every iteration; set
+    * `spark.graft.ccCheckpointDir` for a fault-tolerant reliable
+    * checkpoint instead of the local-mode `localCheckpoint` default.
+    * Convergence is observed inside the label job (no extra probe job).
+    *
+    * @return (id, label) for every id appearing in `pairs`; label = min
+    *         id of the component.
+    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    // `pairs` is read up to three times — the fast-path probe, then both
+    // directions of the distributed loop's edge union — so cache it once:
+    // the upstream pair join (usually a self-join over signatures) runs
+    // exactly once. A caller's own cache is left alone.
+    val ownCache = pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (ownCache)
+      pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try components(pairs, maxIter)
+    finally if (ownCache) pairs.unpersist(blocking = false)
+  }
+
+  private def components(pairs: DataFrame, maxIter: Int): DataFrame = {
     val spark = pairs.sparkSession
     // Fast path (r7): near-dup pair lists are usually a vanishing fraction
     // of the corpus — when the edge set fits a bounded driver collect

@@ -92,8 +92,7 @@ object MoreLikeThis {
     * bound AND the driver-side collect bound.
     */
   private def seedTermDf(index: BM25Index, docTf: DataFrame): DataFrame = {
-    val spark = index.spark
-    val lim = QueryEngine.maxInTerms(spark)
+    val lim = QueryEngine.MaxInListTerms
     val terms = docTf.select("term").distinct().limit(lim + 1).collect()
       .map(_.getString(0))
     if (terms.length <= lim)

@@ -121,8 +121,7 @@ object QueryEngine {
     * semi-join: a 100k-term In literal bloats plan size/planning time and
     * the row-group stats stop helping at that selectivity anyway.
     */
-  def maxInTerms(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.maxInTerms").map(_.toInt).getOrElse(8192)
+  private[query] val MaxInListTerms = 8192
 
   /** Candidate posting rows for the given term set, with bucket partition
     * pruning (terms hash to a known bucket subset) and term pushdown.
@@ -132,7 +131,7 @@ object QueryEngine {
       .map(t => graft.util.Hashing.bucketOfTerm(t, index.numBuckets)).distinct
     val byBucket = index.postings
       .where(col("bucket").isInCollection(buckets))
-    if (terms.size <= maxInTerms(index.spark))
+    if (terms.size <= MaxInListTerms)
       byBucket.where(col("term").isInCollection(terms))
     else {
       import index.spark.implicits._
@@ -347,12 +346,15 @@ object QueryEngine {
     spark.conf.getOption("spark.graft.taatMinBatchQueries")
       .map(_.toInt).getOrElse(128)
 
-  /** Tokenized query chunks for the WAND/TAAT path (driver-side arrays).
-    * Small batches: one collect (the common interactive/bench case).
-    * Large batches: stream partition-sized chunks through the driver —
-    * toLocalIterator runs a job per partition, so size partitions to the
-    * chunk target first; driver memory stays bounded by one chunk.
+  /** Salt-bucket cap S of the deep-k (TAAT) kernel fan-out. 4 won the
+    * sweeps at 480k docs × 1200 queries × k=1000 (BASELINE.md "Deep-k
+    * salt-bucket cap"): 4.6 s at S=4 vs 6.6 s at S=8 and 76 s at S=1,
+    * G=64 on the round-2 kernel; S ∈ {2,4,6} re-checked on round 3's
+    * direct-heap kernel, S=4 still best.
     */
+  private val DeepKSaltBuckets = 4
+
+  /** Tokenized queries grouped per query: (qid, ts[(term, qtf)]). */
   private def groupedQueryTerms(index: BM25Index, queries: DataFrame): DataFrame =
     queryTerms(index, queries)
       .groupBy("qid").agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
@@ -384,14 +386,6 @@ object QueryEngine {
     }
   }
 
-  /** WAND path: per-salt pruned scan (kernel chosen by depth). The common
-    * case (batch fits one chunk) is ONE optimistic limit-collect job that
-    * ships the RAW (qid, query) rows — tokenization/qtf for a bounded
-    * batch runs driver-side through the scalar twin of TokenizeExpr
-    * (behavior-identical, tested), so no per-call tokenize job or
-    * count() job exists; only over-chunk batches fall back to a counted
-    * distributed streaming pass.
-    */
   /** Filtered retrieval (searchWand): the allowed docIntId set rides into
     * the kernels as one broadcast sorted array; membership is checked at
     * heap/accum insertion, so WAND's threshold pruning stays exact (upper
@@ -413,6 +407,14 @@ object QueryEngine {
       }
     }
 
+  /** WAND path: per-salt pruned scan (kernel chosen by depth). The common
+    * case (batch fits one chunk) is ONE optimistic limit-collect job that
+    * ships the RAW (qid, query) rows — tokenization/qtf for a bounded
+    * batch runs driver-side through the scalar twin of TokenizeExpr
+    * (behavior-identical, tested), so no per-call tokenize job or
+    * count() job exists; only over-chunk batches fall back to a counted
+    * distributed streaming pass.
+    */
   def searchWand(index: BM25Index, queries: DataFrame, k: Int,
                  docFilter: Option[Column] = None): DataFrame = {
     val spark = index.spark
@@ -609,30 +611,20 @@ object QueryEngine {
     // rows replicate G× through the shuffle.
     // Each task's kernels insert into ONE heap per query covering every
     // salt the task holds, so shuffled emission is nQueries × S × k rows —
-    // bounded by the BUCKET count S, not numSalts. TAAT mode caps S
-    // (deepKSaltBuckets) and raises G to keep S×G ≈ 2·parallelism: a
+    // bounded by the BUCKET count S, not numSalts. TAAT mode caps S at
+    // DeepKSaltBuckets and raises G to keep S×G ≈ 2·parallelism: a
     // little replicated block decode buys 4× less emission + finish
     // traffic. At 10^12-doc scale the same cap keeps emission independent
     // of the million-salt index layout.
-    // `spark.graft.wandGroups` overrides G (perf experiments).
-    // default 4: swept {8,6,4,2,1} at 480k docs × 1200 queries × k=1000
-    // (r2 per-salt-heap kernel: 4.6s at S=4 vs 6.6s at S=8 and 76s at
-    // S=1/G=64; r3 direct-heap kernel re-checked S∈{2,4,6} — S=4 still
-    // best, batch min 2.7s)
-    val sCap = spark.conf.getOption("spark.graft.deepKSaltBuckets")
-      .map(_.toInt).getOrElse(4)
-    var G = spark.conf.getOption("spark.graft.wandGroups").map(_.toInt)
-      .getOrElse(math.max(1, math.min(qArr.length,
-        (P2 + index.numSalts - 1) / math.max(1, index.numSalts))))
+    var G = math.max(1, math.min(qArr.length,
+      (P2 + index.numSalts - 1) / math.max(1, index.numSalts)))
     var S = math.min(index.numSalts.toLong, math.max(1L, P2.toLong / G)).toInt
     if (useTaat) {
       // S CONSTANT in deep-k mode — emission per query (S × k rows) must
       // not grow with cluster size, or per-query merge work rises with
       // cores and caps throughput scaling; G alone carries parallelism
-      // (the wandGroups override stays respected for perf experiments)
-      S = math.min(index.numSalts, sCap)
-      G = spark.conf.getOption("spark.graft.wandGroups").map(_.toInt)
-        .getOrElse(math.max(1, math.min(qArr.length, P2 / S)))
+      S = math.min(index.numSalts, DeepKSaltBuckets)
+      G = math.max(1, math.min(qArr.length, P2 / S))
     }
     val nParts = S * G
 

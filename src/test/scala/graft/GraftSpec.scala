@@ -198,6 +198,24 @@ class GraftSpec extends SparkTestBase {
       s"pinned RDDs grew across runs: $after1 -> $after2 (facade cache leak)")
   }
 
+  test("README conf table lists exactly the spark.graft.* confs the code reads") {
+    import scala.jdk.CollectionConverters._
+    val confLiteral = "\"spark\\.graft\\.(\\w+)\"".r
+    val read = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala"))) {
+      _.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap(f => confLiteral.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+        .toSet
+    }
+    val table = Files.readString(Paths.get("README.md")).linesIterator
+      .dropWhile(!_.startsWith("## Tuning")).drop(1)
+      .takeWhile(!_.startsWith("## "))
+      .collect { case row if row.startsWith("| `") => row.split('`')(1) }
+      .toSet
+    assert(read.nonEmpty, "no spark.graft.* conf literals found under src/main/scala")
+    assert(table == read, s"README table lacks ${(read -- table).toSeq.sorted}; " +
+      s"lists confs no code reads: ${(table -- read).toSeq.sorted}")
+  }
+
   test("flattenRuns reproduces combine_results timing semantics") {
     // reference-shaped fixture: numba timing preferred over default,
     // tokenize_corpus folded into index time (combine_results.py:88-108)

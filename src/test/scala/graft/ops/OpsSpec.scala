@@ -165,6 +165,24 @@ class DedupSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.ccLocalMaxEdges")
   }
 
+  test("connectedComponents: over-bound fallback computes the pair input once") {
+    // the fast-path probe finds too many edges, then the distributed loop
+    // reads the same pairs for both directions of its edge union: each
+    // upstream pair row must still be produced exactly once
+    val produced = spark.sparkContext.longAccumulator("cc-pairs-produced")
+    val pairRow = udf { (id: Long) => produced.add(1); id }.asNondeterministic()
+    val edges = spark.range(0, 6, 1, 2)
+      .select(pairRow(col("id")).as("id_a"), (col("id") + 1).as("id_b"))
+    spark.conf.set("spark.graft.ccLocalMaxEdges", "2") // 6 edges > bound
+    try {
+      val got = Dedup.connectedComponents(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (0L to 6L).map(_ -> 0L).toMap)
+      assert(produced.value == 6L,
+        s"${produced.value} pair rows produced for 6 upstream rows")
+    } finally spark.conf.unset("spark.graft.ccLocalMaxEdges")
+  }
+
   test("connectedComponents: reliable checkpoint dir (cluster durability)") {
     import spark.implicits._
     val ckpt = tmpDir("graft-cc-ckpt")
@@ -246,10 +264,12 @@ class DedupSpec extends SparkTestBase {
     val recall = hi.count { case (_, i) => repLo.contains(i) }.toDouble / hi.size
     assert(recall >= 0.9, f"high-J recall $recall%.3f < 0.9")
     val errs = repLo.toSeq.map { case (i, est) => math.abs(est - exactLo(i)) }
+    assert(errs.nonEmpty, "fixture drifted: no reported pairs at rate 0.02")
     assert(errs.sum / errs.size <= 0.15,
       f"mean |est-exact| ${errs.sum / errs.size}%.3f > 0.15")
     val (exactHi, repHi) = run(0.4) // mean exact J ~0.11
     val lo = exactHi.zipWithIndex.filter(_._1 < 0.35)
+    assert(lo.nonEmpty, "fixture drifted: no low-J pairs at rate 0.4")
     val falseAlarm = lo.count { case (_, i) => repHi.contains(i) }.toDouble / lo.size
     assert(falseAlarm <= 0.05, f"low-J false-alarm rate $falseAlarm%.3f > 0.05")
   }

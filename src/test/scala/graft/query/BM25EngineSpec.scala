@@ -189,7 +189,7 @@ class BM25EngineSpec extends SparkTestBase {
 
   test("deep-k partial emission is bounded by salt-bucket cap, not numSalts") {
     // the scale contract: per query the pre-merge candidate rows are at
-    // most min(numSalts, deepKSaltBuckets) × k — independent of how many
+    // most min(numSalts, S = 4) × k — independent of how many
     // salts the index has (at 10^12-doc scale numSalts is ~10^6)
     val idx = new BM25Index(spark, indexDir)
     val kk = 7
