@@ -2,6 +2,7 @@ package graft.query
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,14 +34,19 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   val numSalts: Int = props.getOrElse("numSalts", "1").toInt
   val saltShift: Int = props.getOrElse("saltShift", "20").toInt
 
-  def postings: DataFrame = spark.read.parquet(s"$indexDir/postings")
+  /** Index tables are opened ONCE per handle: each `spark.read.parquet`
+    * re-lists the table and runs a schema job, so a `def` paid that job on
+    * every search call. Opening once also pins the handle's view to the
+    * files it listed first (a rebuild into the same dir needs a new handle).
+    */
+  lazy val postings: DataFrame = spark.read.parquet(s"$indexDir/postings")
 
   /** Per-term global stats (term, df, ctf) — the query-side term
     * dictionary. Full-vocabulary scans of this table are the FALLBACK
     * path; bounded term sets resolve df through the bucket-pruned
     * postings scan instead (QueryEngine.postingTermDf).
     */
-  def termstats: DataFrame = spark.read.parquet(s"$indexDir/termstats")
+  lazy val termstats: DataFrame = spark.read.parquet(s"$indexDir/termstats")
 
   /** Whether this index stores per-document term vectors (the Pyserini
     * `--storeDocvectors` analogue; IndexBuilder.Config.storeDocVectors).
@@ -58,9 +64,10 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
 
   /** Stored doc term vectors, salt-partitioned and docIntId-sorted within
     * files (see [[docvecsFormat]] for the row layout) — fetch through
-    * Rm3.feedbackVectors so partition + row-group pruning apply.
+    * Rm3.feedbackVectors so partition + row-group pruning apply. The
+    * `require` runs on first use (a failed lazy val init is retried).
     */
-  def docvecs: DataFrame = {
+  lazy val docvecs: DataFrame = {
     require(hasDocVectors,
       s"index at $indexDir was built without doc vectors " +
         "(IndexBuilder.Config.storeDocVectors = false)")
@@ -222,11 +229,8 @@ object QueryEngine {
                             qids: Array[String]): DataFrame = {
     val spark = index.spark
     val nHitsUpperBound = qids.length.toLong * k
-    val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
     val qidOf = element_at(typedLit(qids.toSeq), col("qidx") + 1)
-    val hits = partials
-      .groupBy("qidx")
-      .agg(topk(col("docIntId"), col("score")).as("hits"))
+    val hits = topHitsIdx(partials, k)
       .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(qidOf.as("qid"), col("hit.docId").as("docIntId"),
         col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
@@ -236,6 +240,31 @@ object QueryEngine {
       else
         index.docs.join(hits.hint("shuffle_hash"), "docIntId")
     joined.select(col("qid"), col("docId"), col("score"), col("rank"))
+  }
+
+  /** Grouped bounded-heap top-k over int-indexed partials: one
+    * (qidx, hits[(docId, score)]) row per query, hits in rank order.
+    */
+  private def topHitsIdx(partials: DataFrame, k: Int): DataFrame = {
+    val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
+    partials.groupBy("qidx").agg(topk(col("docIntId"), col("score")).as("hits"))
+  }
+
+  /** One chunk's top-k hits collected to the driver BEFORE the docs join:
+    * (docIntId, score) in rank order, indexed by the query's position in
+    * `qArr` — ≤ nQ × k rows, no docId round trip. Destroys the chunk's
+    * query broadcast (the collect has run).
+    */
+  private[query] def collectTopHits(index: BM25Index,
+      qArr: Array[(String, Array[(String, Double)])], k: Int,
+      allowedBc: Option[Broadcast[Array[Long]]]): Array[Array[(Long, Double)]] = {
+    val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
+    val out = Array.fill(qArr.length)(Array.empty[(Long, Double)])
+    try topHitsIdx(partials, k).collect().foreach { r =>
+      out(r.getInt(0)) =
+        r.getSeq[Row](1).map(h => (h.getLong(0), h.getDouble(1))).toArray
+    } finally bq.destroy()
+    out
   }
 
   /** Exact path: join + aggregate over decoded blocks.
@@ -256,7 +285,7 @@ object QueryEngine {
     * the broadcast bound, so re-running the bounded limit-collect here
     * would repeat a multi-million-row driver job just to rediscover None.
     */
-  private def searchExactImpl(index: BM25Index, queries: DataFrame, k: Int,
+  private[query] def searchExactImpl(index: BM25Index, queries: DataFrame, k: Int,
                               docFilter: Option[Column],
                               tryBroadcastFilter: Boolean): DataFrame =
     searchExactTerms(index, queryTerms(index, queries), k, docFilter,
@@ -266,7 +295,7 @@ object QueryEngine {
     * declarative twin shared by the text entry point and the weighted
     * path's over-bound filter fallback.
     */
-  private def searchExactTerms(index: BM25Index, qt: DataFrame, k: Int,
+  private[query] def searchExactTerms(index: BM25Index, qt: DataFrame, k: Int,
                                docFilter: Option[Column],
                                tryBroadcastFilter: Boolean): DataFrame = {
     if (index.numDocs == 0) return emptyResult(index.spark)
@@ -355,7 +384,7 @@ object QueryEngine {
   private val DeepKSaltBuckets = 4
 
   /** Tokenized queries grouped per query: (qid, ts[(term, qtf)]). */
-  private def groupedQueryTerms(index: BM25Index, queries: DataFrame): DataFrame =
+  private[query] def groupedQueryTerms(index: BM25Index, queries: DataFrame): DataFrame =
     queryTerms(index, queries)
       .groupBy("qid").agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
 
@@ -370,14 +399,15 @@ object QueryEngine {
     */
   private[graft] def queryChunks(index: BM25Index, queries: DataFrame,
                                  nQueries: Long): Iterator[Array[(String, Array[(String, Double)])]] =
-    groupedChunks(index, groupedQueryTerms(index, queries), nQueries)
+    groupedChunks(groupedQueryTerms(index, queries), nQueries,
+      wandQueryChunkRows(index.spark))
 
   /** As queryChunks, over an already-grouped (qid, ts[(term, weight)])
-    * frame — shared by the tokenizing and the weighted-query paths.
+    * frame of `nQueries` rows, `chunkRows` queries per chunk — shared by the
+    * tokenizing, weighted-query and RM3 paths.
     */
-  private def groupedChunks(index: BM25Index, grouped: DataFrame,
-                            nQueries: Long): Iterator[Array[(String, Array[(String, Double)])]] = {
-    val chunkRows = wandQueryChunkRows(index.spark)
+  private def groupedChunks(grouped: DataFrame, nQueries: Long,
+                            chunkRows: Int): Iterator[Array[(String, Array[(String, Double)])]] = {
     if (nQueries <= chunkRows) Iterator(grouped.collect().map(decodeGrouped))
     else {
       val nParts = math.max(1, ((nQueries + chunkRows - 1) / chunkRows).toInt)
@@ -395,9 +425,9 @@ object QueryEngine {
     * semi-join path (exact and distributed at any selectivity) — with the
     * broadcast retry suppressed, since this call just proved it over-bound.
     */
-  private def resolveDocFilter(index: BM25Index, docFilter: Option[Column],
-                               overBoundFallback: => DataFrame)
-      : Either[DataFrame, Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]] =
+  private[query] def resolveDocFilter(index: BM25Index, docFilter: Option[Column],
+                                      overBoundFallback: => DataFrame)
+      : Either[DataFrame, Option[Broadcast[Array[Long]]]] =
     docFilter match {
       case None => Right(None)
       case Some(f) => collectAllowed(index, f) match {
@@ -427,42 +457,69 @@ object QueryEngine {
     // (a broadcast minted before these returns would leak undestroyed)
     val chunkRows = wandQueryChunkRows(spark)
     val head = queries.select(col("qid"), col("query")).limit(chunkRows + 1).collect()
-    if (head.isEmpty) return emptyResult(spark)
+    def exactFallback =
+      searchExactImpl(index, queries, k, docFilter, tryBroadcastFilter = false)
     if (head.length <= chunkRows) {
-      // duplicate qid rows merge their token multisets (parity with the
-      // distributed groupBy(qid, term) path)
-      val qArr: Array[(String, Array[(String, Double)])] = head
-        .map(r => (r.getString(0), Option(r.getString(1)).getOrElse("")))
-        .groupBy(_._1).iterator
-        .map { case (qid, rows) =>
-          val counts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-          rows.foreach { case (_, text) =>
-            Tokenizer.tokenizeScalar(text, index.tokenPattern, index.stem)
-              .foreach(t => counts.update(t, counts.getOrElse(t, 0.0) + 1.0))
-          }
-          (qid, counts.toArray)
-        }
-        .filter(_._2.nonEmpty) // all-stopword/empty queries produce no rows
-        .toArray
+      val qArr = tokenizeRows(index, head)
       if (qArr.isEmpty) return emptyResult(spark)
-      val allowedBc = resolveDocFilter(index, docFilter,
-        searchExactImpl(index, queries, k, docFilter, tryBroadcastFilter = false)) match {
-        case Left(terminal) => return terminal
-        case Right(bc) => bc
-      }
-      val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
-      val finished = finishTopKIdx(index, partials, k, qArr.map(_._1))
-      return allowedBc match {
-        case Some(bc) => finishEagerDestroy(index, finished, Seq(bc, bq))
-        case None => finished
-      }
+      return resolveDocFilter(index, docFilter, exactFallback)
+        .fold(identity, searchTokenized(index, qArr, k, _))
     }
-    val allowedBc = resolveDocFilter(index, docFilter,
-      searchExactImpl(index, queries, k, docFilter, tryBroadcastFilter = false)) match {
-      case Left(terminal) => return terminal
-      case Right(bc) => bc
+    resolveDocFilter(index, docFilter, exactFallback).fold(identity,
+      searchGroupedChunked(index, groupedQueryTerms(index, queries), k, _))
+  }
+
+  /** Driver-side tokenization of a bounded (qid, query) batch through the
+    * scalar twin of TokenizeExpr (behavior-identical, tested): duplicate
+    * qid rows merge their token multisets (parity with the distributed
+    * groupBy(qid, term) path), and all-stopword/empty queries are dropped.
+    */
+  private[query] def tokenizeRows(index: BM25Index,
+      rows: Array[Row]): Array[(String, Array[(String, Double)])] =
+    rows.map(r => (r.getString(0), Option(r.getString(1)).getOrElse("")))
+      .groupBy(_._1).iterator
+      .map { case (qid, rs) =>
+        val counts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+        rs.foreach { case (_, text) =>
+          Tokenizer.tokenizeScalar(text, index.tokenPattern, index.stem)
+            .foreach(t => counts.update(t, counts.getOrElse(t, 0.0) + 1.0))
+        }
+        (qid, counts.toArray)
+      }
+      .filter(_._2.nonEmpty)
+      .toArray
+
+  /** Small-batch WAND/TAAT search over driver-held tokenized queries
+    * (qid, [(term, weight)]) with the doc filter already resolved — the
+    * body searchWand, searchWandWeighted and Rm3 share. Queries without
+    * terms produce no rows. An unfiltered result stays lazy; a filtered
+    * one is materialized so both broadcasts (allowed set + query array)
+    * are destroyed here.
+    */
+  private[graft] def searchTokenized(index: BM25Index,
+      qArr: Array[(String, Array[(String, Double)])], k: Int,
+      allowedBc: Option[Broadcast[Array[Long]]]): DataFrame = {
+    val live = qArr.filter(_._2.nonEmpty)
+    if (live.isEmpty) {
+      allowedBc.foreach(_.destroy())
+      return emptyResult(index.spark)
     }
-    searchGroupedChunked(index, groupedQueryTerms(index, queries), k, allowedBc)
+    val (finished, bq) = finishChunk(index, live, k, allowedBc)
+    allowedBc match {
+      case Some(bc) => finishEagerDestroy(index, finished, Seq(bc, bq))
+      case None => finished
+    }
+  }
+
+  /** One chunk's lazy finished top-k plus its query-array broadcast, which
+    * the caller destroys once the result is materialized.
+    */
+  private[query] def finishChunk(index: BM25Index,
+      qArr: Array[(String, Array[(String, Double)])], k: Int,
+      allowedBc: Option[Broadcast[Array[Long]]])
+      : (DataFrame, Broadcast[Array[(String, Array[(String, Double)])]]) = {
+    val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
+    (finishTopKIdx(index, partials, k, qArr.map(_._1)), bq)
   }
 
   /** Eagerly materialize a small-batch finish into the chunk spill dir and
@@ -486,35 +543,50 @@ object QueryEngine {
   }
 
   /** Large batch: count once, then stream partition-sized chunks through
-    * the driver. Chunks partition the QUERY set, so each chunk's results
-    * are final on their own: every chunk runs kernel + finish as its OWN
-    * job whose finished (≤ nChunkQueries × k) rows land in a temp
-    * parquet, and the chunk's query-array broadcast is destroyed before
-    * the next chunk is collected. A lazy union of chunk DataFrames would
-    * instead keep EVERY chunk's driver array + executor broadcast
-    * resident for the whole job; this way driver and executor memory
-    * really are bounded by one chunk. Temp files are removed at JVM exit
-    * (the result DataFrame reads them lazily until then).
+    * the driver (see [[spillChunks]]).
     */
   private def searchGroupedChunked(index: BM25Index, grouped: DataFrame, k: Int,
-      allowedBc: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): DataFrame = {
+      allowedBc: Option[Broadcast[Array[Long]]]): DataFrame =
+    spillChunks(index,
+      streamChunks(grouped, wandQueryChunkRows(index.spark)), allowedBc)(
+      qArr => Some(finishChunk(index, qArr, k, allowedBc)))
+
+  /** Counts `grouped` once, then streams its non-empty query chunks of at
+    * most `chunkRows` queries.
+    */
+  private[query] def streamChunks(grouped: DataFrame, chunkRows: Int)
+      : Iterator[Array[(String, Array[(String, Double)])]] =
+    groupedChunks(grouped, grouped.count(), chunkRows)
+      .map(_.filter(_._2.nonEmpty)).filter(_.nonEmpty)
+
+  /** Over-chunk batches. Chunks partition the QUERY set, so each chunk's
+    * results are final on their own: every chunk runs `run` (kernel +
+    * finish, lazily; None = no rows) as its OWN job whose finished
+    * (≤ nChunkQueries × k) rows land in a temp parquet, and the chunk's
+    * query-array broadcast is destroyed before the next chunk is
+    * collected. A lazy union of chunk DataFrames would instead keep EVERY
+    * chunk's driver array + executor broadcast resident for the whole
+    * job; this way driver and executor memory really are bounded by one
+    * chunk. The allowed-set broadcast is destroyed once every chunk has
+    * run. Temp files are removed at JVM exit (the result DataFrame reads
+    * them lazily until then).
+    */
+  private[query] def spillChunks[C](index: BM25Index, chunks: Iterator[C],
+      allowedBc: Option[Broadcast[Array[Long]]])(
+      run: C => Option[(DataFrame, Broadcast[_])]): DataFrame = {
     val spark = index.spark
-    val nQueries = grouped.count()
     val tmp = s"${chunkSpillRoot(index)}/${java.util.UUID.randomUUID()}"
     graft.util.TempFs.registerForCleanup(spark, tmp) // removed at JVM exit
     val chunkDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    groupedChunks(index, grouped, nQueries).map(_.filter(_._2.nonEmpty))
-      .filter(_.nonEmpty).foreach { qArr =>
-      val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
-      val dir = s"$tmp/chunk-${chunkDirs.size}"
-      finishTopKIdx(index, partials, k, qArr.map(_._1)).write.parquet(dir)
-      bq.destroy()
-      chunkDirs += dir
-    }
-    // every chunk's job has run; the allowed-set broadcast is done with
-    allowedBc.foreach(_.destroy())
-    if (chunkDirs.isEmpty) return emptyResult(spark)
-    spark.read.parquet(chunkDirs.toSeq: _*)
+    try chunks.foreach { c =>
+      run(c).foreach { case (finished, bq) =>
+        val dir = s"$tmp/chunk-${chunkDirs.size}"
+        try finished.write.parquet(dir) finally bq.destroy()
+        chunkDirs += dir
+      }
+    } finally allowedBc.foreach(_.destroy())
+    if (chunkDirs.isEmpty) emptyResult(spark)
+    else spark.read.parquet(chunkDirs.toSeq: _*)
   }
 
   /** Weighted-term batch retrieval: `weighted` rows (qid, term, qtf) stand
@@ -543,34 +615,23 @@ object QueryEngine {
       .agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
     val chunkRows = wandQueryChunkRows(spark)
     val head = grouped.limit(chunkRows + 1).collect()
-    if (head.isEmpty) return emptyResult(spark)
     // over-bound filters score through the SAME weighted terms declaratively
     def exactFallback =
       searchExactTerms(index, wt, k, docFilter, tryBroadcastFilter = false)
     if (head.length <= chunkRows) {
       val qArr = head.map(decodeGrouped).filter(_._2.nonEmpty)
       if (qArr.isEmpty) return emptyResult(spark)
-      val allowedBc = resolveDocFilter(index, docFilter, exactFallback) match {
-        case Left(terminal) => return terminal
-        case Right(bc) => bc
-      }
-      val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
-      val finished = finishTopKIdx(index, partials, k, qArr.map(_._1))
-      return allowedBc match {
-        case Some(bc) => finishEagerDestroy(index, finished, Seq(bc, bq))
-        case None => finished
-      }
+      return resolveDocFilter(index, docFilter, exactFallback)
+        .fold(identity, searchTokenized(index, qArr, k, _))
     }
-    val allowedBc = resolveDocFilter(index, docFilter, exactFallback) match {
-      case Left(terminal) => return terminal
-      case Right(bc) => bc
-    }
-    // over-chunk: the probe above already paid one full aggregation of
-    // `grouped`; persist so the count and chunk stream inside reuse it
-    // (the chunk jobs all run eagerly in there, so the unpersist is safe)
-    grouped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try searchGroupedChunked(index, grouped, k, allowedBc)
-    finally grouped.unpersist()
+    resolveDocFilter(index, docFilter, exactFallback).fold(identity, { allowedBc =>
+      // over-chunk: the probe above already paid one full aggregation of
+      // `grouped`; persist so the count and chunk stream inside reuse it
+      // (the chunk jobs all run eagerly in there, so the unpersist is safe)
+      grouped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try searchGroupedChunked(index, grouped, k, allowedBc)
+      finally grouped.unpersist()
+    })
   }
 
   /** One chunk's WAND partial candidates: (qid, docIntId, score), ≤ k per
@@ -589,8 +650,8 @@ object QueryEngine {
   private def wandPartialsWithHandle(index: BM25Index,
                            qArr: Array[(String, Array[(String, Double)])],
                            k: Int,
-                           allowedBc: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]]): (DataFrame,
-                             org.apache.spark.broadcast.Broadcast[Array[(String, Array[(String, Double)])]]) = {
+                           allowedBc: Option[Broadcast[Array[Long]]]): (DataFrame,
+                             Broadcast[Array[(String, Array[(String, Double)])]]) = {
     val spark = index.spark
     // DAAT correctness precondition (see searchWandWeighted scaladoc);
     // O(batch terms) on the driver, negligible next to the kernel job
@@ -750,7 +811,7 @@ object QueryEngine {
     index.spark.conf.getOption("spark.graft.chunkSpillDir")
       .getOrElse(s"${index.indexDir}/_tmp-query")
 
-  private def emptyResult(spark: SparkSession): DataFrame = {
+  private[query] def emptyResult(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
       StructField("qid", StringType), StructField("docId", StringType),

@@ -1,8 +1,10 @@
 package graft.query
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.tokenize.Tokenizer
 
@@ -20,13 +22,20 @@ import graft.tokenize.Tokenizer
   * weight(w) = α·P(w|q) + (1−α)·rm1(w). The expanded weighted query runs a
   * second retrieval pass scoring Σ_w weight(w) · impact(w, d).
   *
-  * Scale shape: the relevance model touches only nQueries × fbDocs
-  * feedback documents, fetched from the index's STORED doc vectors with
-  * salt-partition + docIntId row-group pruning (the Lucene
-  * `--storeDocvectors` design, benchmark/on_pyserini.py:245-253), the
-  * expansion tables are ≤ nQueries × (|q| + fbTerms) rows, and both
-  * retrieval passes run the ordinary engine kernels. No stage grows with
-  * corpus size beyond the retrieval passes themselves.
+  * Scale shape: [[searchIndexed]] runs the middle of RM3 on the driver,
+  * one query chunk at a time — the shape of Anserini's in-process RM3
+  * reranker. A chunk's pass-1 top-fbDocs hits (≤ chunk × fbDocs rows) are
+  * collected before any docId resolution, the STORED doc vectors of those
+  * docs come back in one salt-partition + docIntId-pruned scan (the
+  * Lucene `--storeDocvectors` design, benchmark/on_pyserini.py:245-253),
+  * the relevance model is plain Scala ([[expandScalar]], the scalar twin
+  * of [[expandWeights]]), and pass 2 runs the weighted query arrays
+  * through the ordinary engine kernels. Driver memory is bounded by the
+  * chunk (see [[chunkQueries]]); no stage grows with corpus size beyond
+  * the retrieval passes themselves. [[expandWeights]] and
+  * [[feedbackVectors]] stay the declarative twin: the composed driver
+  * entries, [[searchIndexedRetokenize]] and the over-bound fallbacks of
+  * [[searchIndexed]] run the relevance model as a Spark plan.
   */
 object Rm3 {
 
@@ -93,22 +102,37 @@ object Rm3 {
     rounded.where(col("qtf") =!= 0.0)
   }
 
-  /** Max feedback-doc rows collected to the driver to drive docvec
-    * partition/row-group pruning; beyond it the fetch degrades to a
-    * distributed semi-join (exact, no pruning). nQueries × fbDocs stays
-    * far below this for any sane batch (a 10k-query batch at fbDocs=10 is
-    * 100k rows).
-    *
-    * Driver-heap sizing rule: each collected row is a boxed (long, int)
-    * Row, ~48-64 bytes on-heap — the default 2^18 bound caps the collect
-    * at ~16 MB of transient driver heap. Raise
-    * `spark.graft.rm3MaxPrunedFeedbackDocs` only with driver memory to
-    * match (~64 bytes/row); the over-bound fallback stays exact, it just
-    * loses row-group pruning.
+  /** Max feedback docs collected to the driver. In [[feedbackVectors]]
+    * they are the docIntIds that drive docvec partition/row-group pruning;
+    * beyond it that fetch degrades to a distributed semi-join (exact, no
+    * pruning). Each is a one-long Row, ~48 bytes on-heap — the default
+    * 2^18 bound caps that collect at ~12 MB of transient driver heap. In
+    * [[searchIndexed]] the same bound caps the feedback VECTORS one driver
+    * chunk holds (see [[chunkQueries]] for their sizing rule). Raise it
+    * only with driver memory to match; every over-bound route stays exact.
     */
   def maxPrunedFeedbackDocs(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption("spark.graft.rm3MaxPrunedFeedbackDocs")
       .map(_.toInt).getOrElse(1 << 18)
+
+  /** Queries per [[searchIndexed]] driver chunk: ⌊maxPrunedFeedbackDocs /
+    * fbDocs⌋, capped at `QueryEngine.wandQueryChunkRows` — so one chunk
+    * holds at most `maxPrunedFeedbackDocs` feedback vectors on the driver.
+    * 0 when a single query's feedback set already exceeds that bound;
+    * searchIndexed then runs the declarative plan instead.
+    *
+    * Driver-heap sizing rule: a collected vector of T distinct terms costs
+    * ~(100 + 64·T) bytes (a String per term, a primitive long[] of tfs,
+    * row overhead), held only while its chunk expands. 100 queries at
+    * fbDocs = 10 are ≤ 1,000 vectors, ~7 MB at T = 100. At the defaults a
+    * chunk holds ≤ min(20,000 × fbDocs, 2^18) vectors: ~1.3 GB at
+    * fbDocs = 10 and T = 100. Lower `spark.graft.rm3MaxPrunedFeedbackDocs`
+    * to shrink the chunk on a small driver — results do not change.
+    */
+  private[query] def chunkQueries(spark: org.apache.spark.sql.SparkSession,
+                                  fbDocs: Int): Int =
+    math.min(QueryEngine.wandQueryChunkRows(spark),
+      maxPrunedFeedbackDocs(spark) / fbDocs)
 
   /** Max feedback-doc ids carried as a literal In/InSet filter into the
     * docvecs scan (row-group pruning); larger sets use a broadcast
@@ -128,8 +152,8 @@ object Rm3 {
     *         corpus docId string, ready for [[expandWeights]].
     *
     * Scale shape: the doc set resolves against the cached docs dimension,
-    * its (docIntId, salt) pairs are collected (bounded — see
-    * `maxPrunedFeedbackDocs`), and the docvecs scan is pruned to the
+    * its docIntIds are collected (bounded — see `maxPrunedFeedbackDocs`),
+    * and the docvecs scan is pruned to the
     * matching salt PARTITIONS with a docIntId In-filter pushed to the
     * row-group stats (files are docIntId-sorted). No stage scans the
     * corpus or the full token table; at In-literal-unfriendly sizes the id
@@ -146,32 +170,16 @@ object Rm3 {
     }
     val dim = index.docs
       .join(broadcast(fbDocIds.select("docId").distinct()), Seq("docId"))
-      .select(col("docId"), col("docIntId"), col("salt"), col("len"))
+      .select(col("docId"), col("docIntId"), col("len"))
     val dl = dim.select(col("docId"), col("len").as("dl"))
     val bound = maxPrunedFeedbackDocs(spark)
     val lim = math.min(bound.toLong + 1L, Int.MaxValue.toLong).toInt
-    val rows = dim.select(col("docIntId"), col("salt")).limit(lim).collect()
+    val rows = dim.select(col("docIntId")).limit(lim).collect()
     val pruned =
       if (rows.length > bound) // over-bound: exact distributed fallback
         index.docvecs.join(dim.select("docIntId").hint("shuffle_hash"),
           Seq("docIntId"), "left_semi")
-      else {
-        val ids = rows.map(_.getLong(0))
-        val salts = rows.map(_.getInt(1)).distinct.toSeq
-        val bySalt = index.docvecs.where(col("salt").isInCollection(salts))
-        // long-id In/InSet filters stay cheap far beyond the string-term
-        // In bound, and reaching the scan matters: the id filter prunes
-        // row groups of the docIntId-sorted files (measured ~2% of
-        // records read), while the semi-join fallback scans every
-        // surviving salt partition in full
-        if (ids.length <= maxInIds(spark))
-          bySalt.where(col("docIntId").isInCollection(ids.toSeq))
-        else {
-          import spark.implicits._
-          bySalt.join(broadcast(ids.toSeq.toDF("docIntId")),
-            Seq("docIntId"), "left_semi")
-        }
-      }
+      else prunedDocvecs(index, rows.map(_.getLong(0)))
     // unpack AFTER pruning: the packed layout (one row per doc — terms[],
     // tfs[]) keeps partition + row-group pruning on ~numDocs rows, and only
     // the ≤ nQueries × fbDocs surviving vectors explode back to (term, tf)
@@ -191,34 +199,202 @@ object Rm3 {
     (docTf, dl)
   }
 
-  /** BM25+RM3 over a built index: pass 1 via [[QueryEngine.searchWand]],
-    * relevance model from the index's STORED doc vectors (a pruned fetch of
-    * the ≤ nQueries × fbDocs feedback vectors — see [[feedbackVectors]]; no
-    * corpus scan, no re-tokenization), pass 2 via
-    * [[QueryEngine.searchWandWeighted]]. The feedback persist is released
-    * before returning (the weighted pass materializes eagerly). Requires an
-    * index built with `storeDocVectors` (the default); for legacy indexes
-    * without doc vectors use [[searchIndexedRetokenize]].
+  /** docvecs rows of a bounded set of distinct docIntIds: salt-partition
+    * pruning (salt = docIntId >>> saltShift), plus the ids as a literal
+    * In/InSet filter. Long-id In filters stay cheap far beyond the
+    * string-term In bound, and reaching the scan matters: the id filter
+    * prunes row groups of the docIntId-sorted files (measured ~2% of
+    * records read). Above `maxInIds` the ids become a broadcast semi-join,
+    * which scans every surviving salt partition in full.
+    */
+  private def prunedDocvecs(index: BM25Index, ids: Array[Long]): DataFrame = {
+    val spark = index.spark
+    val salts = ids.map(id => (id >>> index.saltShift).toInt).distinct.toSeq
+    val bySalt = index.docvecs.where(col("salt").isInCollection(salts))
+    if (ids.length <= maxInIds(spark))
+      bySalt.where(col("docIntId").isInCollection(ids.toSeq))
+    else {
+      import spark.implicits._
+      bySalt.join(broadcast(ids.toSeq.toDF("docIntId")),
+        Seq("docIntId"), "left_semi")
+    }
+  }
+
+  /** Stored vectors of distinct docIntIds collected to the driver by ONE
+    * pruned docvecs scan: docIntId → (terms, tfs). A doc split across
+    * input splits at build time arrives as two partial packed rows, which
+    * concatenate here (each (doc, term) pair exists once), so Σtfs is the
+    * doc's full length — the docs table's `len` by construction (the docs
+    * stage reads it from the packed rows). Legacy "rows"-format tables
+    * group their (docIntId, term, tf) rows the same way.
+    */
+  private[query] def fetchVectors(index: BM25Index, ids: Array[Long])
+      : Map[Long, (Array[String], Array[Long])] = {
+    if (ids.isEmpty) return Map.empty
+    val spark = index.spark
+    import spark.implicits._
+    val pruned = prunedDocvecs(index, ids)
+    val parts: Array[(Long, Array[String], Array[Long])] =
+      if (index.docvecsFormat == "packed")
+        pruned.select(col("docIntId"), col("terms"), col("tfs"))
+          .as[(Long, Array[String], Array[Long])].collect()
+      else
+        pruned.select(col("docIntId"), col("term"), col("tf").cast("long"))
+          .as[(Long, String, Long)].collect()
+          .map { case (d, t, tf) => (d, Array(t), Array(tf)) }
+    parts.groupBy(_._1).map { case (d, ps) =>
+      d -> (ps.flatMap(_._2), ps.flatMap(_._3))
+    }
+  }
+
+  /** Scalar twin of [[expandWeights]] for ONE query over driver-held
+    * inputs, with the same math and association: feedback hits with
+    * score ≤ 0 carry no mass, rm1(w) = Σ_d (P(w|d)·score(d))/ssum with
+    * P(w|d) = tf/Σtf, the (rm1 desc, term asc) cut to `fbTerms`, then
+    * α·P(w|q) + (1−α)·rm1(w) over the union with the query model and
+    * zero weights dropped. Only the summation order of rm1 and ssum can
+    * differ from the Spark plan's (≤ 1e-12 relative).
+    *
+    * @param qtf     the query's term counts, one entry per term
+    * @param fb      its feedback hits (docIntId, score)
+    * @param vectors docIntId → (terms, tfs), as [[fetchVectors]] returns
+    * @return (term, weight) sorted by term
+    */
+  private[query] def expandScalar(qtf: Array[(String, Double)],
+                                  fb: Array[(Long, Double)],
+                                  vectors: Map[Long, (Array[String], Array[Long])],
+                                  fbTerms: Int, alpha: Double): Array[(String, Double)] = {
+    val pos = fb.filter(_._2 > 0.0)
+    val ssum = pos.map(_._2).sum
+    val rm1 = scala.collection.mutable.HashMap.empty[String, Double]
+    for ((d, score) <- pos; (terms, tfs) <- vectors.get(d)) {
+      val dl = tfs.sum.toDouble
+      var i = 0
+      while (i < terms.length) {
+        val pwd = tfs(i).toDouble / dl
+        rm1.update(terms(i), rm1.getOrElse(terms(i), 0.0) + pwd * score / ssum)
+        i += 1
+      }
+    }
+    // term ties break in Spark's string order: UTF-8 bytes, not UTF-16
+    val fbt = rm1.toArray.sortWith { case ((t1, r1), (t2, r2)) =>
+      r1 > r2 || (r1 == r2 && UTF8String.fromString(t1)
+        .compareTo(UTF8String.fromString(t2)) < 0)
+    }.take(fbTerms).toMap
+    val qsum = qtf.map(_._2).sum
+    val qm = qtf.map { case (t, c) => t -> c / qsum }.toMap
+    (qm.keySet ++ fbt.keySet).toArray.sorted
+      .map(t => t -> (alpha * qm.getOrElse(t, 0.0) + (1.0 - alpha) * fbt.getOrElse(t, 0.0)))
+      .filter(_._2 != 0.0)
+  }
+
+  /** Pass 1, fetch and expansion for one driver-held query chunk: the
+    * RM3-weighted query arrays, ready for pass 2. Pass 1 is collected
+    * eagerly; only positively-scored feedback docs are fetched.
+    */
+  private def expandChunk(index: BM25Index,
+      qArr: Array[(String, Array[(String, Double)])],
+      fbDocs: Int, fbTerms: Int, alpha: Double,
+      allowedBc: Option[Broadcast[Array[Long]]]): Array[(String, Array[(String, Double)])] = {
+    val hits = QueryEngine.collectTopHits(index, qArr, fbDocs, allowedBc)
+    val vectors = fetchVectors(index,
+      hits.flatMap(_.collect { case (d, s) if s > 0.0 => d }).distinct)
+    qArr.indices.map { i =>
+      (qArr(i)._1, expandScalar(qArr(i)._2, hits(i), vectors, fbTerms, alpha))
+    }.toArray
+  }
+
+  /** BM25+RM3 over a built index with the relevance model read from the
+    * index's STORED doc vectors (no corpus scan, no re-tokenization).
+    * Requires an index built with `storeDocVectors` (the default); for
+    * legacy indexes without doc vectors use [[searchIndexedRetokenize]].
+    *
+    * Per query chunk of [[chunkQueries]] queries (one chunk for any
+    * interactive batch): pass 1 runs the WAND/TAAT kernels at depth
+    * `fbDocs` and collects the hits before the docs join, one pruned
+    * docvecs scan collects their vectors ([[fetchVectors]]), the
+    * expansion runs on the driver ([[expandScalar]]), and pass 2 runs the
+    * weighted arrays through the same kernels and finish as
+    * [[QueryEngine.searchWandWeighted]]. Over-chunk batches stream their
+    * chunks and spill each chunk's finished rows like the over-chunk
+    * WAND path.
     *
     * `docFilter` applies to BOTH passes (Lucene filter+feedback semantics:
     * the relevance model is estimated from allowed docs only, and the
-    * expanded query ranks within the allowed set).
+    * expanded query ranks within the allowed set). It is resolved once and
+    * its allowed-set broadcast shared by both passes. A filter over
+    * `filterMaxBroadcastDocs`, or fbDocs over `rm3MaxPrunedFeedbackDocs`,
+    * runs the declarative plan instead (pass 1 → [[feedbackVectors]] →
+    * [[expandWeights]] → weighted pass 2), with identical results.
     */
   def searchIndexed(index: BM25Index, queries: DataFrame,
                     k: Int, fbDocs: Int = 10, fbTerms: Int = 10,
                     alpha: Double = 0.5,
                     docFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(fbDocs > 0, "fbDocs must be positive")
-    val fb = QueryEngine.searchWand(index, queries, fbDocs, docFilter)
-      .select(col("qid"), col("docId"), col("score"))
+    require(fbTerms > 0, "fbTerms must be positive")
+    require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1]: $alpha")
+    val spark = index.spark
+    if (index.numDocs == 0) return QueryEngine.emptyResult(spark)
+    // checked up front: the driver route touches docvecs only for batches
+    // with positively-scored feedback
+    require(index.hasDocVectors, s"index at ${index.indexDir} was built " +
+      "without doc vectors; use searchIndexedRetokenize")
+    val chunk = chunkQueries(spark, fbDocs)
+    if (chunk == 0) return searchIndexedPlan(index, queries, k, fbDocs, fbTerms,
+      alpha, docFilter, filterOverBound = false)
+    def overBound = searchIndexedPlan(index, queries, k, fbDocs, fbTerms,
+      alpha, docFilter, filterOverBound = true)
+    // as in searchWand: the doc filter is resolved only after the batch
+    // probe, so an empty or all-stopword batch pays no filter job
+    val head = queries.select(col("qid"), col("query")).limit(chunk + 1).collect()
+    if (head.length <= chunk) {
+      val qArr = QueryEngine.tokenizeRows(index, head)
+      if (qArr.isEmpty) return QueryEngine.emptyResult(spark)
+      return QueryEngine.resolveDocFilter(index, docFilter, overBound)
+        .fold(identity, { allowedBc =>
+          val weighted = expandChunk(index, qArr, fbDocs, fbTerms, alpha, allowedBc)
+          QueryEngine.searchTokenized(index, weighted, k, allowedBc)
+        })
+    }
+    QueryEngine.resolveDocFilter(index, docFilter, overBound)
+      .fold(identity, { allowedBc =>
+        val chunks = QueryEngine.streamChunks(
+          QueryEngine.groupedQueryTerms(index, queries), chunk)
+        QueryEngine.spillChunks(index, chunks, allowedBc) { qArr =>
+          val weighted = expandChunk(index, qArr, fbDocs, fbTerms, alpha, allowedBc)
+            .filter(_._2.nonEmpty)
+          if (weighted.isEmpty) None
+          else Some(QueryEngine.finishChunk(index, weighted, k, allowedBc))
+        }
+      })
+  }
+
+  /** The declarative RM3 plan: pass 1 → [[feedbackVectors]] →
+    * [[expandWeights]] → weighted pass 2. `filterOverBound`: the caller
+    * already proved the doc filter over the broadcast bound, so both passes
+    * go straight to the exact semi-join path.
+    */
+  private def searchIndexedPlan(index: BM25Index, queries: DataFrame, k: Int,
+                                fbDocs: Int, fbTerms: Int, alpha: Double,
+                                docFilter: Option[org.apache.spark.sql.Column],
+                                filterOverBound: Boolean): DataFrame = {
+    val pass1 =
+      if (filterOverBound) QueryEngine.searchExactImpl(index, queries, fbDocs,
+        docFilter, tryBroadcastFilter = false)
+      else QueryEngine.searchWand(index, queries, fbDocs, docFilter)
+    val fb = pass1.select(col("qid"), col("docId"), col("score"))
     fb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (docTf, dl) = feedbackVectors(index, fb.select("docId"))
       val weights = expandWeights(fb, docTf, dl, queryTf(index, queries),
         fbTerms, alpha, docCol = "docId")
-      // the weighted pass collects/spills eagerly, so the returned frame
-      // no longer references fb — safe to unpersist in finally
-      QueryEngine.searchWandWeighted(index, weights, k, docFilter)
+      // the weighted WAND pass collects its terms eagerly, so its result no
+      // longer references fb; the exact pass's result recomputes fb if it
+      // is read after the unpersist
+      if (filterOverBound) QueryEngine.searchExactTerms(index, weights, k,
+        docFilter, tryBroadcastFilter = false)
+      else QueryEngine.searchWandWeighted(index, weights, k, docFilter)
     } finally fb.unpersist()
   }
 

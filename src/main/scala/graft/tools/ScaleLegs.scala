@@ -25,6 +25,24 @@ import graft.util.SynthCorpus
   * GRAFT_LEG_ROUNDS (3), GRAFT_LEG_K (1000), GRAFT_LEG_BATCH_PER_CPU (200).
   */
 object ScaleLegs {
+  /** Child JVM heap in MiB: ¾ of the host's MemTotal (/proc/meminfo, else
+    * the OS bean's physical memory), capped at 16 GiB — a fixed -Xmx16g
+    * overcommits any host below ~21 GB of RAM.
+    */
+  private[graft] def childHeapMb(memTotalBytes: Long): Long =
+    math.min(16L << 10, memTotalBytes / 4 * 3 >> 20)
+
+  private def memTotalBytes(): Long = {
+    val meminfo = java.nio.file.Paths.get("/proc/meminfo")
+    val fromProc =
+      if (!java.nio.file.Files.isReadable(meminfo)) None
+      else java.nio.file.Files.readAllLines(meminfo).asScala
+        .collectFirst { case l if l.startsWith("MemTotal:") =>
+          l.split("\\s+")(1).toLong << 10 } // reported in kB
+    fromProc.getOrElse(java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getTotalMemorySize)
+  }
+
   private def runChild(cpus: Int, idxDir: String, nBatch: Int, k: Int,
                        reps: Int): Option[Double] = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -42,7 +60,7 @@ object ScaleLegs {
       }
     }
     val cmd = Seq(javaBin) ++ opens.toSeq ++ Seq(
-      s"-XX:ActiveProcessorCount=$cpus", "-Xmx16g",
+      s"-XX:ActiveProcessorCount=$cpus", s"-Xmx${childHeapMb(memTotalBytes())}m",
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"),
       "graft.tools.ScaleLegChild",

@@ -216,6 +216,13 @@ class GraftSpec extends SparkTestBase {
       s"lists confs no code reads: ${(table -- read).toSeq.sorted}")
   }
 
+  test("ScaleLegs child heap is 3/4 of host memory, capped at 16 GiB") {
+    import graft.tools.ScaleLegs.childHeapMb
+    assert(childHeapMb(8L << 30) == 6144)
+    assert(childHeapMb(15L << 30) == 11520)
+    assert(childHeapMb(64L << 30) == 16384)
+  }
+
   test("flattenRuns reproduces combine_results timing semantics") {
     // reference-shaped fixture: numba timing preferred over default,
     // tokenize_corpus folded into index time (combine_results.py:88-108)

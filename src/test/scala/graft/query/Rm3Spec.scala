@@ -226,6 +226,175 @@ class Rm3Spec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.wandQueryChunkRows")
   }
 
+  // ---- driver-local RM3: scalar twin, chunking, job count -----------------
+
+  private def scalarWeights(qtf: Map[String, Array[(String, Double)]],
+                            fb: Map[String, Array[(Long, Double)]],
+                            vectors: Map[Long, (Array[String], Array[Long])],
+                            fbTerms: Int, alpha: Double): Map[String, Map[String, Double]] =
+    qtf.map { case (qid, qt) =>
+      qid -> Rm3.expandScalar(qt, fb.getOrElse(qid, Array.empty), vectors,
+        fbTerms, alpha).toMap
+    }.filter(_._2.nonEmpty)
+
+  private def planWeights(df: DataFrame): Map[String, Map[String, Double]] =
+    df.collect().groupBy(_.getString(0)).map { case (qid, rs) =>
+      qid -> rs.map(r => r.getString(1) -> r.getDouble(2)).toMap
+    }
+
+  private def assertSameWeights(got: Map[String, Map[String, Double]],
+                                want: Map[String, Map[String, Double]],
+                                what: String): Unit = {
+    assert(got.keySet == want.keySet, s"$what: qids ${got.keySet} vs ${want.keySet}")
+    for (qid <- want.keySet) {
+      assert(got(qid).keySet == want(qid).keySet,
+        s"$what $qid terms: ${got(qid).keySet} vs ${want(qid).keySet}")
+      for ((t, w) <- want(qid))
+        assert(math.abs(got(qid)(t) - w) <= 1e-12, s"$what $qid $t: ${got(qid)(t)} vs $w")
+    }
+  }
+
+  test("driver expansion equals expandWeights on hand-built feedback") {
+    import spark.implicits._
+    // q1: the hand-computed model above. q2: kiwi and lime tie on rm1 (the
+    // fbTerms = 1 cut keeps kiwi, term asc); the 0-score and negative-score
+    // feedback docs carry no mass. q3: only non-positive feedback.
+    val vectors = Map(
+      1L -> (Array("apple", "banana"), Array(2L, 1L)),
+      2L -> (Array("banana", "cherry"), Array(2L, 2L)),
+      3L -> (Array("lime", "kiwi"), Array(1L, 1L)),
+      4L -> (Array("pear"), Array(3L)),
+      5L -> (Array("plum", "kiwi"), Array(1L, 4L)))
+    val fb = Map(
+      "q1" -> Array((1L, 2.0), (2L, 1.0)),
+      "q2" -> Array((3L, 1.5), (4L, 0.0), (5L, -0.5)),
+      "q3" -> Array((4L, 0.0), (5L, -2.0)))
+    val qtf = Map(
+      "q1" -> Array(("apple", 1.0)),
+      "q2" -> Array(("kiwi", 2.0), ("fig", 1.0)),
+      "q3" -> Array(("plum", 1.0)))
+    val fbDf = fb.toSeq.flatMap { case (q, hs) => hs.map { case (d, sc) => (q, s"d$d", sc) } }
+      .toDF("qid", "doc_id", "score")
+    val docTf = vectors.toSeq.flatMap { case (d, (ts, tfs)) =>
+      ts.zip(tfs).map { case (t, tf) => (s"d$d", t, tf) } }.toDF("doc_id", "term", "tf")
+    val dl = vectors.toSeq.map { case (d, (_, tfs)) => (s"d$d", tfs.sum) }.toDF("doc_id", "dl")
+    val qtfDf = qtf.toSeq.flatMap { case (q, ts) => ts.map { case (t, c) => (q, t, c.toLong) } }
+      .toDF("qid", "term", "qtf")
+    for (fbTerms <- Seq(1, 2); alpha <- Seq(0.0, 0.5, 1.0)) {
+      val want = planWeights(Rm3.expandWeights(fbDf, docTf, dl, qtfDf, fbTerms, alpha))
+      assertSameWeights(scalarWeights(qtf, fb, vectors, fbTerms, alpha), want,
+        s"fbTerms=$fbTerms alpha=$alpha")
+    }
+    val q2 = scalarWeights(qtf, fb, vectors, fbTerms = 1, alpha = 0.0)("q2")
+    assert(q2.keySet == Set("kiwi"), s"rm1 tie cut: $q2")
+  }
+
+  test("driver expansion equals expandWeights on the index's real feedback") {
+    val idx = new BM25Index(spark, indexDir)
+    val fb = QueryEngine.searchWand(idx, queriesDf, 5)
+      .join(idx.docs.select("docId", "docIntId"), "docId")
+      .select(col("qid"), col("docId"), col("docIntId"), col("score"))
+      .persist()
+    try {
+      val (docTf, dl) = Rm3.feedbackVectors(idx, fb.select("docId"))
+      val qtfDf = queriesDf.select(col("qid"),
+        explode(graft.tokenize.Tokenizer.tokens(col("query"),
+          idx.tokenPattern, idx.stem)).as("term"))
+        .groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
+      val fbRows = fb.collect()
+      val fbByQid = fbRows.groupBy(_.getString(0)).map { case (q, rs) =>
+        q -> rs.map(r => (r.getLong(2), r.getDouble(3))) }
+      val vectors = Rm3.fetchVectors(idx, fbRows.map(_.getLong(2)).distinct)
+      val qtf = qtfDf.collect().groupBy(_.getString(0)).map { case (q, rs) =>
+        q -> rs.map(r => (r.getString(1), r.getLong(2).toDouble)) }
+      assert(fbByQid.size >= 3, s"too little feedback: ${fbByQid.keySet}")
+      // dl = Σtf of the fetched vector is the docs table's len
+      val lens = dl.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      fbRows.foreach { r =>
+        assert(vectors(r.getLong(2))._2.sum == lens(r.getString(1)), r.getString(1))
+      }
+      for (alpha <- Seq(0.0, 0.5, 1.0)) {
+        val want = planWeights(Rm3.expandWeights(
+          fb.select("qid", "docId", "score"), docTf, dl, qtfDf,
+          fbTerms = 8, alpha = alpha, docCol = "docId"))
+        assertSameWeights(scalarWeights(qtf, fbByQid, vectors, 8, alpha), want,
+          s"alpha=$alpha")
+      }
+    } finally fb.unpersist()
+  }
+
+  test("chunked and over-bound-filter RM3 routes give the single-chunk result") {
+    val idx = new BM25Index(spark, indexDir)
+    val pred = Some(pmod(xxhash64(col("docId")), lit(2)) === 0)
+    // 10 feedback docs per chunk at fbDocs = 5 is two queries per chunk;
+    // a filter over the broadcast bound runs the declarative plan
+    val legs = Seq(
+      ("spark.graft.rm3MaxPrunedFeedbackDocs", "10", None),
+      ("spark.graft.rm3MaxPrunedFeedbackDocs", "10", pred),
+      ("spark.graft.filterMaxBroadcastDocs", "1", pred))
+    for ((conf, value, flt) <- legs) {
+      def run() = resultsByQid(Rm3.searchIndexed(idx, queriesDf, 10,
+        fbDocs = 5, fbTerms = 8, alpha = 0.5, docFilter = flt))
+      val want = run()
+      assert(want.size >= 3, s"too few results: ${want.keySet}")
+      spark.conf.set(conf, value)
+      try {
+        if (flt.isEmpty) assert(Rm3.chunkQueries(spark, 5) == 2)
+        val got = run()
+        val leg = s"$conf=$value filter=${flt.isDefined}"
+        assert(got.keySet == want.keySet, s"$leg: qids")
+        for (qid <- want.keySet) {
+          assert(got(qid).map(_._1) == want(qid).map(_._1), s"$leg $qid docs")
+          got(qid).zip(want(qid)).foreach { case ((d, gs), (_, ws)) =>
+            assert(math.abs(gs - ws) < 1e-9, s"$leg $qid $d: $gs vs $ws")
+          }
+        }
+      } finally spark.conf.unset(conf)
+    }
+  }
+
+  /** Spark jobs started while `body` runs. A marker job before and after
+    * orders the count against the asynchronous listener bus: once the
+    * closing marker's start is delivered, so is every earlier job's.
+    */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val markers = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null))
+          markers.put(started.get)
+        else started.incrementAndGet()
+    }
+    def marker(): Int = {
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      val n = markers.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(n != null, "marker job start never delivered")
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      val before = marker()
+      body
+      marker() - before
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one RM3 call runs at most half the jobs of the distributed expansion plan") {
+    val idx = new BM25Index(spark, indexDir)
+    def call() = Rm3.searchIndexed(idx, queriesDf, 10, fbDocs = 5, fbTerms = 8,
+      alpha = 0.5).collect()
+    call() // first use opens the index tables and caches the docs dimension
+    val jobs = jobsIn(call())
+    // the distributed plan (pass 1 → feedbackVectors → expandWeights →
+    // weighted pass 2, index tables re-opened per use) ran 33 jobs here
+    assert(jobs <= 33 / 2, s"$jobs jobs")
+  }
+
   test("composed driver entry: rows, schema, and OOV/stopword behavior") {
     val df = graft.entry.DriverQueries.bm25TopkRm3(spark, "/root/testdata/sf0.001")
     val rows = df.collect()
