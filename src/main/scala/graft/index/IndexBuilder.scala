@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.score.{BM25, BM25Params}
-import graft.store.{IcebergLikeStore, PartitionCommit}
+import graft.store.IcebergLikeStore
 import graft.tokenize.Tokenizer
 
 /** One compressed posting block: up to Codec.BlockSize (docId, impact)
@@ -72,7 +72,6 @@ object IndexBuilder {
       // small scale fragment the table into sub-row-group files.
       numBuckets: Int = 16,
       docmapPartitions: Int = 0, // 0 = spark default parallelism
-      failAfterGroup: Int = -1, // test hook: crash after committing group g
       // Store per-document term vectors (docvecs table) — the analogue of
       // Pyserini's `--storeDocvectors` (reference: benchmark/on_pyserini.py:
       // 245-253, passed unconditionally by the harness), which exists
@@ -213,9 +212,6 @@ object IndexBuilder {
     }
   }
 
-  /** Build (or resume) the index for a corpus of (docId STRING, content
-    * STRING) rows. Returns the store handle.
-    */
   /** Overwrite-write `df` as parquet and return its row count, captured by
     * an Observation INSIDE the write job — no separate count job, no
     * re-read of what was just written (each saved job is a full barrier).
@@ -275,30 +271,26 @@ object IndexBuilder {
     * (benchmark/on_pyserini.py:245-253). Consumed by
     * graft.query.Rm3.feedbackVectors.
     */
-  private def docvecsStage(spark: SparkSession, indexDir: String,
-                           store: IcebergLikeStore, segments: DataFrame,
-                           P: Int): Unit = {
-    if (store.committedGroups().contains("docvecs")) return
-    val s = System.nanoTime()
-    implicit val enc = org.apache.spark.sql.Encoders.product[DocVecRow]
-    val packed = segments.select(col("docIntId"), col("term"), col("tf"))
-      .mapPartitions(rows => new DocVecPacker(rows))
-    // NO shuffle: each scan partition covers a near-contiguous docIntId
-    // range (segment files are written doc-contiguously), so after the
-    // map-side pack a partition holds ~numDocs/P packed rows touching only
-    // 1-2 salt values — the dynamic-partition writer sends them straight to
-    // their salt dirs (a handful of files per dir, each docIntId-sorted so
-    // row-group min/max pruning stays tight). The sort is over packed rows,
-    // three orders of magnitude fewer than the row-per-term layout sorted.
-    val n = writeCounted(
-      packed.toDF()
-        .sortWithinPartitions("salt", "docIntId"),
-      s"$indexDir/docvecs", partitionCols = Seq("salt"),
-      options = DocvecsWriteOptions)
-    store.commit(PartitionCommit("docvecs", Seq("docvecs"), n,
-      Map("stage" -> "docvecs", "format" -> "packed"),
-      (System.nanoTime() - s) / 1e9))
-  }
+  private def docvecsStage(indexDir: String, store: IcebergLikeStore,
+                           segments: DataFrame): Unit =
+    store.stage("docvecs", Seq("docvecs"),
+        Map("stage" -> "docvecs", "format" -> "packed")) {
+      implicit val enc = org.apache.spark.sql.Encoders.product[DocVecRow]
+      val packed = segments.select(col("docIntId"), col("term"), col("tf"))
+        .mapPartitions(rows => new DocVecPacker(rows))
+      // NO shuffle: each scan partition covers a near-contiguous docIntId
+      // range (segment files are written doc-contiguously), so after the
+      // map-side pack each of the P scan partitions holds ~numDocs/P packed
+      // rows touching only 1-2 salt values — the dynamic-partition writer
+      // sends them straight to their salt dirs (a handful of files per dir,
+      // each docIntId-sorted so row-group min/max pruning stays tight). The sort is over packed rows,
+      // three orders of magnitude fewer than the row-per-term layout sorted.
+      writeCounted(
+        packed.toDF()
+          .sortWithinPartitions("salt", "docIntId"),
+        s"$indexDir/docvecs", partitionCols = Seq("salt"),
+        options = DocvecsWriteOptions)
+    }
 
   /** The docvecs layout actually on disk, from the stage's commit metadata:
     * commits written since the packed layout exist record format=packed;
@@ -308,9 +300,11 @@ object IndexBuilder {
     * table without terms[]/tfs[] columns.
     */
   private def docvecsFormatOf(store: IcebergLikeStore): String =
-    store.readCommits().filter(_.group == "docvecs").lastOption
-      .flatMap(_.metrics.get("format")).getOrElse("rows")
+    store.lastCommit("docvecs").flatMap(_.metrics.get("format")).getOrElse("rows")
 
+  /** Build (or resume) the index for a corpus of (docId STRING, content
+    * STRING) rows. Returns the store handle.
+    */
   def build(spark: SparkSession, corpus: DataFrame, indexDir: String,
             cfg: Config = Config()): IcebergLikeStore = {
     val store = new IcebergLikeStore(indexDir)
@@ -323,11 +317,9 @@ object IndexBuilder {
       val props = store.readProperties()
       if (!cfg.storeDocVectors || props.get("docVectors").contains("true"))
         return store
-      val P = if (cfg.docmapPartitions > 0) cfg.docmapPartitions
-              else spark.sparkContext.defaultParallelism
       val segs = spark.read.parquet(s"$indexDir/segments")
         .select("docIntId", "len", "term", "tf")
-      docvecsStage(spark, indexDir, store, segs, P)
+      docvecsStage(indexDir, store, segs)
       store.writeProperties(props ++ Map(
         "docVectors" -> "true", "docvecsFormat" -> docvecsFormatOf(store)))
       return store
@@ -362,51 +354,43 @@ object IndexBuilder {
     // docId-ordered, and repartitionByRange would execute the child an
     // extra time to sample range bounds — pure fixed cost per build.
     val docmapPath = s"$indexDir/docmap"
-    if (!store.committedGroups().contains("docmap")) {
-      val s = System.nanoTime()
-      val n = writeCounted(
+    store.stage("docmap", Seq("docmap"), Map("stage" -> "docmap")) {
+      writeCounted(
         corpus.select(col("docId")) // column-pruned: only docId shuffles here
           .repartition(P, col("docId"))
           .sortWithinPartitions("docId")
           .withColumn("docIntId", monotonically_increasing_id())
           .withColumn("salt", saltOf(col("docIntId"))),
         docmapPath)
-      store.commit(PartitionCommit("docmap", Seq("docmap"), n,
-        Map("stage" -> "docmap"), (System.nanoTime() - s) / 1e9))
     }
     val docmap = spark.read.parquet(docmapPath)
 
     // ---- stage 1: segments — tokenize + per-doc term frequencies,
     // committed per corpus group (resume skips committed groups).
     val segBase = s"$indexDir/segments"
-    for (g <- 0 until cfg.numSegmentGroups
-         if !store.committedGroups().contains(s"seg-$g")) {
-      val s = System.nanoTime()
-      val part = corpusP.where(
-        pmod(xxhash64(col("docId")), lit(cfg.numSegmentGroups.toLong)) === g)
-      // shuffle-hash join, never sort-merge: SMJ would SORT the full
-      // content payload by docId; hash join only shuffles it (planner
-      // still picks broadcast when docmap fits under the threshold)
-      val toks = part.join(docmap.hint("shuffle_hash"), "docId")
-        .select(col("docIntId"),
-          Tokenizer.tokens(col("content"), cfg.tokenPattern, cfg.stem).as("toks"))
-      // per-doc tf computed INSIDE the row (TermCountsExpr): the previous
-      // corpus-wide groupBy(docIntId, term) aggregated under nearly-unique
-      // keys, so its hash map overflowed to a sort at scale (measured
-      // super-linear past ~10^6 docs)
-      val rows = writeCounted(
-        toks
-          .select(col("docIntId"), size(col("toks")).cast(LongType).as("len"),
-            explode(graft.index.expr.TermCountsExprs.termCounts(col("toks"))).as("tc"))
-          .select(col("docIntId"), col("len"),
-            col("tc.term").as("term"), col("tc.tf").as("tf")),
-        s"$segBase/g=$g")
-      store.commit(PartitionCommit(s"seg-$g", Seq(s"segments/g=$g"), rows,
-        Map("stage" -> "segments", "group" -> g.toString),
-        (System.nanoTime() - s) / 1e9))
-      if (g == cfg.failAfterGroup)
-        throw new IllegalStateException(s"injected failure after group $g (test hook)")
-    }
+    for (g <- 0 until cfg.numSegmentGroups)
+      store.stage(s"seg-$g", Seq(s"segments/g=$g"),
+          Map("stage" -> "segments", "group" -> g.toString)) {
+        val part = corpusP.where(
+          pmod(xxhash64(col("docId")), lit(cfg.numSegmentGroups.toLong)) === g)
+        // shuffle-hash join, never sort-merge: SMJ would SORT the full
+        // content payload by docId; hash join only shuffles it (planner
+        // still picks broadcast when docmap fits under the threshold)
+        val toks = part.join(docmap.hint("shuffle_hash"), "docId")
+          .select(col("docIntId"),
+            Tokenizer.tokens(col("content"), cfg.tokenPattern, cfg.stem).as("toks"))
+        // per-doc tf computed INSIDE the row (TermCountsExpr): the previous
+        // corpus-wide groupBy(docIntId, term) aggregated under nearly-unique
+        // keys, so its hash map overflowed to a sort at scale (measured
+        // super-linear past ~10^6 docs)
+        writeCounted(
+          toks
+            .select(col("docIntId"), size(col("toks")).cast(LongType).as("len"),
+              explode(graft.index.expr.TermCountsExprs.termCounts(col("toks"))).as("tc"))
+            .select(col("docIntId"), col("len"),
+              col("tc.term").as("term"), col("tc.tf").as("tf")),
+          s"$segBase/g=$g")
+      }
 
     // Three downstream stages consume segments (docs, termstats, postings).
     // They re-read the parquet uncached: each column-prunes a different
@@ -420,11 +404,10 @@ object IndexBuilder {
     // ---- stage 2a: docvecs — stored document term vectors (packed).
     // Runs BEFORE the docs table: the packed rows then feed the doc-length
     // computation below, which repays most of this stage's cost.
-    if (cfg.storeDocVectors) docvecsStage(spark, indexDir, store, segments, P)
+    if (cfg.storeDocVectors) docvecsStage(indexDir, store, segments)
 
     // ---- stage 2: docs table (docId, len) + global stats.
-    if (!store.committedGroups().contains("docs")) {
-      val s = System.nanoTime()
+    store.stage("docs", Seq("docs"), Map("stage" -> "docs")) {
       // doc lengths: with stored doc vectors, Σtf was already folded into
       // the packed rows' len column — a TWO-COLUMN pruned scan of ~numDocs
       // rows (no array decode, no token-table re-aggregation; the groupBy
@@ -433,7 +416,7 @@ object IndexBuilder {
       // (an EMPTY docvecs write leaves a schemaless partitioned dir —
       // fall back to the token table, itself empty then)
       val docvecsNonEmpty = cfg.storeDocVectors &&
-        store.readCommits().exists(c => c.group == "docvecs" && c.rowCount > 0)
+        store.lastCommit("docvecs").exists(_.rowCount > 0)
       val lens =
         (if (docvecsNonEmpty)
            spark.read.parquet(s"$indexDir/docvecs")
@@ -442,13 +425,11 @@ object IndexBuilder {
           .groupBy("docIntId").agg(sum("tf").as("len"))
       // shuffle-hash, not sort-merge: neither side needs sorting for a
       // plain equi-join and SMJ would sort both million-row sides
-      val n = writeCounted(
+      writeCounted(
         docmap.join(lens.hint("shuffle_hash"), Seq("docIntId"), "left")
           .select(col("docIntId"), col("docId"),
             coalesce(col("len"), lit(0L)).as("len"), col("salt")),
         s"$indexDir/docs")
-      store.commit(PartitionCommit("docs", Seq("docs"), n,
-        Map("stage" -> "docs"), (System.nanoTime() - s) / 1e9))
     }
 
     val docs = spark.read.parquet(s"$indexDir/docs")
@@ -466,14 +447,11 @@ object IndexBuilder {
     // stage 3a: narrow per-term stats (exact global df; partial+final hash
     // agg, so a term in 50% of docs never concentrates on one task).
     // Persisted: also the query-side term dictionary for diagnostics.
-    if (!store.committedGroups().contains("termstats")) {
-      val s = System.nanoTime()
-      val n = writeCounted(
+    store.stage("termstats", Seq("termstats"), Map("stage" -> "termstats")) {
+      writeCounted(
         segments.groupBy("term")
           .agg(count(lit(1)).as("df"), sum("tf").as("ctf")),
         s"$indexDir/termstats")
-      store.commit(PartitionCommit("termstats", Seq("termstats"), n,
-        Map("stage" -> "termstats"), (System.nanoTime() - s) / 1e9))
     }
     val termstats = spark.read.parquet(s"$indexDir/termstats")
 
@@ -481,11 +459,10 @@ object IndexBuilder {
     // size is the termstats commit's own row count — no extra job)
     val numBuckets =
       if (cfg.numBuckets > 0) cfg.numBuckets
-      else autoBuckets(store.readCommits()
-        .filter(_.group == "termstats").lastOption.map(_.rowCount).getOrElse(0L))
+      else autoBuckets(store.lastCommit("termstats").map(_.rowCount).getOrElse(0L))
 
-    if (!store.committedGroups().contains("postings")) {
-      val s = System.nanoTime()
+    store.stage("postings", Seq("postings"),
+        Map("stage" -> "postings", "buckets" -> numBuckets.toString)) {
       // df joins onto NARROW segment rows (AQE skew-split handles giant
       // terms); one hash shuffle on (bucket, salt) co-locates each (term,
       // salt) run WITH its output bucket, and the radix sort inside each
@@ -516,7 +493,7 @@ object IndexBuilder {
       implicit val enc = org.apache.spark.sql.Encoders.product[PostingListRow]
       val encoded = sorted.mapPartitions(rows =>
         new RunEncoder(p, numDocs, avgdl, rows))
-      val rows = writeCounted(
+      writeCounted(
         // re-cluster the (small: one row per posting list) encoded output
         // BY BUCKET, term-sorted: one term-contiguous file per bucket whose
         // 1 MB row groups carry tight term min/max, so the query-side
@@ -533,9 +510,6 @@ object IndexBuilder {
           .sortWithinPartitions("bucket", "term", "salt"),
         s"$indexDir/postings", partitionCols = Seq("bucket"),
         options = PostingsWriteOptions)
-      store.commit(PartitionCommit("postings", Seq("postings"), rows,
-        Map("stage" -> "postings", "buckets" -> numBuckets.toString),
-        (System.nanoTime() - s) / 1e9))
     }
 
     store.writeProperties(Map(

@@ -1,26 +1,38 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Minimal Iceberg-style table layer: parquet data files under a table dir
   * plus an append-only `_commits/` JSON manifest log carrying per-partition
   * lineage and metrics. Provides the north rule's checkpoint/resume
   * semantics (killed build resumes from the last committed partition group)
   * without the Iceberg runtime jar, which does not ship in this offline
-  * image (SURVEY.md §7.3). The trait boundary is narrow so a real Iceberg
-  * catalog can replace it where available.
+  * image (SURVEY.md §7.3).
   *
   * Mirrors the reference's index-persistence contract: engine params are
   * index-level metadata applied before querying (Elasticsearch settings
   * dance at benchmark/on_elastic.py:72-112; bm25s `model.save(dir)` at
   * inference/build_index.py:25-28).
   *
-  * Commit protocol: data is written to `_tmp-<group>/`, moved into place,
-  * then a manifest `_commits/<seq>-<group>.json` is atomically renamed in.
-  * A group is committed iff its manifest exists; partially-written data
-  * without a manifest is ignored and overwritten on resume.
+  * All IO goes through the Hadoop `FileSystem` of the active session's
+  * `hadoopConfiguration`, so a plain path, a `file:` or an `hdfs:` URI
+  * resolves exactly as Spark's own reads and writes of the same table dir.
+  *
+  * Commit protocol ([[stage]]): a group's writer overwrites the group's
+  * final data directory; then its manifest is written to a hidden temp
+  * file `_commits/.tmp-<seq>-<group>` and renamed to
+  * `_commits/<seq>-<group>.json`. The rename is the commit point: a group
+  * is committed iff its manifest exists. Data without a manifest (a killed
+  * write) is overwritten by the next run of the stage, and readers skip
+  * temp files. Each committed manifest is a snapshot of the log;
+  * `_properties.json` (written last, by the same temp-and-rename) marks
+  * the table complete.
   */
 final case class PartitionCommit(
     group: String,
@@ -30,96 +42,105 @@ final case class PartitionCommit(
     elapsedSec: Double)
 
 class IcebergLikeStore(tableDir: String) {
-  private val root: Path = Paths.get(tableDir)
-  private val commitsDir: Path = root.resolve("_commits")
+  private val root = new Path(tableDir)
+  private val fs: FileSystem =
+    root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+  private val commitsDir = new Path(root, "_commits")
+  private val propsPath = new Path(root, "_properties.json")
 
-  def dataPath: String = root.toString
-
+  /** Committed manifests in commit order: `<seq>-<group>.json` names only. */
   private def listManifests(): Seq[Path] =
-    if (!Files.isDirectory(commitsDir)) Nil
-    else Files.list(commitsDir).iterator.asScala.toSeq
-      .filter(_.getFileName.toString.endsWith(".json")).sortBy(_.getFileName.toString)
-
-  /** Groups already durably committed (resume skips these). */
-  def committedGroups(): Set[String] =
-    listManifests().map { p =>
-      val name = p.getFileName.toString.stripSuffix(".json")
-      name.substring(name.indexOf('-') + 1)
-    }.toSet
-
-  def readCommits(): Seq[PartitionCommit] = listManifests().map { p =>
-    val s = Files.readString(p)
-    def field(k: String): String = {
-      val m = java.util.regex.Pattern
-        .compile("\"" + k + "\"\\s*:\\s*(\"((?:[^\"\\\\]|\\\\.)*)\"|[-0-9.Ee]+)")
-        .matcher(s)
-      if (m.find()) Option(m.group(2)).getOrElse(m.group(1)) else ""
-    }
-    // round-trip the metrics map: stage metadata recorded at commit time
-    // (e.g. the docvecs stage's format key) must be readable on resume —
-    // IndexBuilder derives docvecsFormat from it rather than assuming the
-    // current layout, so a legacy (pre-packed) docvecs commit resumes with
-    // its own format stamped
-    val metrics = {
-      val mm = java.util.regex.Pattern
-        .compile("\"metrics\"\\s*:\\s*\\{([^}]*)\\}").matcher(s)
-      if (!mm.find()) Map.empty[String, String]
-      else {
-        val kv = java.util.regex.Pattern
-          .compile("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"")
-          .matcher(mm.group(1))
-        val b = Map.newBuilder[String, String]
-        while (kv.find()) b += (kv.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-          -> kv.group(2).replace("\\\"", "\"").replace("\\\\", "\\"))
-        b.result()
+    if (!fs.exists(commitsDir)) Nil
+    else fs.listStatus(commitsDir).toSeq.map(_.getPath)
+      .filter { p =>
+        val n = p.getName
+        n.headOption.exists(_.isDigit) && n.endsWith(".json")
       }
-    }
-    PartitionCommit(field("group"), Nil, field("rowCount").toLong,
-      metrics + ("sha256" -> field("sha256")), field("elapsedSec").toDouble)
+      .sortBy(_.getName)
+
+  private def groupOf(manifest: Path): String = {
+    val name = manifest.getName.stripSuffix(".json")
+    name.substring(name.indexOf('-') + 1)
   }
 
-  /** Durably record a completed partition group. */
-  def commit(c: PartitionCommit): Unit = {
-    Files.createDirectories(commitsDir)
+  /** Groups already durably committed (resume skips these). */
+  def committedGroups(): Set[String] = listManifests().map(groupOf).toSet
+
+  def readCommits(): Seq[PartitionCommit] = listManifests().map(readCommit)
+
+  /** The latest commit of `group`, if any: the stage metadata recorded at
+    * commit time (row count, the docvecs stage's format key) that a
+    * resumed build reads instead of assuming the current layout.
+    */
+  def lastCommit(group: String): Option[PartitionCommit] =
+    listManifests().filter(groupOf(_) == group).lastOption.map(readCommit)
+
+  /** Run one build stage under the commit protocol: skip it if `group` is
+    * committed; otherwise run `write` (returns the rows written), time it
+    * and commit the group's manifest.
+    */
+  def stage(group: String, files: Seq[String], metrics: Map[String, String])(
+      write: => Long): Unit =
+    if (!committedGroups().contains(group)) {
+      val s = System.nanoTime()
+      val rows = write
+      commit(PartitionCommit(group, files, rows, metrics, (System.nanoTime() - s) / 1e9))
+    }
+
+  private def commit(c: PartitionCommit): Unit = {
     val seq = listManifests().size
-    def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val metricsJson = c.metrics.map { case (k, v) => s"${js(k)}: ${js(v)}" }
-      .mkString("{", ",", "}")
-    val body =
-      s"""{"group": ${js(c.group)}, "rowCount": ${c.rowCount},
-         | "files": [${c.files.map(js).mkString(",")}],
-         | "metrics": $metricsJson, "elapsedSec": ${c.elapsedSec},
-         | "sha256": ${js(c.metrics.getOrElse("sha256", ""))}}""".stripMargin
-    val tmp = commitsDir.resolve(s".tmp-${c.group}.json")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    val target = commitsDir.resolve(f"$seq%05d-${c.group}.json")
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    val body = new java.util.LinkedHashMap[String, Any]
+    body.put("group", c.group)
+    body.put("rowCount", c.rowCount)
+    body.put("files", c.files.asJava)
+    body.put("metrics", new java.util.TreeMap(c.metrics.asJava))
+    body.put("elapsedSec", c.elapsedSec)
+    writeAtomically(new Path(commitsDir, f"$seq%05d-${c.group}.json"), body)
   }
 
   /** Table-level properties (scoring params etc.), written once at finish. */
-  def writeProperties(props: Map[String, String]): Unit = {
-    Files.createDirectories(root)
-    def js(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val body = props.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}: ${js(v)}" }.mkString("{", ",\n", "}")
-    val tmp = root.resolve(".tmp-properties.json")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve("_properties.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  def writeProperties(props: Map[String, String]): Unit =
+    writeAtomically(propsPath, new java.util.TreeMap(props.asJava))
+
+  def readProperties(): Map[String, String] =
+    if (!fs.exists(propsPath)) Map.empty
+    else textFields(readJson(propsPath))
+
+  def isComplete: Boolean = fs.exists(propsPath)
+
+  private def readCommit(manifest: Path): PartitionCommit = {
+    val j = readJson(manifest)
+    PartitionCommit(j.get("group").asText, j.path("files").asScala.map(_.asText).toSeq,
+      j.get("rowCount").asLong, textFields(j.path("metrics")), j.get("elapsedSec").asDouble)
   }
 
-  def readProperties(): Map[String, String] = {
-    val p = root.resolve("_properties.json")
-    if (!Files.exists(p)) return Map.empty
-    val s = Files.readString(p)
-    val m = java.util.regex.Pattern
-      .compile("\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"")
-      .matcher(s)
-    val out = Map.newBuilder[String, String]
-    while (m.find()) out += (m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-      -> m.group(2).replace("\\\"", "\"").replace("\\\\", "\\"))
-    out.result()
+  private def textFields(j: JsonNode): Map[String, String] =
+    j.properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
+
+  private def readJson(p: Path): JsonNode = {
+    val in = fs.open(p)
+    try IcebergLikeStore.Json.readTree(in) finally in.close()
   }
 
-  def isComplete: Boolean = Files.exists(root.resolve("_properties.json"))
+  /** Write `value` as JSON to a hidden temp file beside `target`, then
+    * rename it over `target`. A filesystem whose rename does not replace
+    * (HDFS) gets the old target deleted first.
+    */
+  private def writeAtomically(target: Path, value: AnyRef): Unit = {
+    val tmp = new Path(target.getParent, ".tmp-" + target.getName.stripSuffix(".json"))
+    val out = fs.create(tmp, true)
+    try out.write(IcebergLikeStore.Json.writerWithDefaultPrettyPrinter
+      .writeValueAsBytes(value))
+    finally out.close()
+    if (!fs.rename(tmp, target) &&
+        !(fs.delete(target, false) && fs.rename(tmp, target)))
+      throw new java.io.IOException(s"could not rename $tmp to $target")
+  }
+}
+
+object IcebergLikeStore {
+  // unescaped control characters: manifests and properties written before
+  // the store moved to Jackson escaped only `"` and `\`
+  private val Json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
 }

@@ -1,6 +1,10 @@
 package graft.index
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkTestBase
+import graft.store.IcebergLikeStore
 import graft.util.SynthCorpus
 
 /** North-rule resume semantics: a build killed after a committed partition
@@ -22,6 +26,39 @@ class ResumeSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getString(3)))
       .toSeq.sortBy(t => (t._1, t._2))
 
+  private def assertSameIndex(dirA: String, dirB: String): Unit = {
+    assert(postingsFingerprint(dirA) == postingsFingerprint(dirB))
+    val docsA = spark.read.parquet(s"$dirA/docs").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+    val docsB = spark.read.parquet(s"$dirB/docs").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(docsA == docsB)
+  }
+
+  private val Injected = "injected failure: sentinel doc"
+
+  /** Build `dir` over corpusDf with one sentinel doc of the LAST segment
+    * group whose content raises `Injected` when read: the build dies inside
+    * that group's segments write, after the earlier groups committed. The
+    * corpus is staged as parquet first — over a local relation the
+    * optimizer would evaluate the sentinel column while planning.
+    */
+  private def killedBuild(dir: String, cfg: IndexBuilder.Config): Unit = {
+    val groups = cfg.numSegmentGroups
+    val sentinel = corpusDf
+      .where(pmod(xxhash64(col("docId")), lit(groups.toLong)) === groups - 1)
+      .agg(min("docId")).head().getString(0)
+    val staged = s"${tmpDir("graft-killing-corpus")}/corpus"
+    corpusDf.write.parquet(staged)
+    val killing: DataFrame = spark.read.parquet(staged).withColumn("content",
+      when(col("docId") === sentinel, raise_error(lit(Injected)))
+        .otherwise(col("content")))
+    val e = intercept[Exception](IndexBuilder.build(spark, killing, dir, cfg))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains(Injected)), e)
+  }
+
   test("killed-after-group-1 build resumes to an identical index") {
     val dirA = tmpDir("graft-single")
     val dirB = tmpDir("graft-resumed")
@@ -29,24 +66,35 @@ class ResumeSpec extends SparkTestBase {
 
     IndexBuilder.build(spark, corpusDf, dirA, cfg)
 
-    // killed build: crashes right after committing segment group 1
-    intercept[IllegalStateException] {
-      IndexBuilder.build(spark, corpusDf, dirB, cfg.copy(failAfterGroup = 1))
-    }
-    val store = new graft.store.IcebergLikeStore(dirB)
+    // killed build: dies inside segment group 2's write, after group 1
+    // committed; whatever that write left under segments/g=2 has no
+    // manifest and is overwritten on resume
+    killedBuild(dirB, cfg)
+    val store = new IcebergLikeStore(dirB)
     assert(!store.isComplete)
     assert(store.committedGroups() == Set("docmap", "seg-0", "seg-1"))
 
     // resume: only seg-2 and downstream stages run
     IndexBuilder.build(spark, corpusDf, dirB, cfg)
-    assert(new graft.store.IcebergLikeStore(dirB).isComplete)
+    assert(new IcebergLikeStore(dirB).isComplete)
+    assertSameIndex(dirA, dirB)
+  }
 
-    assert(postingsFingerprint(dirA) == postingsFingerprint(dirB))
-    val docsA = spark.read.parquet(s"$dirA/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
-    val docsB = spark.read.parquet(s"$dirB/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(docsA == docsB)
+  test("a truncated temp manifest left by a killed commit is not read as a commit") {
+    val dirA = tmpDir("graft-tmp-single")
+    val dirB = tmpDir("graft-tmp-killed")
+    val cfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)
+    IndexBuilder.build(spark, corpusDf, dirA, cfg)
+    killedBuild(dirB, cfg)
+    // a kill inside the docs commit, before its rename, leaves a truncated
+    // temp manifest behind
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(dirB, "_commits", ".tmp-docs.json"),
+      "{\"group\": \"docs\", \"rowCount\": ")
+    assert(new IcebergLikeStore(dirB).committedGroups() == Set("docmap", "seg-0"))
+    IndexBuilder.build(spark, corpusDf, dirB, cfg)
+    assert(new IcebergLikeStore(dirB).isComplete)
+    assertSameIndex(dirA, dirB)
   }
 
   test("completed build is a no-op on re-invocation") {
@@ -130,12 +178,20 @@ class ResumeSpec extends SparkTestBase {
     graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$legacyTmp/docvecs"),
       java.nio.file.Paths.get(s"$dir/docvecs"))
-    val manifest = new java.io.File(s"$dir/_commits").listFiles()
-      .filter(_.getName.endsWith("-docvecs.json")).head.toPath
-    val body = java.nio.file.Files.readString(manifest)
-    val legacyBody = body.replace(",\"format\": \"packed\"", "")
-    assert(legacyBody != body, s"format key not found in manifest: $body")
-    java.nio.file.Files.writeString(manifest, legacyBody)
+    // the manifest is rewritten through the Hadoop FS, which keeps its
+    // checksum file in step
+    val commits = new org.apache.hadoop.fs.Path(s"$dir/_commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val manifest = fs.listStatus(commits).map(_.getPath)
+      .filter(_.getName.endsWith("-docvecs.json")).head
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = fs.open(manifest)
+    val body = try json.readTree(in) finally in.close()
+    val metrics = body.get("metrics")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(metrics.remove("format") != null, s"format key not found in manifest: $body")
+    val out = fs.create(manifest, true)
+    try out.write(json.writeValueAsBytes(body)) finally out.close()
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(s"$dir/_properties.json"))
     // resume: every group is committed, so only properties are re-stamped

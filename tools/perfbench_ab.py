@@ -13,8 +13,12 @@ ones, so drift in host speed falls on both sides alike.
 For every end-to-end metric of BENCHMARK.json it prints each side's
 median and quartiles, the median ratio, the share of pairs the change
 wins (by the metric's `better` direction), and whether the medians differ
-by more than the parent's interquartile range. Raw run results go to
---out as JSON lines. Exit status 1 when any run fails or is incorrect.
+by more than the parent's interquartile range, and a no-regression
+verdict against the metric's BENCHMARK.json `bound` (a relative change):
+`worse` when the change's median is worse than the parent's by more than
+the bound, else `unresolved` when the parent's IQR/median exceeds the
+bound (its runs spread too widely to tell), else `ok`. Raw run results go
+to --out as JSON lines. Exit status 1 when any run fails or is incorrect.
 """
 import argparse
 import json
@@ -59,6 +63,18 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(pmed, piqr, cmed, direction, bound):
+    """`worse`, `unresolved` or `ok` for one metric; see the module doc."""
+    if pmed == 0:
+        return "unresolved"
+    worse_by = (cmed - pmed if direction == "lower" else pmed - cmed) / abs(pmed)
+    if worse_by > bound:
+        return "worse"
+    if piqr / abs(pmed) > bound:
+        return "unresolved"
+    return "ok"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True, help="parent revision (e.g. HEAD~1)")
@@ -74,7 +90,7 @@ def main():
     work = a.work or tempfile.mkdtemp(prefix="perfbench-ab-")
     sha, parent_dir = export(a.parent, work)
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        metrics = {m["name"]: m for m in json.load(f)["end_to_end"]}
     sides = {"parent": parent_dir, "change": REPO}
     results = {"parent": [], "change": []}
     ok = True
@@ -99,8 +115,9 @@ def main():
 
     print(f"{a.workload}: parent {sha} vs working tree, {a.pairs} interleaved pairs")
     print(f"{'metric':18} {'parent med [q1, q3]':>28} {'change med [q1, q3]':>28}"
-          f" {'ratio':>7} {'wins':>6} {'>IQR':>5}")
-    for name, direction in better.items():
+          f" {'ratio':>7} {'wins':>6} {'>IQR':>5} {'verdict':>10}")
+    for name, m in metrics.items():
+        direction, bound = m["better"], m["bound"]
         pairs = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
                  for p, c in zip(results["parent"], results["change"])
                  if p and c and name in p["metrics"] and name in c["metrics"]]
@@ -114,7 +131,8 @@ def main():
         sep = abs(cmed - pmed) > (pq3 - pq1)
         ratio = cmed / pmed if pmed else float("nan")
         print(f"{name:18} {pmed:10.3f} [{pq1:7.3f}, {pq3:7.3f}] {cmed:10.3f} "
-              f"[{cq1:7.3f}, {cq3:7.3f}] {ratio:7.3f} {wins:3d}/{len(pairs):<2d} {str(sep):>5}")
+              f"[{cq1:7.3f}, {cq3:7.3f}] {ratio:7.3f} {wins:3d}/{len(pairs):<2d} {str(sep):>5}"
+              f" {verdict(pmed, pq3 - pq1, cmed, direction, bound):>10}")
     sys.exit(0 if ok else 1)
 
 
