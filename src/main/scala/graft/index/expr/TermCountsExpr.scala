@@ -21,12 +21,12 @@ object TermCountsKernel {
   def termCounts(tokens: ArrayData): ArrayData = {
     val n = tokens.numElements()
     // insertion-ordered for determinism of output row order
-    val m = new java.util.LinkedHashMap[UTF8String, Long]()
+    val m = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
     var i = 0
     while (i < n) {
       val t = tokens.getUTF8String(i)
       if (t != null) {
-        val prev = m.get(t)
+        val prev = m.get(t) // boxed: null marks a first occurrence
         // clone: keys must not alias a reusable input buffer
         if (prev == null) m.put(t.clone(), 1L) else m.put(t, prev + 1L)
       }

@@ -9,10 +9,3 @@ final case class SourceFile(
   /** Unique docId convention (SURVEY.md §1.1). */
   def docId: String = s"$repo:$path@$commit"
 }
-
-final case class QueryRow(qid: String, query: String)
-
-final case class QrelRow(qid: String, docId: String, grade: Int)
-
-/** Global scoring statistics (reference I2/I3: benchmark/on_bm25s.py:116-121). */
-final case class IndexStats(numDocs: Long, avgdl: Double, numTokens: Long)

@@ -105,6 +105,12 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   *    candidates then merge through the same heap aggregate. The analogue of
   *    PISA's `block_max_maxscore` (benchmark/on_pisa.py:51,98-100).
   *
+  * Every kernel-backed entry point — `searchWand`, `searchWandWeighted`
+  * and `Rm3.searchIndexed` — takes ONE route ([[route]]): a single probe,
+  * doc-filter resolution with its over-bound fallback, driver-held query
+  * chunks through the kernels, and a finish that stays lazy for an
+  * unfiltered single chunk and spills for a filtered or over-chunk batch.
+  *
   * Query semantics pinned by the reference (benchmark/on_bm25s.py:131-150):
   * duplicate query tokens contribute once per occurrence (qtf multiplier);
   * OOV query terms contribute 0; queries whose tokens are all stopwords /
@@ -115,8 +121,11 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   */
 object QueryEngine {
 
+  /** Tokenized query chunk on the driver: (qid, [(term, weight)]) per query. */
+  private[graft] type QueryArr = Array[(String, Array[(String, Double)])]
+
   /** Tokenized, term-frequency-weighted queries: (qid, term, qtf). */
-  private def queryTerms(index: BM25Index, queries: DataFrame): DataFrame =
+  private[query] def queryTerms(index: BM25Index, queries: DataFrame): DataFrame =
     queries
       .select(col("qid"),
         explode(Tokenizer.tokens(col("query"), index.tokenPattern, index.stem))
@@ -196,58 +205,37 @@ object QueryEngine {
     spark.conf.getOption("spark.graft.broadcastHitsMaxRows")
       .map(_.toLong).getOrElse(1L << 20)
 
-  /** Finish: grouped bounded-heap top-k, rank assignment, docId resolution.
-    * `nHitsUpperBound` = nQueries × k, known cheaply by both callers — gates
-    * the docId-resolution join strategy.
+  /** Finish shared by both paths: grouped bounded-heap top-k over the
+    * `key` column, rank assignment, then ONE docId-resolution join on the
+    * bounded hit set — broadcast up to broadcastHitsMaxRows hit rows
+    * (nQueries × k), a shuffled hash join above it (hits as the hash build
+    * side; docs is never sorted or broadcast). `qid` maps `key` to the
+    * qid string AFTER top-k selection: the exact path groups on qid
+    * itself; the kernel path groups on the 4-byte int qidx (the query's
+    * position in its chunk array) and resolves qid strings by an O(1)
+    * `element_at` into the chunk's qid array literal, bounded by
+    * wandQueryChunkRows like the chunk's query broadcast.
     */
   private def finishTopK(index: BM25Index, scored: DataFrame, k: Int,
-                         nHitsUpperBound: Long): DataFrame = {
-    val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
-    val hits = scored
-      .groupBy("qid")
-      .agg(topk(col("docIntId"), col("score")).as("hits"))
-      .select(col("qid"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(col("qid"), col("hit.docId").as("docIntId"),
+                         key: String, qid: Column, nQueries: Long): DataFrame = {
+    val hits = topHits(scored, key, k)
+      .select(col(key), posexplode(col("hits")).as(Seq("pos", "hit")))
+      .select(qid.as("qid"), col("hit.docId").as("docIntId"),
         col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
     val joined =
-      if (nHitsUpperBound <= broadcastHitsMaxRows(index.spark))
-        index.docs.join(broadcast(hits), "docIntId")
-      else // shuffled hash join, hits as the (small) hash build side
-        index.docs.join(hits.hint("shuffle_hash"), "docIntId")
-    joined.select(col("qid"), col("docId"), col("score"), col("rank"))
-  }
-
-  /** WAND-path finish over int-indexed partials (qidx = position in the
-    * chunk's query array): the heap aggregate groups on a 4-byte int
-    * instead of a per-row UTF8 string, and qid strings are resolved only
-    * AFTER top-k selection, on the bounded hit set, by an O(1)
-    * `element_at` into the chunk's qid array literal — no extra join
-    * stage. The literal is bounded by wandQueryChunkRows, the same bound
-    * that already caps the chunk's broadcast query array.
-    */
-  private def finishTopKIdx(index: BM25Index, partials: DataFrame, k: Int,
-                            qids: Array[String]): DataFrame = {
-    val spark = index.spark
-    val nHitsUpperBound = qids.length.toLong * k
-    val qidOf = element_at(typedLit(qids.toSeq), col("qidx") + 1)
-    val hits = topHitsIdx(partials, k)
-      .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(qidOf.as("qid"), col("hit.docId").as("docIntId"),
-        col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
-    val joined =
-      if (nHitsUpperBound <= broadcastHitsMaxRows(spark))
+      if (nQueries * k <= broadcastHitsMaxRows(index.spark))
         index.docs.join(broadcast(hits), "docIntId")
       else
         index.docs.join(hits.hint("shuffle_hash"), "docIntId")
     joined.select(col("qid"), col("docId"), col("score"), col("rank"))
   }
 
-  /** Grouped bounded-heap top-k over int-indexed partials: one
-    * (qidx, hits[(docId, score)]) row per query, hits in rank order.
+  /** Grouped bounded-heap top-k: one (key, hits[(docId, score)]) row per
+    * query, hits in rank order.
     */
-  private def topHitsIdx(partials: DataFrame, k: Int): DataFrame = {
+  private def topHits(scored: DataFrame, key: String, k: Int): DataFrame = {
     val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
-    partials.groupBy("qidx").agg(topk(col("docIntId"), col("score")).as("hits"))
+    scored.groupBy(key).agg(topk(col("docIntId"), col("score")).as("hits"))
   }
 
   /** One chunk's top-k hits collected to the driver BEFORE the docs join:
@@ -255,12 +243,11 @@ object QueryEngine {
     * `qArr` — ≤ nQ × k rows, no docId round trip. Destroys the chunk's
     * query broadcast (the collect has run).
     */
-  private[query] def collectTopHits(index: BM25Index,
-      qArr: Array[(String, Array[(String, Double)])], k: Int,
+  private[query] def collectTopHits(index: BM25Index, qArr: QueryArr, k: Int,
       allowedBc: Option[Broadcast[Array[Long]]]): Array[Array[(Long, Double)]] = {
     val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
     val out = Array.fill(qArr.length)(Array.empty[(Long, Double)])
-    try topHitsIdx(partials, k).collect().foreach { r =>
+    try topHits(partials, "qidx", k).collect().foreach { r =>
       out(r.getInt(0)) =
         r.getSeq[Row](1).map(h => (h.getLong(0), h.getDouble(1))).toArray
     } finally bq.destroy()
@@ -278,22 +265,15 @@ object QueryEngine {
     */
   def searchExact(index: BM25Index, queries: DataFrame, k: Int,
                   docFilter: Option[Column] = None): DataFrame =
-    searchExactImpl(index, queries, k, docFilter, tryBroadcastFilter = true)
-
-  /** `tryBroadcastFilter = false` is the over-bound fallback from
-    * `searchWand`: its `collectAllowed` already proved the filter exceeds
-    * the broadcast bound, so re-running the bounded limit-collect here
-    * would repeat a multi-million-row driver job just to rediscover None.
-    */
-  private[query] def searchExactImpl(index: BM25Index, queries: DataFrame, k: Int,
-                              docFilter: Option[Column],
-                              tryBroadcastFilter: Boolean): DataFrame =
     searchExactTerms(index, queryTerms(index, queries), k, docFilter,
-      tryBroadcastFilter)
+      tryBroadcastFilter = true)
 
   /** Exact path over pre-tokenized weighted terms (qid, term, qtf) — the
-    * declarative twin shared by the text entry point and the weighted
-    * path's over-bound filter fallback.
+    * declarative twin shared by the text entry point and the kernel
+    * route's over-bound filter fallbacks. `tryBroadcastFilter = false`:
+    * the caller's `collectAllowed` already proved the filter exceeds the
+    * broadcast bound, so re-running the bounded limit-collect here would
+    * repeat a multi-million-row driver job just to rediscover None.
     */
   private[query] def searchExactTerms(index: BM25Index, qt: DataFrame, k: Int,
                                docFilter: Option[Column],
@@ -341,7 +321,7 @@ object QueryEngine {
     }
     val scored = flt.groupBy("qid", "docIntId")
       .agg(sum("contrib").as("score"))
-    finishTopK(index, scored, k, nQueries * k)
+    finishTopK(index, scored, k, "qid", col("qid"), nQueries)
   }
 
   /** Driver-side query chunk size for the WAND path: each chunk's tokenized
@@ -383,99 +363,36 @@ object QueryEngine {
     */
   private val DeepKSaltBuckets = 4
 
-  /** Tokenized queries grouped per query: (qid, ts[(term, qtf)]). */
-  private[query] def groupedQueryTerms(index: BM25Index, queries: DataFrame): DataFrame =
-    queryTerms(index, queries)
-      .groupBy("qid").agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
+  /** Weighted terms (qid, term, qtf) grouped per query: (qid, ts[(term, qtf)]). */
+  private def groupTerms(qt: DataFrame): DataFrame =
+    qt.groupBy("qid").agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
 
   private def decodeGrouped(r: Row): (String, Array[(String, Double)]) =
     (r.getString(0),
       r.getSeq[Row](1).map(t => (t.getString(0), t.getDouble(1))).toArray)
 
-  /** Tokenized query chunks for the WAND/TAAT path (driver-side arrays).
-    * Large batches stream partition-sized chunks through the driver —
-    * toLocalIterator runs a job per partition, so size partitions to the
-    * chunk target first; driver memory stays bounded by one chunk.
-    */
-  private[graft] def queryChunks(index: BM25Index, queries: DataFrame,
-                                 nQueries: Long): Iterator[Array[(String, Array[(String, Double)])]] =
-    groupedChunks(groupedQueryTerms(index, queries), nQueries,
-      wandQueryChunkRows(index.spark))
-
-  /** As queryChunks, over an already-grouped (qid, ts[(term, weight)])
-    * frame of `nQueries` rows, `chunkRows` queries per chunk — shared by the
-    * tokenizing, weighted-query and RM3 paths.
-    */
-  private def groupedChunks(grouped: DataFrame, nQueries: Long,
-                            chunkRows: Int): Iterator[Array[(String, Array[(String, Double)])]] = {
-    if (nQueries <= chunkRows) Iterator(grouped.collect().map(decodeGrouped))
-    else {
-      val nParts = math.max(1, ((nQueries + chunkRows - 1) / chunkRows).toInt)
-      grouped.repartition(nParts).toLocalIterator().asScala
-        .map(decodeGrouped).grouped(chunkRows).map(_.toArray)
-    }
-  }
-
-  /** Filtered retrieval (searchWand): the allowed docIntId set rides into
-    * the kernels as one broadcast sorted array; membership is checked at
-    * heap/accum insertion, so WAND's threshold pruning stays exact (upper
-    * bounds are unchanged; the threshold only ever reflects allowed docs).
-    * Left = terminal result: an empty filter short-circuits, and a filter
-    * too large for the broadcast bound falls back to the declarative
-    * semi-join path (exact and distributed at any selectivity) — with the
-    * broadcast retry suppressed, since this call just proved it over-bound.
-    */
-  private[query] def resolveDocFilter(index: BM25Index, docFilter: Option[Column],
-                                      overBoundFallback: => DataFrame)
-      : Either[DataFrame, Option[Broadcast[Array[Long]]]] =
-    docFilter match {
-      case None => Right(None)
-      case Some(f) => collectAllowed(index, f) match {
-        case Some(arr) if arr.isEmpty => Left(emptyResult(index.spark))
-        case Some(arr) => Right(Some(index.spark.sparkContext.broadcast(arr)))
-        case None => Left(overBoundFallback)
-      }
-    }
-
-  /** WAND path: per-salt pruned scan (kernel chosen by depth). The common
-    * case (batch fits one chunk) is ONE optimistic limit-collect job that
-    * ships the RAW (qid, query) rows — tokenization/qtf for a bounded
-    * batch runs driver-side through the scalar twin of TokenizeExpr
-    * (behavior-identical, tested), so no per-call tokenize job or
-    * count() job exists; only over-chunk batches fall back to a counted
-    * distributed streaming pass.
+  /** WAND path: per-salt pruned scan (kernel chosen by depth) through the
+    * kernel [[route]]. The common case (batch fits one chunk) is ONE
+    * optimistic limit-collect job that ships the RAW (qid, query) rows —
+    * tokenization/qtf for a bounded batch runs driver-side through the
+    * scalar twin of TokenizeExpr (behavior-identical, tested), so no
+    * per-call tokenize job or count() job exists; only over-chunk batches
+    * fall back to a counted distributed streaming pass. A doc filter over
+    * the broadcast bound scores through the declarative semi-join path.
     */
   def searchWand(index: BM25Index, queries: DataFrame, k: Int,
-                 docFilter: Option[Column] = None): DataFrame = {
-    val spark = index.spark
-    // empty index: its postings table has no partitions, so the candidate
-    // scan's bucket/term columns would not even resolve
-    if (index.numDocs == 0) return emptyResult(spark)
-    // the doc filter is resolved only AFTER the cheap batch probes below:
-    // an empty or all-stopword batch must not pay the docs-dimension
-    // filter job, and every early return must precede broadcast creation
-    // (a broadcast minted before these returns would leak undestroyed)
-    val chunkRows = wandQueryChunkRows(spark)
-    val head = queries.select(col("qid"), col("query")).limit(chunkRows + 1).collect()
-    def exactFallback =
-      searchExactImpl(index, queries, k, docFilter, tryBroadcastFilter = false)
-    if (head.length <= chunkRows) {
-      val qArr = tokenizeRows(index, head)
-      if (qArr.isEmpty) return emptyResult(spark)
-      return resolveDocFilter(index, docFilter, exactFallback)
-        .fold(identity, searchTokenized(index, qArr, k, _))
-    }
-    resolveDocFilter(index, docFilter, exactFallback).fold(identity,
-      searchGroupedChunked(index, groupedQueryTerms(index, queries), k, _))
-  }
+                 docFilter: Option[Column] = None): DataFrame =
+    routeText(index, queries, k, docFilter, wandQueryChunkRows(index.spark))(
+      searchExactTerms(index, queryTerms(index, queries), k, docFilter,
+        tryBroadcastFilter = false),
+      (qArr, _) => qArr)
 
   /** Driver-side tokenization of a bounded (qid, query) batch through the
     * scalar twin of TokenizeExpr (behavior-identical, tested): duplicate
     * qid rows merge their token multisets (parity with the distributed
     * groupBy(qid, term) path), and all-stopword/empty queries are dropped.
     */
-  private[query] def tokenizeRows(index: BM25Index,
-      rows: Array[Row]): Array[(String, Array[(String, Double)])] =
+  private[query] def tokenizeRows(index: BM25Index, rows: Array[Row]): QueryArr =
     rows.map(r => (r.getString(0), Option(r.getString(1)).getOrElse("")))
       .groupBy(_._1).iterator
       .map { case (qid, rs) =>
@@ -489,102 +406,120 @@ object QueryEngine {
       .filter(_._2.nonEmpty)
       .toArray
 
-  /** Small-batch WAND/TAAT search over driver-held tokenized queries
-    * (qid, [(term, weight)]) with the doc filter already resolved — the
-    * body searchWand, searchWandWeighted and Rm3 share. Queries without
-    * terms produce no rows. An unfiltered result stays lazy; a filtered
-    * one is materialized so both broadcasts (allowed set + query array)
-    * are destroyed here.
+  /** [[route]] over a (qid, query) text batch: the probe ships raw rows
+    * that [[tokenizeRows]] tokenizes on the driver; an over-chunk batch
+    * streams the distributed tokenization instead.
     */
-  private[graft] def searchTokenized(index: BM25Index,
-      qArr: Array[(String, Array[(String, Double)])], k: Int,
-      allowedBc: Option[Broadcast[Array[Long]]]): DataFrame = {
-    val live = qArr.filter(_._2.nonEmpty)
-    if (live.isEmpty) {
-      allowedBc.foreach(_.destroy())
-      return emptyResult(index.spark)
-    }
-    val (finished, bq) = finishChunk(index, live, k, allowedBc)
-    allowedBc match {
-      case Some(bc) => finishEagerDestroy(index, finished, Seq(bc, bq))
-      case None => finished
-    }
-  }
+  private[query] def routeText(index: BM25Index, queries: DataFrame, k: Int,
+      docFilter: Option[Column], chunkRows: Int)(
+      overBound: => DataFrame,
+      step: (QueryArr, Option[Broadcast[Array[Long]]]) => QueryArr): DataFrame =
+    route(index, k, docFilter, queries.select(col("qid"), col("query")), chunkRows)(
+      tokenizeRows(index, _), groupTerms(queryTerms(index, queries)),
+      overBound, step)
 
-  /** One chunk's lazy finished top-k plus its query-array broadcast, which
-    * the caller destroys once the result is materialized.
+  /** The one route of every kernel-backed entry point (searchWand,
+    * searchWandWeighted, Rm3.searchIndexed), in this order:
+    *
+    *  1. An empty index returns at once: its postings table has no
+    *     partitions, so the candidate scan's columns would not resolve.
+    *  2. ONE optimistic probe collects up to `chunkRows + 1` rows of
+    *     `probe`. A batch that fits is one chunk, decoded on the driver by
+    *     `decode`; if it has no query with terms it returns here, before
+    *     any filter job or broadcast.
+    *  3. The doc filter resolves: an allowed set within
+    *     `filterMaxBroadcastDocs` becomes one broadcast sorted array,
+    *     checked at kernel heap/accumulator insertion (upper bounds are
+    *     unchanged and the threshold only reflects allowed docs, so WAND
+    *     pruning stays exact); an empty one returns an empty result; an
+    *     over-bound one returns `overBound`, the declarative semi-join
+    *     path (exact and distributed at any selectivity).
+    *  4. Each chunk runs `step` (the identity, or RM3's pass 1 and
+    *     expansion) and then the kernel and finish. An unfiltered single
+    *     chunk stays lazy. A filtered or over-chunk batch spills its
+    *     finished rows ([[spillChunks]]), so every broadcast is destroyed
+    *     before this returns (an allowed set is up to ~16 MiB; left to
+    *     ContextCleaner GC, a long-lived session of repeated filtered
+    *     queries would pin them); an over-chunk batch streams its chunks from
+    *     `grouped` (qid, ts[(term, weight)]), persisted once for the count
+    *     and the stream.
+    *  5. The allowed-set broadcast is destroyed in a finally, also when a
+    *     chunk fails (say, a negative weight's `require`).
     */
-  private[query] def finishChunk(index: BM25Index,
-      qArr: Array[(String, Array[(String, Double)])], k: Int,
-      allowedBc: Option[Broadcast[Array[Long]]])
-      : (DataFrame, Broadcast[Array[(String, Array[(String, Double)])]]) = {
-    val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
-    (finishTopKIdx(index, partials, k, qArr.map(_._1)), bq)
-  }
-
-  /** Eagerly materialize a small-batch finish into the chunk spill dir and
-    * destroy the broadcasts it referenced. Used by the FILTERED small-batch
-    * paths only: the plain path stays fully lazy, but an allowed-set
-    * broadcast is up to ~16 MiB per call — relying on ContextCleaner GC
-    * would pin them across a long-lived session of repeated filtered
-    * queries. Result size is bounded by nQueries × k.
-    */
-  private def finishEagerDestroy(index: BM25Index, finished: DataFrame,
-      toDestroy: Seq[org.apache.spark.broadcast.Broadcast[_]]): DataFrame = {
+  private def route(index: BM25Index, k: Int, docFilter: Option[Column],
+      probe: DataFrame, chunkRows: Int)(
+      decode: Array[Row] => QueryArr, grouped: => DataFrame,
+      overBound: => DataFrame,
+      step: (QueryArr, Option[Broadcast[Array[Long]]]) => QueryArr): DataFrame = {
     val spark = index.spark
-    val dir = s"${chunkSpillRoot(index)}/${java.util.UUID.randomUUID()}"
-    graft.util.TempFs.registerForCleanup(spark, dir)
-    // destroy in a finally: a failed spill write (disk full, task failure)
-    // must still release the broadcasts — pinning them until ContextCleaner
-    // GC is the exact leak this method exists to avoid
-    try finished.write.parquet(dir)
-    finally toDestroy.foreach(_.destroy())
-    spark.read.parquet(dir)
+    if (index.numDocs == 0) return emptyResult(spark)
+    val head = probe.limit(chunkRows + 1).collect()
+    val single = head.length <= chunkRows
+    val qArr: QueryArr = if (single) decode(head).filter(_._2.nonEmpty) else Array.empty
+    if (single && qArr.isEmpty) return emptyResult(spark)
+    val allowedBc = docFilter match {
+      case None => None
+      case Some(f) => collectAllowed(index, f) match {
+        case Some(arr) if arr.isEmpty => return emptyResult(spark)
+        case Some(arr) => Some(spark.sparkContext.broadcast(arr))
+        case None => return overBound
+      }
+    }
+    def run(chunk: QueryArr): Option[(DataFrame, Broadcast[_])] = {
+      val live = step(chunk, allowedBc).filter(_._2.nonEmpty)
+      if (live.isEmpty) None
+      else {
+        val (partials, bq) = wandPartialsWithHandle(index, live, k, allowedBc)
+        val qidOf = element_at(typedLit(live.map(_._1).toSeq), col("qidx") + 1)
+        Some((finishTopK(index, partials, k, "qidx", qidOf, live.length), bq))
+      }
+    }
+    try {
+      if (single && allowedBc.isEmpty) run(qArr).fold(emptyResult(spark))(_._1)
+      else if (single) spillChunks(index, Iterator(qArr))(run)
+      else {
+        val g = grouped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try spillChunks(index, streamChunks(g, chunkRows))(run)
+        finally g.unpersist()
+      }
+    } finally allowedBc.foreach(_.destroy())
   }
 
-  /** Large batch: count once, then stream partition-sized chunks through
-    * the driver (see [[spillChunks]]).
+  /** Streams a grouped (qid, ts[(term, weight)]) frame through the driver
+    * in chunks of at most `chunkRows` queries with terms. toLocalIterator
+    * runs a job per partition, so one count sizes the partitions to the
+    * chunk target first; driver memory stays bounded by one chunk.
     */
-  private def searchGroupedChunked(index: BM25Index, grouped: DataFrame, k: Int,
-      allowedBc: Option[Broadcast[Array[Long]]]): DataFrame =
-    spillChunks(index,
-      streamChunks(grouped, wandQueryChunkRows(index.spark)), allowedBc)(
-      qArr => Some(finishChunk(index, qArr, k, allowedBc)))
+  private def streamChunks(grouped: DataFrame, chunkRows: Int): Iterator[QueryArr] = {
+    val nParts = math.max(1L, (grouped.count() + chunkRows - 1) / chunkRows).toInt
+    grouped.repartition(nParts).toLocalIterator().asScala
+      .map(decodeGrouped).filter(_._2.nonEmpty)
+      .grouped(chunkRows).map(_.toArray)
+  }
 
-  /** Counts `grouped` once, then streams its non-empty query chunks of at
-    * most `chunkRows` queries.
+  /** Runs each chunk as its OWN job whose finished (≤ nChunkQueries × k)
+    * rows land in a temp parquet, destroying the chunk's query-array
+    * broadcast before the next chunk is collected (`run` gives None for a
+    * chunk with no rows). Chunks partition the QUERY set, so each chunk's
+    * results are final on their own. A lazy union of chunk DataFrames would
+    * instead keep EVERY chunk's driver array + executor broadcast resident
+    * for the whole job; this way driver and executor memory really are
+    * bounded by one chunk. Temp files are removed at JVM exit (the result
+    * DataFrame reads them lazily until then).
     */
-  private[query] def streamChunks(grouped: DataFrame, chunkRows: Int)
-      : Iterator[Array[(String, Array[(String, Double)])]] =
-    groupedChunks(grouped, grouped.count(), chunkRows)
-      .map(_.filter(_._2.nonEmpty)).filter(_.nonEmpty)
-
-  /** Over-chunk batches. Chunks partition the QUERY set, so each chunk's
-    * results are final on their own: every chunk runs `run` (kernel +
-    * finish, lazily; None = no rows) as its OWN job whose finished
-    * (≤ nChunkQueries × k) rows land in a temp parquet, and the chunk's
-    * query-array broadcast is destroyed before the next chunk is
-    * collected. A lazy union of chunk DataFrames would instead keep EVERY
-    * chunk's driver array + executor broadcast resident for the whole
-    * job; this way driver and executor memory really are bounded by one
-    * chunk. The allowed-set broadcast is destroyed once every chunk has
-    * run. Temp files are removed at JVM exit (the result DataFrame reads
-    * them lazily until then).
-    */
-  private[query] def spillChunks[C](index: BM25Index, chunks: Iterator[C],
-      allowedBc: Option[Broadcast[Array[Long]]])(
-      run: C => Option[(DataFrame, Broadcast[_])]): DataFrame = {
+  private def spillChunks(index: BM25Index, chunks: Iterator[QueryArr])(
+      run: QueryArr => Option[(DataFrame, Broadcast[_])]): DataFrame = {
     val spark = index.spark
     val tmp = s"${chunkSpillRoot(index)}/${java.util.UUID.randomUUID()}"
     graft.util.TempFs.registerForCleanup(spark, tmp) // removed at JVM exit
     val chunkDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    try chunks.foreach { c =>
+    chunks.foreach { c =>
       run(c).foreach { case (finished, bq) =>
         val dir = s"$tmp/chunk-${chunkDirs.size}"
         try finished.write.parquet(dir) finally bq.destroy()
         chunkDirs += dir
       }
-    } finally allowedBc.foreach(_.destroy())
+    }
     if (chunkDirs.isEmpty) emptyResult(spark)
     else spark.read.parquet(chunkDirs.toSeq: _*)
   }
@@ -597,49 +532,29 @@ object QueryEngine {
     * maxImpact × weight being an UPPER bound of a term's contribution,
     * which only holds for weight ≥ 0 (a negative weight could silently
     * drop valid results under WAND while TAAT stayed exact). Scoring is
-    * Σ weight × impact through the same WAND/TAAT kernels and finish as
+    * Σ weight × impact through the same kernel [[route]] as
     * [[searchWand]]; terms absent from the index contribute 0 (OOV
     * semantics unchanged). `docFilter` composes exactly as in
-    * [[searchWand]] (broadcast allowed set at kernel insertion; over-bound
-    * filters fall back to the declarative semi-join path over the same
-    * weighted terms) — so RM3/boosted queries can run within a doc subset.
+    * [[searchWand]]: over-bound filters score the SAME weighted terms
+    * through the declarative semi-join path — so RM3/boosted queries can
+    * run within a doc subset.
     */
   def searchWandWeighted(index: BM25Index, weighted: DataFrame, k: Int,
                          docFilter: Option[Column] = None): DataFrame = {
-    val spark = index.spark
-    if (index.numDocs == 0) return emptyResult(spark)
     val wt = weighted.select(col("qid"), col("term").cast("string").as("term"),
       col("qtf").cast("double").as("qtf"))
-    val grouped = wt
-      .groupBy("qid")
-      .agg(collect_list(struct(col("term"), col("qtf"))).as("ts"))
-    val chunkRows = wandQueryChunkRows(spark)
-    val head = grouped.limit(chunkRows + 1).collect()
-    // over-bound filters score through the SAME weighted terms declaratively
-    def exactFallback =
-      searchExactTerms(index, wt, k, docFilter, tryBroadcastFilter = false)
-    if (head.length <= chunkRows) {
-      val qArr = head.map(decodeGrouped).filter(_._2.nonEmpty)
-      if (qArr.isEmpty) return emptyResult(spark)
-      return resolveDocFilter(index, docFilter, exactFallback)
-        .fold(identity, searchTokenized(index, qArr, k, _))
-    }
-    resolveDocFilter(index, docFilter, exactFallback).fold(identity, { allowedBc =>
-      // over-chunk: the probe above already paid one full aggregation of
-      // `grouped`; persist so the count and chunk stream inside reuse it
-      // (the chunk jobs all run eagerly in there, so the unpersist is safe)
-      grouped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try searchGroupedChunked(index, grouped, k, allowedBc)
-      finally grouped.unpersist()
-    })
+    val grouped = groupTerms(wt)
+    route(index, k, docFilter, grouped, wandQueryChunkRows(index.spark))(
+      _.map(decodeGrouped), grouped,
+      searchExactTerms(index, wt, k, docFilter, tryBroadcastFilter = false),
+      (qArr, _) => qArr)
   }
 
-  /** One chunk's WAND partial candidates: (qid, docIntId, score), ≤ k per
-    * (query, salt) before the global heap merge in finishTopKIdx.
+  /** One chunk's WAND partial candidates: (qidx, docIntId, score), ≤ k per
+    * (query, salt) before the global heap merge in finishTopK.
     */
-  private[graft] def wandPartials(index: BM25Index,
-                           qArr: Array[(String, Array[(String, Double)])],
-                           k: Int): DataFrame =
+  private[graft] def wandPartials(index: BM25Index, qArr: QueryArr,
+                                  k: Int): DataFrame =
     wandPartialsWithHandle(index, qArr, k, None)._1
 
   /** As wandPartials, but also returns the chunk's query-array broadcast so
@@ -647,11 +562,8 @@ object QueryEngine {
     * `allowedBc`: optional broadcast sorted allowed-docIntId array (query-
     * time doc filter) checked at kernel insertion.
     */
-  private def wandPartialsWithHandle(index: BM25Index,
-                           qArr: Array[(String, Array[(String, Double)])],
-                           k: Int,
-                           allowedBc: Option[Broadcast[Array[Long]]]): (DataFrame,
-                             Broadcast[Array[(String, Array[(String, Double)])]]) = {
+  private def wandPartialsWithHandle(index: BM25Index, qArr: QueryArr, k: Int,
+      allowedBc: Option[Broadcast[Array[Long]]]): (DataFrame, Broadcast[QueryArr]) = {
     val spark = index.spark
     // DAAT correctness precondition (see searchWandWeighted scaladoc);
     // O(batch terms) on the driver, negligible next to the kernel job
@@ -708,14 +620,14 @@ object QueryEngine {
     // each (qid, docId) pair is emitted AT MOST ONCE per task — drains
     // happen only at (salt, qgrp) group boundaries, where a doc has been
     // scored exactly once for a query, so the drain merely re-partitions
-    // the emission. finishTopKIdx's heap has NO docId dedup; a mid-group
+    // the emission. finishTopK's heap has NO docId dedup; a mid-group
     // drain (same doc scored before and after) would surface duplicates.
     val maxHeapRows = spark.conf.getOption("spark.graft.taskHeapMaxRows")
       .map(_.toLong).getOrElse(4L << 20)
 
     // Emission rows carry qidx (the query's position in the chunk array) —
     // a 4-byte int groupBy/shuffle key instead of a per-row UTF8 string;
-    // finishTopKIdx resolves qid strings only on the post-top-k hit set.
+    // finishTopK resolves qid strings only on the post-top-k hit set.
     implicit val enc = Encoders.product[(Int, Long, Double)]
     val nQ = qArr.length
     val out = cand.mapPartitions { rows =>
@@ -794,10 +706,10 @@ object QueryEngine {
     }
   }
 
-  /** Root for over-chunk batch result spills. MUST be visible to every
-    * executor AND the driver — on a multi-node cluster a driver-local
-    * temp dir would scatter task output across executor-local disks and
-    * the driver-side read-back would silently miss rows. Default: a
+  /** Root for filtered and over-chunk batch result spills. MUST be
+    * visible to every executor AND the driver — on a multi-node cluster a
+    * driver-local temp dir would scatter task output across executor-local
+    * disks and the driver-side read-back would silently miss rows. Default: a
     * `_tmp-query` dir under the index's own filesystem (wherever the
     * index lives, all nodes can read/write it); `spark.graft.chunkSpillDir`
     * overrides — REQUIRED when the index location is read-only (published

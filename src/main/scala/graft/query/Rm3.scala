@@ -24,13 +24,16 @@ import graft.tokenize.Tokenizer
   *
   * Scale shape: [[searchIndexed]] runs the middle of RM3 on the driver,
   * one query chunk at a time — the shape of Anserini's in-process RM3
-  * reranker. A chunk's pass-1 top-fbDocs hits (≤ chunk × fbDocs rows) are
-  * collected before any docId resolution, the STORED doc vectors of those
-  * docs come back in one salt-partition + docIntId-pruned scan (the
-  * Lucene `--storeDocvectors` design, benchmark/on_pyserini.py:245-253),
-  * the relevance model is plain Scala ([[expandScalar]], the scalar twin
-  * of [[expandWeights]]), and pass 2 runs the weighted query arrays
-  * through the ordinary engine kernels. Driver memory is bounded by the
+  * reranker — as the per-chunk step of the engine's one kernel route
+  * (QueryEngine.route). A chunk's pass-1 top-fbDocs hits (≤ chunk × fbDocs
+  * rows) are collected before any docId resolution, the STORED doc
+  * vectors of those docs come back in one salt-partition + docIntId-pruned
+  * scan (the Lucene `--storeDocvectors` design,
+  * benchmark/on_pyserini.py:245-253), the relevance model is plain Scala
+  * ([[expandScalar]], the scalar twin of [[expandWeights]]), and pass 2 is
+  * the route's own kernel and finish over the weighted query arrays. The
+  * probe, doc filter, chunk streaming and spills are the route's, shared
+  * with searchWand and searchWandWeighted. Driver memory is bounded by the
   * chunk (see [[chunkQueries]]); no stage grows with corpus size beyond
   * the retrieval passes themselves. [[expandWeights]] and
   * [[feedbackVectors]] stay the declarative twin: the composed driver
@@ -292,10 +295,9 @@ object Rm3 {
     * RM3-weighted query arrays, ready for pass 2. Pass 1 is collected
     * eagerly; only positively-scored feedback docs are fetched.
     */
-  private def expandChunk(index: BM25Index,
-      qArr: Array[(String, Array[(String, Double)])],
+  private def expandChunk(index: BM25Index, qArr: QueryEngine.QueryArr,
       fbDocs: Int, fbTerms: Int, alpha: Double,
-      allowedBc: Option[Broadcast[Array[Long]]]): Array[(String, Array[(String, Double)])] = {
+      allowedBc: Option[Broadcast[Array[Long]]]): QueryEngine.QueryArr = {
     val hits = QueryEngine.collectTopHits(index, qArr, fbDocs, allowedBc)
     val vectors = fetchVectors(index,
       hits.flatMap(_.collect { case (d, s) if s > 0.0 => d }).distinct)
@@ -309,15 +311,15 @@ object Rm3 {
     * Requires an index built with `storeDocVectors` (the default); for
     * legacy indexes without doc vectors use [[searchIndexedRetokenize]].
     *
-    * Per query chunk of [[chunkQueries]] queries (one chunk for any
-    * interactive batch): pass 1 runs the WAND/TAAT kernels at depth
+    * The batch takes the engine's one kernel route (the same probe, doc
+    * filter resolution, chunking and finish as
+    * [[QueryEngine.searchWandWeighted]]) in chunks of [[chunkQueries]]
+    * queries (one chunk for any interactive batch). RM3's middle is the
+    * route's per-chunk step: pass 1 runs the WAND/TAAT kernels at depth
     * `fbDocs` and collects the hits before the docs join, one pruned
-    * docvecs scan collects their vectors ([[fetchVectors]]), the
-    * expansion runs on the driver ([[expandScalar]]), and pass 2 runs the
-    * weighted arrays through the same kernels and finish as
-    * [[QueryEngine.searchWandWeighted]]. Over-chunk batches stream their
-    * chunks and spill each chunk's finished rows like the over-chunk
-    * WAND path.
+    * docvecs scan collects their vectors ([[fetchVectors]]) and the
+    * expansion runs on the driver ([[expandScalar]]); pass 2 is the
+    * route's own kernel and finish over the weighted arrays.
     *
     * `docFilter` applies to BOTH passes (Lucene filter+feedback semantics:
     * the relevance model is estimated from allowed docs only, and the
@@ -334,40 +336,18 @@ object Rm3 {
     require(fbDocs > 0, "fbDocs must be positive")
     require(fbTerms > 0, "fbTerms must be positive")
     require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1]: $alpha")
-    val spark = index.spark
-    if (index.numDocs == 0) return QueryEngine.emptyResult(spark)
     // checked up front: the driver route touches docvecs only for batches
     // with positively-scored feedback
-    require(index.hasDocVectors, s"index at ${index.indexDir} was built " +
-      "without doc vectors; use searchIndexedRetokenize")
-    val chunk = chunkQueries(spark, fbDocs)
-    if (chunk == 0) return searchIndexedPlan(index, queries, k, fbDocs, fbTerms,
-      alpha, docFilter, filterOverBound = false)
-    def overBound = searchIndexedPlan(index, queries, k, fbDocs, fbTerms,
-      alpha, docFilter, filterOverBound = true)
-    // as in searchWand: the doc filter is resolved only after the batch
-    // probe, so an empty or all-stopword batch pays no filter job
-    val head = queries.select(col("qid"), col("query")).limit(chunk + 1).collect()
-    if (head.length <= chunk) {
-      val qArr = QueryEngine.tokenizeRows(index, head)
-      if (qArr.isEmpty) return QueryEngine.emptyResult(spark)
-      return QueryEngine.resolveDocFilter(index, docFilter, overBound)
-        .fold(identity, { allowedBc =>
-          val weighted = expandChunk(index, qArr, fbDocs, fbTerms, alpha, allowedBc)
-          QueryEngine.searchTokenized(index, weighted, k, allowedBc)
-        })
-    }
-    QueryEngine.resolveDocFilter(index, docFilter, overBound)
-      .fold(identity, { allowedBc =>
-        val chunks = QueryEngine.streamChunks(
-          QueryEngine.groupedQueryTerms(index, queries), chunk)
-        QueryEngine.spillChunks(index, chunks, allowedBc) { qArr =>
-          val weighted = expandChunk(index, qArr, fbDocs, fbTerms, alpha, allowedBc)
-            .filter(_._2.nonEmpty)
-          if (weighted.isEmpty) None
-          else Some(QueryEngine.finishChunk(index, weighted, k, allowedBc))
-        }
-      })
+    require(index.numDocs == 0 || index.hasDocVectors, s"index at " +
+      s"${index.indexDir} was built without doc vectors; use " +
+      "searchIndexedRetokenize")
+    def plan(filterOverBound: Boolean) = searchIndexedPlan(index, queries, k,
+      fbDocs, fbTerms, alpha, docFilter, filterOverBound)
+    val chunk = chunkQueries(index.spark, fbDocs)
+    if (chunk == 0) plan(filterOverBound = false)
+    else QueryEngine.routeText(index, queries, k, docFilter, chunk)(
+      plan(filterOverBound = true),
+      expandChunk(index, _, fbDocs, fbTerms, alpha, _))
   }
 
   /** The declarative RM3 plan: pass 1 → [[feedbackVectors]] →
@@ -380,15 +360,16 @@ object Rm3 {
                                 docFilter: Option[org.apache.spark.sql.Column],
                                 filterOverBound: Boolean): DataFrame = {
     val pass1 =
-      if (filterOverBound) QueryEngine.searchExactImpl(index, queries, fbDocs,
-        docFilter, tryBroadcastFilter = false)
+      if (filterOverBound) QueryEngine.searchExactTerms(index,
+        QueryEngine.queryTerms(index, queries), fbDocs, docFilter,
+        tryBroadcastFilter = false)
       else QueryEngine.searchWand(index, queries, fbDocs, docFilter)
     val fb = pass1.select(col("qid"), col("docId"), col("score"))
     fb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (docTf, dl) = feedbackVectors(index, fb.select("docId"))
-      val weights = expandWeights(fb, docTf, dl, queryTf(index, queries),
-        fbTerms, alpha, docCol = "docId")
+      val weights = expandWeights(fb, docTf, dl,
+        QueryEngine.queryTerms(index, queries), fbTerms, alpha, docCol = "docId")
       // the weighted WAND pass collects its terms eagerly, so its result no
       // longer references fb; the exact pass's result recomputes fb if it
       // is read after the unpersist
@@ -397,12 +378,6 @@ object Rm3 {
       else QueryEngine.searchWandWeighted(index, weights, k, docFilter)
     } finally fb.unpersist()
   }
-
-  private def queryTf(index: BM25Index, queries: DataFrame): DataFrame =
-    queries.select(col("qid"),
-      explode(Tokenizer.tokens(col("query"), index.tokenPattern, index.stem))
-        .as("term"))
-      .groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
 
   /** [[searchIndexed]] for indexes built WITHOUT stored doc vectors: the
     * relevance model re-tokenizes the feedback docs out of `corpus`
@@ -427,8 +402,8 @@ object Rm3 {
       try {
         val docTf = toks.groupBy("docId", "term").agg(count(lit(1)).as("tf"))
         val dlf = toks.groupBy("docId").agg(count(lit(1)).as("dl"))
-        val weights = expandWeights(fb, docTf, dlf, queryTf(index, queries),
-          fbTerms, alpha, docCol = "docId")
+        val weights = expandWeights(fb, docTf, dlf,
+          QueryEngine.queryTerms(index, queries), fbTerms, alpha, docCol = "docId")
         // the weighted pass collects/spills eagerly, so the returned frame
         // no longer references fb/toks — safe to unpersist in finally
         QueryEngine.searchWandWeighted(index, weights, k)

@@ -10,6 +10,37 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs started while `body` runs. A marker job before and after
+    * orders the count against the asynchronous listener bus: once the
+    * closing marker's start is delivered, so is every earlier job's.
+    */
+  def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val markers = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.marker") != null))
+          markers.put(started.get)
+        else started.incrementAndGet()
+    }
+    def marker(): Int = {
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      val n = markers.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(n != null, "marker job start never delivered")
+      n
+    }
+    sc.addSparkListener(listener)
+    try {
+      val before = marker()
+      body
+      marker() - before
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkTestBase {

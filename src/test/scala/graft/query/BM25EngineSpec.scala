@@ -137,7 +137,8 @@ class BM25EngineSpec extends SparkTestBase {
   test("chunked large-batch path matches the single-collect path") {
     // force the toLocalIterator streaming path (chunk=3 queries) and the
     // per-task early heap drain (taskHeapMaxRows=1): both must be invisible
-    // in the results — finishTopK re-merges early-drained duplicates
+    // in the results — the WAND finish's per-query top-k heap merges the
+    // early-drained partial heaps
     val idx = new BM25Index(spark, indexDir)
     val base = collectResults(QueryEngine.searchWand(idx, queriesDf, k))
     try {
@@ -195,7 +196,7 @@ class BM25EngineSpec extends SparkTestBase {
     val kk = 7
     try {
       spark.conf.set("spark.graft.scoreAllMinK", "1") // force deep-k mode
-      val qArr = QueryEngine.queryChunks(idx, queriesDf, queries.size.toLong).next()
+      val qArr = QueryEngine.tokenizeRows(idx, queriesDf.collect())
       val perQid = QueryEngine.wandPartials(idx, qArr, kk)
         .groupBy("qidx").count().collect()
       perQid.foreach { r =>
@@ -203,6 +204,22 @@ class BM25EngineSpec extends SparkTestBase {
           s"qidx ${r.getInt(0)}: ${r.getLong(1)} partials > bound")
       }
     } finally spark.conf.unset("spark.graft.scoreAllMinK")
+  }
+
+  test("warm small-batch searchWand job count, unfiltered and filtered") {
+    // both benchmark workloads take this leg: one limit-collect probe, the
+    // kernel and the finish — no count() and no second probe. The filtered
+    // leg adds the allowed-set collect and the spill of its finished rows.
+    import org.apache.spark.sql.functions._
+    val idx = new BM25Index(spark, indexDir)
+    val pred = Some(pmod(xxhash64(col("docId")), lit(2)) === 0)
+    // the counts measured before the kernel entry points shared one route
+    for ((flt, maxJobs) <- Seq((None, 5), (pred, 8))) {
+      def call() = QueryEngine.searchWand(idx, queriesDf, k, flt).collect()
+      call() // first use opens the index tables and caches the docs dimension
+      val jobs = jobsIn(call())
+      assert(jobs <= maxJobs, s"filter=${flt.isDefined}: $jobs jobs")
+    }
   }
 
   test("all-stopword and all-OOV queries yield no rows") {

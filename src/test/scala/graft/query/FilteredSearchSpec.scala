@@ -11,8 +11,8 @@ import graft.util.SynthCorpus
   * DERIVED from the unfiltered engine — because stats don't move, the
   * filtered top-k must equal the allowed-subset prefix of a deep
   * unfiltered ranking, doc for doc and score for score. Covered paths:
-  * kernel broadcast set (DAAT + TAAT), over-bound semi-join fallback,
-  * empty filter.
+  * kernel broadcast set (DAAT + TAAT), single-chunk and over-chunk
+  * batches, over-bound semi-join fallback, empty filter.
   */
 class FilteredSearchSpec extends SparkTestBase {
 
@@ -143,6 +143,24 @@ class FilteredSearchSpec extends SparkTestBase {
         k, Some(pred))),
       derivedTruth(idx, allowedSet(idx)))
     finally spark.conf.unset("spark.graft.filterMaxBroadcastDocs")
+  }
+
+  test("filtered over-chunk batches equal the filtered single-chunk result") {
+    // two queries per chunk streams every batch here through the chunked
+    // spill with the allowed-set broadcast shared by all chunks
+    val idx = new BM25Index(spark, indexDir)
+    def run() = (
+      collectResults(QueryEngine.searchWand(idx, queriesDf, k, Some(pred))),
+      collectResults(QueryEngine.searchWandWeighted(idx, weightedQueries(idx),
+        k, Some(pred))))
+    val (wand, weighted) = run()
+    assert(wand.size > 2, s"too few results for two-query chunks: ${wand.keySet}")
+    spark.conf.set("spark.graft.wandQueryChunkRows", "2")
+    try {
+      val (chunkedWand, chunkedWeighted) = run()
+      checkEqual(chunkedWand, wand)
+      checkEqual(chunkedWeighted, weighted)
+    } finally spark.conf.unset("spark.graft.wandQueryChunkRows")
   }
 
   test("filtered RM3 equals the hand-composed filtered two-pass pipeline") {
