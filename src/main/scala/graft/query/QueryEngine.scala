@@ -101,8 +101,8 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   *
   *  - `searchWand`: per-(term,salt) posting runs are repartitioned by salt
   *    (contiguous doc ranges), and each task runs document-at-a-time WAND
-  *    with block-max skipping and a bounded heap per query; per-salt top-k
-  *    candidates then merge through the same heap aggregate. The analogue of
+  *    with block-max skipping and a bounded heap per query; each task's
+  *    sorted per-query lists then k-way merge per query. The analogue of
   *    PISA's `block_max_maxscore` (benchmark/on_pisa.py:51,98-100).
   *
   * Every kernel-backed entry point — `searchWand`, `searchWandWeighted`
@@ -205,23 +205,17 @@ object QueryEngine {
     spark.conf.getOption("spark.graft.broadcastHitsMaxRows")
       .map(_.toLong).getOrElse(1L << 20)
 
-  /** Finish shared by both paths: grouped bounded-heap top-k over the
-    * `key` column, rank assignment, then ONE docId-resolution join on the
-    * bounded hit set — broadcast up to broadcastHitsMaxRows hit rows
-    * (nQueries × k), a shuffled hash join above it (hits as the hash build
-    * side; docs is never sorted or broadcast). `qid` maps `key` to the
-    * qid string AFTER top-k selection: the exact path groups on qid
-    * itself; the kernel path groups on the 4-byte int qidx (the query's
-    * position in its chunk array) and resolves qid strings by an O(1)
-    * `element_at` into the chunk's qid array literal, bounded by
-    * wandQueryChunkRows like the chunk's query broadcast.
+  /** The docId-resolution finish shared by both paths: ONE join of the
+    * ranked hit set (qid, docIntId, score, rank) — at most nQueries × k
+    * rows — with the docs dimension. Up to broadcastHitsMaxRows hit rows
+    * the hits are broadcast; above it the join is a shuffled hash join
+    * (hits as the hash build side; docs is never sorted or broadcast). The
+    * exact path ranks with the grouped [[topHits]] udaf; the kernel path
+    * with [[mergePartials]], whose qid strings come from an O(1)
+    * `element_at` into the chunk's qid array literal after the merge.
     */
-  private def finishTopK(index: BM25Index, scored: DataFrame, k: Int,
-                         key: String, qid: Column, nQueries: Long): DataFrame = {
-    val hits = topHits(scored, key, k)
-      .select(col(key), posexplode(col("hits")).as(Seq("pos", "hit")))
-      .select(qid.as("qid"), col("hit.docId").as("docIntId"),
-        col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
+  private def finishTopK(index: BM25Index, hits: DataFrame, k: Int,
+                         nQueries: Long): DataFrame = {
     val joined =
       if (nQueries * k <= broadcastHitsMaxRows(index.spark))
         index.docs.join(broadcast(hits), "docIntId")
@@ -230,28 +224,65 @@ object QueryEngine {
     joined.select(col("qid"), col("docId"), col("score"), col("rank"))
   }
 
-  /** Grouped bounded-heap top-k: one (key, hits[(docId, score)]) row per
-    * query, hits in rank order.
+  /** The exact path's ranking: grouped bounded-heap top-k per qid through
+    * the [[TopKAggregator]] udaf, exploded to (qid, docIntId, score, rank).
     */
-  private def topHits(scored: DataFrame, key: String, k: Int): DataFrame = {
+  private def topHits(scored: DataFrame, k: Int): DataFrame = {
     val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
-    scored.groupBy(key).agg(topk(col("docIntId"), col("score")).as("hits"))
+    scored.groupBy("qid").agg(topk(col("docIntId"), col("score")).as("hits"))
+      .select(col("qid"), posexplode(col("hits")).as(Seq("pos", "hit")))
+      .select(col("qid"), col("hit.docId").as("docIntId"),
+        col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
+  }
+
+  /** The kernel path's ranking: kernel partials (qidx, docIntIds, scores —
+    * sorted lists, see [[wandPartials]]) repartitioned by qidx into the
+    * kernel's own S × G partitions, then ONE k-way merge per query
+    * ([[TopKAggregator.mergeSorted]]) that emits only the final top-k with
+    * ranks. A merge task holds its queries' lists, about one kernel task's
+    * heap rows. `qid` maps qidx to the qid string.
+    */
+  private def mergePartials(partials: Partials, k: Int, qid: Column): DataFrame = {
+    import partials.df.sparkSession.implicits._
+    partials.df.repartition(partials.nParts, col("qidx"))
+      .as[(Int, Array[Long], Array[Double])]
+      .mapPartitions { rows =>
+        val byQuery = scala.collection.mutable.HashMap
+          .empty[Int, scala.collection.mutable.ArrayBuffer[(Array[Long], Array[Double])]]
+        rows.foreach { case (q, ids, scores) =>
+          byQuery.getOrElseUpdate(q, scala.collection.mutable.ArrayBuffer.empty) +=
+            ((ids, scores))
+        }
+        byQuery.iterator.flatMap { case (q, lists) =>
+          val (ids, scores) = TopKAggregator.mergeSorted(lists, k)
+          Iterator.tabulate(ids.length)(i => (q, ids(i), scores(i), i + 1))
+        }
+      }
+      .toDF("qidx", "docIntId", "score", "rank")
+      .select(qid.as("qid"), col("docIntId"), col("score"), col("rank"))
   }
 
   /** One chunk's top-k hits collected to the driver BEFORE the docs join:
     * (docIntId, score) in rank order, indexed by the query's position in
-    * `qArr` — ≤ nQ × k rows, no docId round trip. Destroys the chunk's
-    * query broadcast (the collect has run).
+    * `qArr`, with no docId round trip. The kernel's sorted lists are
+    * collected as they are and merged on the driver
+    * ([[TopKAggregator.mergeSorted]]), so the collect runs no exchange. It
+    * is bounded by nQ × S × k entries (S salt buckets, see
+    * [[wandPartials]]) plus one list per query for each early drain.
+    * Destroys the chunk's query broadcast (the collect has run).
     */
   private[query] def collectTopHits(index: BM25Index, qArr: QueryArr, k: Int,
       allowedBc: Option[Broadcast[Array[Long]]]): Array[Array[(Long, Double)]] = {
-    val (partials, bq) = wandPartialsWithHandle(index, qArr, k, allowedBc)
-    val out = Array.fill(qArr.length)(Array.empty[(Long, Double)])
-    try topHits(partials, "qidx", k).collect().foreach { r =>
-      out(r.getInt(0)) =
-        r.getSeq[Row](1).map(h => (h.getLong(0), h.getDouble(1))).toArray
-    } finally bq.destroy()
-    out
+    val p = wandPartialsWithHandle(index, qArr, k, allowedBc)
+    import index.spark.implicits._
+    val lists = Array.fill(qArr.length)(List.empty[(Array[Long], Array[Double])])
+    try p.df.as[(Int, Array[Long], Array[Double])].collect().foreach {
+      case (q, ids, scores) => lists(q) = (ids, scores) :: lists(q)
+    } finally p.bq.destroy()
+    lists.map { l =>
+      val (ids, scores) = TopKAggregator.mergeSorted(l, k)
+      ids.zip(scores)
+    }
   }
 
   /** Exact path: join + aggregate over decoded blocks.
@@ -321,7 +352,7 @@ object QueryEngine {
     }
     val scored = flt.groupBy("qid", "docIntId")
       .agg(sum("contrib").as("score"))
-    finishTopK(index, scored, k, "qid", col("qid"), nQueries)
+    finishTopK(index, topHits(scored, k), k, nQueries)
   }
 
   /** Driver-side query chunk size for the WAND path: each chunk's tokenized
@@ -469,9 +500,9 @@ object QueryEngine {
       val live = step(chunk, allowedBc).filter(_._2.nonEmpty)
       if (live.isEmpty) None
       else {
-        val (partials, bq) = wandPartialsWithHandle(index, live, k, allowedBc)
+        val p = wandPartialsWithHandle(index, live, k, allowedBc)
         val qidOf = element_at(typedLit(live.map(_._1).toSeq), col("qidx") + 1)
-        Some((finishTopK(index, partials, k, "qidx", qidOf, live.length), bq))
+        Some((finishTopK(index, mergePartials(p, k, qidOf), k, live.length), p.bq))
       }
     }
     try {
@@ -550,20 +581,29 @@ object QueryEngine {
       (qArr, _) => qArr)
   }
 
-  /** One chunk's WAND partial candidates: (qidx, docIntId, score), ≤ k per
-    * (query, salt) before the global heap merge in finishTopK.
+  /** One chunk's kernel partials: (qidx, docIntIds array<bigint>, scores
+    * array<double>), one row per non-empty task heap per drain, each list
+    * sorted by (score DESC, docIntId ASC) and at most k long. A query gets
+    * one list from each of the ≤ S salt-bucket tasks that hold its query
+    * group, plus one per early drain; across its lists a docIntId appears
+    * at most once. [[mergePartials]] merges them into the top k.
     */
   private[graft] def wandPartials(index: BM25Index, qArr: QueryArr,
                                   k: Int): DataFrame =
-    wandPartialsWithHandle(index, qArr, k, None)._1
+    wandPartialsWithHandle(index, qArr, k, None).df
 
-  /** As wandPartials, but also returns the chunk's query-array broadcast so
-    * the chunked large-batch path can destroy it between chunk jobs.
-    * `allowedBc`: optional broadcast sorted allowed-docIntId array (query-
-    * time doc filter) checked at kernel insertion.
+  /** [[wandPartials]]' frame, the chunk's query-array broadcast (so the
+    * chunked large-batch path can destroy it between chunk jobs) and the
+    * kernel's S × G partition count (the merge's parallelism).
+    */
+  private final case class Partials(df: DataFrame, bq: Broadcast[QueryArr], nParts: Int)
+
+  /** As wandPartials, with the handle of [[Partials]]. `allowedBc`:
+    * optional broadcast sorted allowed-docIntId array (query-time doc
+    * filter) checked at kernel insertion.
     */
   private def wandPartialsWithHandle(index: BM25Index, qArr: QueryArr, k: Int,
-      allowedBc: Option[Broadcast[Array[Long]]]): (DataFrame, Broadcast[QueryArr]) = {
+      allowedBc: Option[Broadcast[Array[Long]]]): Partials = {
     val spark = index.spark
     // DAAT correctness precondition (see searchWandWeighted scaladoc);
     // O(batch terms) on the driver, negligible next to the kernel job
@@ -583,9 +623,9 @@ object QueryEngine {
     // split into G groups so the kernel still fills the cluster — posting
     // rows replicate G× through the shuffle.
     // Each task's kernels insert into ONE heap per query covering every
-    // salt the task holds, so shuffled emission is nQueries × S × k rows —
-    // bounded by the BUCKET count S, not numSalts. TAAT mode caps S at
-    // DeepKSaltBuckets and raises G to keep S×G ≈ 2·parallelism: a
+    // salt the task holds, so shuffled emission is nQueries × S lists of
+    // ≤ k entries — bounded by the BUCKET count S, not numSalts. TAAT mode
+    // caps S at DeepKSaltBuckets and raises G to keep S×G ≈ 2·parallelism: a
     // little replicated block decode buys 4× less emission + finish
     // traffic. At 10^12-doc scale the same cap keeps emission independent
     // of the million-salt index layout.
@@ -619,16 +659,17 @@ object QueryEngine {
     // Bounds task memory for huge query chunks. Correctness invariant:
     // each (qid, docId) pair is emitted AT MOST ONCE per task — drains
     // happen only at (salt, qgrp) group boundaries, where a doc has been
-    // scored exactly once for a query, so the drain merely re-partitions
-    // the emission. finishTopK's heap has NO docId dedup; a mid-group
-    // drain (same doc scored before and after) would surface duplicates.
+    // scored exactly once for a query, so the drain merely splits the
+    // emission into more sorted lists. The k-way merge
+    // (TopKAggregator.mergeSorted) has NO docId dedup; a mid-group drain
+    // (same doc scored before and after) would surface duplicates.
     val maxHeapRows = spark.conf.getOption("spark.graft.taskHeapMaxRows")
       .map(_.toLong).getOrElse(4L << 20)
 
     // Emission rows carry qidx (the query's position in the chunk array) —
-    // a 4-byte int groupBy/shuffle key instead of a per-row UTF8 string;
-    // finishTopK resolves qid strings only on the post-top-k hit set.
-    implicit val enc = Encoders.product[(Int, Long, Double)]
+    // a 4-byte int shuffle key instead of a per-row UTF8 string;
+    // mergePartials resolves qid strings only on the post-top-k hit set.
+    implicit val enc = Encoders.product[(Int, Array[Long], Array[Double])]
     val nQ = qArr.length
     val out = cand.mapPartitions { rows =>
       // rows arrive sorted by (salt, qgrp): buffer exactly one run at a time
@@ -641,14 +682,18 @@ object QueryEngine {
       // touches the qidx values of its own query groups
       val heaps = new Array[TopKBuf](nQ)
       var heapRows = 0L
-      def drainHeaps(): Iterator[(Int, Long, Double)] = {
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
+      // one sorted (qidx, docIntIds, scores) row per non-empty heap
+      def drainHeaps(): Iterator[(Int, Array[Long], Array[Double])] = {
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Array[Long], Array[Double])]
         var qi = 0
         while (qi < nQ) {
           val h = heaps(qi)
           if (h != null) {
-            var i = 0
-            while (i < h.size) { out += ((qi, h.docIds(i), h.scores(i))); i += 1 }
+            if (h.size > 0) {
+              val (ids, scores) = agg.drainSorted(h)
+              out += ((qi, ids, scores))
+            }
             heaps(qi) = null
           }
           qi += 1
@@ -686,8 +731,8 @@ object QueryEngine {
         if (heapRows > maxHeapRows) drainHeaps() else Iterator.empty
       }
       perGroup ++ drainHeaps()
-    }.toDF("qidx", "docIntId", "score")
-    (out, bq)
+    }.toDF("qidx", "docIntIds", "scores")
+    Partials(out, bq, nParts)
   }
 
   /** Streams consecutive runs of rows sharing a key from a SORTED iterator —

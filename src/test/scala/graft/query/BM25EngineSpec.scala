@@ -188,22 +188,64 @@ class BM25EngineSpec extends SparkTestBase {
     }
   }
 
+  /** wandPartials' rows as (qidx, docIntIds, scores). */
+  private def partialLists(idx: BM25Index, kk: Int): Array[(Int, Array[Long], Array[Double])] = {
+    import spark.implicits._
+    val qArr = QueryEngine.tokenizeRows(idx, queriesDf.collect())
+    QueryEngine.wandPartials(idx, qArr, kk).as[(Int, Array[Long], Array[Double])].collect()
+  }
+
+  /** true if the list is in (score DESC, docIntId ASC) order. */
+  private def sortedBestFirst(ids: Array[Long], scores: Array[Double]): Boolean =
+    ids.indices.drop(1).forall { i =>
+      scores(i - 1) > scores(i) || (scores(i - 1) == scores(i) && ids(i - 1) < ids(i))
+    }
+
   test("deep-k partial emission is bounded by salt-bucket cap, not numSalts") {
-    // the scale contract: per query the pre-merge candidate rows are at
-    // most min(numSalts, S = 4) × k — independent of how many
-    // salts the index has (at 10^12-doc scale numSalts is ~10^6)
+    // the scale contract: per query the pre-merge candidates are at most
+    // min(numSalts, S = 4) × k — independent of how many salts the index
+    // has (at 10^12-doc scale numSalts is ~10^6); each emitted list is
+    // sorted best first, as the k-way merge expects
     val idx = new BM25Index(spark, indexDir)
     val kk = 7
     try {
       spark.conf.set("spark.graft.scoreAllMinK", "1") // force deep-k mode
-      val qArr = QueryEngine.tokenizeRows(idx, queriesDf.collect())
-      val perQid = QueryEngine.wandPartials(idx, qArr, kk)
-        .groupBy("qidx").count().collect()
-      perQid.foreach { r =>
-        assert(r.getLong(1) <= math.min(idx.numSalts, 4).toLong * kk,
-          s"qidx ${r.getInt(0)}: ${r.getLong(1)} partials > bound")
+      val lists = partialLists(idx, kk)
+      assert(lists.nonEmpty)
+      lists.foreach { case (q, ids, scores) =>
+        assert(ids.length == scores.length && ids.nonEmpty && ids.length <= kk)
+        assert(sortedBestFirst(ids, scores), s"qidx $q: list not sorted")
+      }
+      lists.groupBy(_._1).foreach { case (q, ls) =>
+        val n = ls.map(_._2.length.toLong).sum
+        assert(n <= math.min(idx.numSalts, 4).toLong * kk, s"qidx $q: $n partials > bound")
       }
     } finally spark.conf.unset("spark.graft.scoreAllMinK")
+  }
+
+  test("early drains never list a (query, doc) twice across the partial rows") {
+    // taskHeapMaxRows=1 drains at every (salt, qgrp) boundary, so a query
+    // gets one list per group it was scored in; the merge has no dedup, so
+    // a docIntId must leave the kernel once per query — both kernels
+    val idx = new BM25Index(spark, indexDir)
+    try {
+      spark.conf.set("spark.graft.taskHeapMaxRows", "1")
+      for (minK <- Seq("1", "100000")) {
+        spark.conf.set("spark.graft.scoreAllMinK", minK)
+        val lists = partialLists(idx, k)
+        assert(lists.groupBy(_._1).exists(_._2.length > 1), "no query drained twice")
+        lists.foreach { case (q, ids, scores) =>
+          assert(sortedBestFirst(ids, scores), s"qidx $q: list not sorted")
+        }
+        lists.groupBy(_._1).foreach { case (q, ls) =>
+          val ids = ls.toSeq.flatMap(_._2.toSeq)
+          assert(ids.distinct.size == ids.size, s"scoreAllMinK=$minK qidx $q: repeated docIntId")
+        }
+      }
+    } finally {
+      spark.conf.unset("spark.graft.taskHeapMaxRows")
+      spark.conf.unset("spark.graft.scoreAllMinK")
+    }
   }
 
   test("warm small-batch searchWand job count, unfiltered and filtered") {

@@ -13,6 +13,30 @@ import graft.util.SynthCorpus
   */
 class StoreSpec extends SparkTestBase {
 
+  test("a filesystem whose rename does not replace still commits and replaces") {
+    // HDFS-style rename: false when the destination exists
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.norename.impl", classOf[NoReplaceRenameFs].getName)
+    hc.setBoolean("fs.norename.impl.disable.cache", true)
+    try {
+      val local = tmpDir("graft-store-norename")
+      val store = new IcebergLikeStore(s"norename://$local")
+      store.writeProperties(Map("a" -> "1"))
+      store.writeProperties(Map("a" -> "2", "b" -> "3"))
+      assert(new IcebergLikeStore(s"norename://$local").readProperties() ==
+        Map("a" -> "2", "b" -> "3"))
+      store.stage("g", Seq("f"), Map("m" -> "x")) { 5L }
+      store.stage("h", Seq("f2"), Map.empty) { 6L }
+      assert(store.readCommits().map(c => (c.group, c.rowCount)) == Seq(("g", 5L), ("h", 6L)))
+      val left = Files.walk(Paths.get(local)).toArray.map(_.toString)
+        .filter(_.contains(".tmp-"))
+      assert(left.isEmpty, s"temp files left behind: ${left.mkString(", ")}")
+    } finally {
+      hc.unset("fs.norename.impl")
+      hc.unset("fs.norename.impl.disable.cache")
+    }
+  }
+
   test("a file:// URI index dir builds, opens and searches like a plain path") {
     import spark.implicits._
     val corpus = spark.createDataset(SynthCorpus.gen(3, 12)).toDF()
@@ -97,4 +121,14 @@ class StoreSpec extends SparkTestBase {
       "note" -> "say \"hi\"\nnext line",
       "tokenPattern" -> "[\\p{L}\\p{N}]+"))
   }
+}
+
+/** The local filesystem under the `norename` scheme, with HDFS's rename
+  * contract: a rename onto an existing path fails (returns false) instead
+  * of replacing it.
+  */
+class NoReplaceRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !exists(dst) && super.rename(src, dst)
 }

@@ -19,16 +19,25 @@ verdict against the metric's BENCHMARK.json `bound` (a relative change):
 the bound, else `unresolved` when the parent's IQR/median exceeds the
 bound (its runs spread too widely to tell), else `ok`. Raw run results go
 to --out as JSON lines. Exit status 1 when any run fails or is incorrect.
+
+Noise guard: each run prints `calibration_ms=`, a fixed CPU-bound loop timed
+before its set-up. A pair where either side's calibration reads more than
+1.15x the session median (over every run of both sides) ran on a slowed
+host; a second table gives the same columns over the remaining pairs, under
+the all-pairs table, which stays the one the claim and no-regression rules
+read.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+NOISY = 1.15  # calibration_ms over this multiple of the session median
 
 
 def export(rev, work):
@@ -53,7 +62,11 @@ def run_once(checkout, workload, seed, seconds):
     last = p.stdout.rstrip("\n").split("\n")[-1] if p.stdout else ""
     if p.returncode != 0 or not last.startswith("{"):
         return {"error": (p.stderr or p.stdout)[-2000:]}
-    return json.loads(last)
+    r = json.loads(last)
+    calib = re.search(r"calibration_ms=([0-9.]+)", p.stdout)
+    if calib:
+        r["calibration_ms"] = float(calib.group(1))
+    return r
 
 
 def quartiles(xs):
@@ -114,13 +127,28 @@ def main():
         out.close()
 
     print(f"{a.workload}: parent {sha} vs working tree, {a.pairs} interleaved pairs")
+    both = [(p, c) for p, c in zip(results["parent"], results["change"]) if p and c]
+    table(metrics, both)
+    calibs = [r["calibration_ms"] for pc in both for r in pc if "calibration_ms" in r]
+    if calibs:
+        med = statistics.median(calibs)
+        quiet = [(p, c) for p, c in both
+                 if all(r.get("calibration_ms", 0.0) <= NOISY * med for r in (p, c))]
+        print(f"noise guard: {len(both) - len(quiet)} of {len(both)} pairs have a side with "
+              f"calibration_ms > {NOISY} x the session median {med:.1f} ms; the other "
+              f"{len(quiet)} pairs:")
+        table(metrics, quiet)
+    sys.exit(0 if ok else 1)
+
+
+def table(metrics, both):
+    """The per-metric table over `both`, a list of (parent, change) results."""
     print(f"{'metric':18} {'parent med [q1, q3]':>28} {'change med [q1, q3]':>28}"
           f" {'ratio':>7} {'wins':>6} {'>IQR':>5} {'verdict':>10}")
     for name, m in metrics.items():
         direction, bound = m["better"], m["bound"]
         pairs = [(p["metrics"][name]["value"], c["metrics"][name]["value"])
-                 for p, c in zip(results["parent"], results["change"])
-                 if p and c and name in p["metrics"] and name in c["metrics"]]
+                 for p, c in both if name in p["metrics"] and name in c["metrics"]]
         if not pairs:
             continue
         pv = [p for p, _ in pairs]
@@ -133,7 +161,6 @@ def main():
         print(f"{name:18} {pmed:10.3f} [{pq1:7.3f}, {pq3:7.3f}] {cmed:10.3f} "
               f"[{cq1:7.3f}, {cq3:7.3f}] {ratio:7.3f} {wins:3d}/{len(pairs):<2d} {str(sep):>5}"
               f" {verdict(pmed, pq3 - pq1, cmed, direction, bound):>10}")
-    sys.exit(0 if ok else 1)
 
 
 if __name__ == "__main__":
