@@ -583,7 +583,8 @@ object OpsQueries {
        |FROM per GROUP BY 1""".stripMargin
 
   /** Full index-backed engine over documents — IndexBuilder (docmap,
-    * salted posting runs, delta+varbyte blocks, float32 eager impacts) →
+    * per-group packed doc vectors, salted posting runs, delta+varbyte
+    * blocks, float32 eager impacts) →
     * WAND retrieval — now DRIVER-ORACLE-CHECKED end to end: the build uses
     * the ASCII/no-stem pipeline the DuckDB oracle can replicate exactly,
     * and the oracle quantizes each per-posting impact through REAL

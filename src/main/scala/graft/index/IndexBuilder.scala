@@ -25,9 +25,10 @@ final case class PostingBlock(
   * Layout under `indexDir` (an IcebergLikeStore-managed table):
   *
   *   docmap/   (docId STRING, docIntId LONG, salt INT)
-  *   segments/ g=<group>/ (docIntId, len, term, tf)      [resumable stage]
+  *   docvecs/  g=<group>/salt=<s>/ (docIntId, len, terms[], tfs[])
+  *             one packed row per document: its stored term vector
+  *             [resumable per corpus group]
   *   docs/     (docIntId LONG, docId STRING, len LONG, salt INT)
-  *   docvecs/  salt=<s>/ (docIntId, term, tf)   [stored doc term vectors]
   *   termstats/ (term STRING, df LONG, ctf LONG)
   *   postings/ bucket=<b>/ (term, salt, df, count, maxImpact, blocks)
   *   _commits/ *.json  per-partition-group lineage + metrics
@@ -41,13 +42,15 @@ final case class PostingBlock(
   *    is bounded (≤ 2^SaltShift docs), which is the explicit skew salting
   *    the north rule demands — a term occurring in 50% of all docs still
   *    never forms one giant shuffle group.
-  *  - segments stage is committed per corpus group: a killed build re-runs
-  *    only uncommitted groups (tokenization — the expensive part — never
-  *    repeats for committed groups). In a production Iceberg deployment the
-  *    groups key off manifest file splits; here they key off hash(docId).
-  *  - merge stage shuffles only narrow (term, docIntId, tf, len) rows,
-  *    computes exact global df with a narrow partial+final hash agg
-  *    (termstats table) joined back onto segment rows, and eagerly
+  *  - the segment stage is committed per corpus group: a killed build
+  *    re-runs only uncommitted groups (tokenization — the expensive part —
+  *    never repeats for committed groups). In a production Iceberg
+  *    deployment the groups key off manifest file splits; here they key off
+  *    hash(docId). Each group's output is its packed doc vectors, so every
+  *    (doc, term, tf) pair is stored once.
+  *  - merge stage explodes the packed rows to narrow (term, docIntId, tf,
+  *    len) rows, computes exact global df with a narrow partial+final hash
+  *    agg (termstats table) joined back onto them, and eagerly
   *    materializes per-posting BM25 impacts (bm25s's core idea) into
   *    delta+varbyte blocks with block-max metadata.
   */
@@ -71,14 +74,7 @@ object IndexBuilder {
       // scale weaken partition pruning and task granularity, too many at
       // small scale fragment the table into sub-row-group files.
       numBuckets: Int = 16,
-      docmapPartitions: Int = 0, // 0 = spark default parallelism
-      // Store per-document term vectors (docvecs table) — the analogue of
-      // Pyserini's `--storeDocvectors` (reference: benchmark/on_pyserini.py:
-      // 245-253, passed unconditionally by the harness), which exists
-      // precisely for feedback-style consumers: RM3 fetches its nQueries ×
-      // fbDocs feedback vectors by key instead of re-tokenizing the corpus.
-      // Costs one extra shuffle+write of the narrow token table at build.
-      storeDocVectors: Boolean = true)
+      docmapPartitions: Int = 0) // 0 = spark default parallelism
 
   def saltOf(docIntId: Column): Column =
     shiftrightunsigned(docIntId, SaltShift).cast(IntegerType)
@@ -170,57 +166,18 @@ object IndexBuilder {
     math.max(8L, math.min(4096L,
       (vocabSize + TermsPerBucketTarget - 1) / TermsPerBucketTarget)).toInt
 
-  /** One PACKED stored doc vector: all of a document's (term, tf) pairs in
-    * two parallel arrays (docvecs format "packed"). One row per document
-    * instead of one per (doc, term): the docvecs table carries no repeated
-    * docIntId/salt per term, shuffles ~1/avgUniqueTerms the record count,
-    * and its pre-write sort orders ~numDocs packed rows instead of the full
-    * token table — measured ~22% of index build as row-per-term in round 5.
-    */
-  final case class DocVecRow(docIntId: Long, salt: Int, len: Long,
-                             terms: Array[String], tfs: Array[Long])
-
-  /** Streaming per-partition packer over (docIntId, term, tf) rows: groups
-    * CONSECUTIVE equal-docIntId runs into one DocVecRow. Segment files are
-    * written doc-contiguously (per-doc explode), so runs are whole doc
-    * vectors in the common case; a doc whose rows straddle an input-split
-    * boundary yields two partial rows — harmless, because every (doc, term)
-    * pair exists exactly once globally and consumers union the pairs back
-    * (Rm3.feedbackVectors explodes the arrays). Memory is bounded by one
-    * document's vocabulary.
-    */
-  final class DocVecPacker(rows: Iterator[org.apache.spark.sql.Row])
-      extends Iterator[DocVecRow] {
-    private val it = rows.buffered
-    def hasNext: Boolean = it.hasNext
-    def next(): DocVecRow = {
-      val id = it.head.getLong(0)
-      val terms = scala.collection.mutable.ArrayBuffer.empty[String]
-      val tfs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var len = 0L
-      while (it.hasNext && it.head.getLong(0) == id) {
-        val r = it.next()
-        terms += r.getString(1)
-        val tf = r.getLong(2)
-        tfs += tf
-        len += tf
-      }
-      // len (Σtf) rides on the packed row so the docs stage reads doc
-      // lengths as a two-column pruned scan — no array decode, no
-      // token-table re-aggregation
-      DocVecRow(id, (id >>> SaltShift).toInt, len, terms.toArray, tfs.toArray)
-    }
-  }
-
-  /** Overwrite-write `df` as parquet and return its row count, captured by
-    * an Observation INSIDE the write job — no separate count job, no
-    * re-read of what was just written (each saved job is a full barrier).
+  /** Overwrite-write `df` as parquet and return its row count (or the sum
+    * of `counted` per row), captured by an Observation INSIDE the write
+    * job — no separate count job, no re-read of what was just written
+    * (each saved job is a full barrier).
     */
   private def writeCounted(df: DataFrame, path: String,
                            partitionCols: Seq[String] = Nil,
-                           options: Map[String, String] = Map.empty): Long = {
+                           options: Map[String, String] = Map.empty,
+                           counted: Column = lit(1L)): Long = {
     val obs = org.apache.spark.sql.Observation()
-    val w = df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite")
+    val w = df.observe(obs, coalesce(sum(counted), lit(0L)).as("n"))
+      .write.mode("overwrite")
       .options(options)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
@@ -260,70 +217,20 @@ object IndexBuilder {
     "parquet.bloom.filter.expected.ndv#term" -> "16384",
     "parquet.block.size" -> (1 << 20).toString)
 
-  /** Write (or resume) the packed docvecs table — stored document term
-    * vectors, re-clustered for per-doc random access: PACKED one row per
-    * doc BEFORE the shuffle (so the salt shuffle moves ~numDocs array rows,
-    * not the full token table), partitioned by salt (a feedback fetch
-    * partition-prunes to its docs' salt groups) and sorted by docIntId
-    * within files (row-group min/max stats prune to the exact docs, so a
-    * bounded doc set reads a bounded byte range — no corpus or token-table
-    * scan). The analogue of Pyserini's `--storeDocvectors`
-    * (benchmark/on_pyserini.py:245-253). Consumed by
-    * graft.query.Rm3.feedbackVectors.
-    */
-  private def docvecsStage(indexDir: String, store: IcebergLikeStore,
-                           segments: DataFrame): Unit =
-    store.stage("docvecs", Seq("docvecs"),
-        Map("stage" -> "docvecs", "format" -> "packed")) {
-      implicit val enc = org.apache.spark.sql.Encoders.product[DocVecRow]
-      val packed = segments.select(col("docIntId"), col("term"), col("tf"))
-        .mapPartitions(rows => new DocVecPacker(rows))
-      // NO shuffle: each scan partition covers a near-contiguous docIntId
-      // range (segment files are written doc-contiguously), so after the
-      // map-side pack each of the P scan partitions holds ~numDocs/P packed
-      // rows touching only 1-2 salt values — the dynamic-partition writer
-      // sends them straight to their salt dirs (a handful of files per dir,
-      // each docIntId-sorted so row-group min/max pruning stays tight). The sort is over packed rows,
-      // three orders of magnitude fewer than the row-per-term layout sorted.
-      writeCounted(
-        packed.toDF()
-          .sortWithinPartitions("salt", "docIntId"),
-        s"$indexDir/docvecs", partitionCols = Seq("salt"),
-        options = DocvecsWriteOptions)
-    }
-
-  /** The docvecs layout actually on disk, from the stage's commit metadata:
-    * commits written since the packed layout exist record format=packed;
-    * a legacy (round-5, row-per-term) docvecs commit lacks the key. Never
-    * assume the current layout — a resumed pre-packed index stamped
-    * "packed" would make Rm3's arrays_zip unpack fail at query time on a
-    * table without terms[]/tfs[] columns.
-    */
-  private def docvecsFormatOf(store: IcebergLikeStore): String =
-    store.lastCommit("docvecs").flatMap(_.metrics.get("format")).getOrElse("rows")
-
   /** Build (or resume) the index for a corpus of (docId STRING, content
     * STRING) rows. Returns the store handle.
     */
   def build(spark: SparkSession, corpus: DataFrame, indexDir: String,
             cfg: Config = Config()): IcebergLikeStore = {
     val store = new IcebergLikeStore(indexDir)
-    if (store.isComplete) {
-      // Backfill path: a complete index built WITHOUT doc vectors (or before
-      // the docvecs stage existed) would otherwise only fail later, at
-      // query time, through BM25Index.docvecs' require. The stage is
-      // commit-guarded and reads only the persisted segments, so running it
-      // here is exactly the resume semantics the other stages have.
-      val props = store.readProperties()
-      if (!cfg.storeDocVectors || props.get("docVectors").contains("true"))
-        return store
-      val segs = spark.read.parquet(s"$indexDir/segments")
-        .select("docIntId", "len", "term", "tf")
-      docvecsStage(indexDir, store, segs)
-      store.writeProperties(props ++ Map(
-        "docVectors" -> "true", "docvecsFormat" -> docvecsFormatOf(store)))
-      return store
-    }
+    if (store.isComplete) return store
+    // a build resumes only its own layout: segment groups committed by the
+    // older layout (exploded rows under segments/) would be skipped here
+    // and leave their docs out of docvecs, docs and postings
+    for (g <- 0 until cfg.numSegmentGroups;
+         c <- store.lastCommit(s"seg-$g") if c.files.exists(_.startsWith("segments/")))
+      throw new IllegalStateException(s"partial index at $indexDir holds " +
+        s"$indexDir/segments, built by an older layout; delete and rebuild")
     val t0 = System.nanoTime()
 
     val P = if (cfg.docmapPartitions > 0) cfg.docmapPartitions
@@ -365,68 +272,70 @@ object IndexBuilder {
     }
     val docmap = spark.read.parquet(docmapPath)
 
-    // ---- stage 1: segments — tokenize + per-doc term frequencies,
-    // committed per corpus group (resume skips committed groups).
-    val segBase = s"$indexDir/segments"
+    // ---- stage 1: segments — tokenize + per-doc term frequencies, one
+    // packed doc vector per document, committed per corpus group (resume
+    // skips committed groups). The stored vectors ARE the segment output:
+    // termstats and postings explode them, docs reads their len.
     for (g <- 0 until cfg.numSegmentGroups)
-      store.stage(s"seg-$g", Seq(s"segments/g=$g"),
-          Map("stage" -> "segments", "group" -> g.toString)) {
+      store.stage(s"seg-$g", Seq(s"docvecs/g=$g"),
+          Map("stage" -> "segments", "group" -> g.toString, "format" -> "packed")) {
         val part = corpusP.where(
           pmod(xxhash64(col("docId")), lit(cfg.numSegmentGroups.toLong)) === g)
         // shuffle-hash join, never sort-merge: SMJ would SORT the full
         // content payload by docId; hash join only shuffles it (planner
         // still picks broadcast when docmap fits under the threshold)
+        // (null content tokenizes as empty: every doc gets its one row)
         val toks = part.join(docmap.hint("shuffle_hash"), "docId")
-          .select(col("docIntId"),
-            Tokenizer.tokens(col("content"), cfg.tokenPattern, cfg.stem).as("toks"))
+          .select(col("docIntId"), col("salt"),
+            Tokenizer.tokens(coalesce(col("content"), lit("")), cfg.tokenPattern,
+              cfg.stem).as("toks"))
         // per-doc tf computed INSIDE the row (TermCountsExpr): the previous
         // corpus-wide groupBy(docIntId, term) aggregated under nearly-unique
         // keys, so its hash map overflowed to a sort at scale (measured
         // super-linear past ~10^6 docs)
+        val packed = toks
+          .select(col("docIntId"), col("salt"),
+            size(col("toks")).cast(LongType).as("len"),
+            graft.index.expr.TermCountsExprs.termCounts(col("toks")).as("tc"))
+          .select(col("docIntId"), col("salt"), col("len"),
+            col("tc.term").as("terms"), col("tc.tf").as("tfs"))
+        // one shuffle of the packed rows (tokenization already ran on the
+        // join's tasks) gathers each salt on one task: one docIntId-sorted
+        // file per (group, salt), whose small row groups and docIntId bloom
+        // filter keep a feedback fetch point-lookup-shaped. The commit's
+        // rowCount is the group's (doc, term) pair count, the termstats
+        // df sum.
         writeCounted(
-          toks
-            .select(col("docIntId"), size(col("toks")).cast(LongType).as("len"),
-              explode(graft.index.expr.TermCountsExprs.termCounts(col("toks"))).as("tc"))
-            .select(col("docIntId"), col("len"),
-              col("tc.term").as("term"), col("tc.tf").as("tf")),
-          s"$segBase/g=$g")
+          packed.repartition(col("salt")).sortWithinPartitions("salt", "docIntId"),
+          s"$indexDir/docvecs/g=$g", partitionCols = Seq("salt"),
+          options = DocvecsWriteOptions, counted = size(col("terms")).cast(LongType))
       }
 
-    // Three downstream stages consume segments (docs, termstats, postings).
-    // They re-read the parquet uncached: each column-prunes a different
-    // subset, and re-scanning narrow columns measured FASTER than building
-    // the full 4-column columnar cache (docs stage 21.5 s cached vs 5.6 s
-    // uncached at 2.4M docs, BASELINE.md "Segments cache"), with no
-    // eviction cliff once the corpus outgrows storage memory.
-    val segments = spark.read.parquet(segBase)
-      .select("docIntId", "len", "term", "tf") // drop partition col g
+    // The downstream stages re-read the packed rows uncached: each
+    // column-prunes a different subset, and re-scanning narrow columns
+    // measured FASTER than a columnar cache (BASELINE.md "Segments cache").
+    // The schema is given, not inferred: an empty corpus writes no data
+    // file under the salt-partitioned dirs.
+    val docvecs = spark.read.schema(StructType(Seq(
+        StructField("docIntId", LongType), StructField("len", LongType),
+        StructField("terms", ArrayType(StringType)),
+        StructField("tfs", ArrayType(LongType)),
+        StructField("g", IntegerType), StructField("salt", IntegerType))))
+      .parquet(s"$indexDir/docvecs")
+    val pairs = docvecs
+      .select(col("docIntId"), col("salt"), col("len"),
+        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
+      .select(col("docIntId"), col("salt"), col("len"),
+        col("tt.terms").as("term"), col("tt.tfs").as("tf"))
 
-    // ---- stage 2a: docvecs — stored document term vectors (packed).
-    // Runs BEFORE the docs table: the packed rows then feed the doc-length
-    // computation below, which repays most of this stage's cost.
-    if (cfg.storeDocVectors) docvecsStage(indexDir, store, segments)
-
-    // ---- stage 2: docs table (docId, len) + global stats.
+    // ---- stage 2: docs table (docId, len) + global stats. A document is
+    // exactly one packed row, so its length is a two-column pruned scan.
     store.stage("docs", Seq("docs"), Map("stage" -> "docs")) {
-      // doc lengths: with stored doc vectors, Σtf was already folded into
-      // the packed rows' len column — a TWO-COLUMN pruned scan of ~numDocs
-      // rows (no array decode, no token-table re-aggregation; the groupBy
-      // only merges split-straddle partials). The vectorless build keeps
-      // the token-table aggregation.
-      // (an EMPTY docvecs write leaves a schemaless partitioned dir —
-      // fall back to the token table, itself empty then)
-      val docvecsNonEmpty = cfg.storeDocVectors &&
-        store.lastCommit("docvecs").exists(_.rowCount > 0)
-      val lens =
-        (if (docvecsNonEmpty)
-           spark.read.parquet(s"$indexDir/docvecs")
-             .select(col("docIntId"), col("len").as("tf"))
-         else segments.select(col("docIntId"), col("tf")))
-          .groupBy("docIntId").agg(sum("tf").as("len"))
       // shuffle-hash, not sort-merge: neither side needs sorting for a
       // plain equi-join and SMJ would sort both million-row sides
       writeCounted(
-        docmap.join(lens.hint("shuffle_hash"), Seq("docIntId"), "left")
+        docmap.join(docvecs.select("docIntId", "len").hint("shuffle_hash"),
+            Seq("docIntId"), "left")
           .select(col("docIntId"), col("docId"),
             coalesce(col("len"), lit(0L)).as("len"), col("salt")),
         s"$indexDir/docs")
@@ -449,7 +358,7 @@ object IndexBuilder {
     // Persisted: also the query-side term dictionary for diagnostics.
     store.stage("termstats", Seq("termstats"), Map("stage" -> "termstats")) {
       writeCounted(
-        segments.groupBy("term")
+        pairs.groupBy("term")
           .agg(count(lit(1)).as("df"), sum("tf").as("ctf")),
         s"$indexDir/termstats")
     }
@@ -463,20 +372,19 @@ object IndexBuilder {
 
     store.stage("postings", Seq("postings"),
         Map("stage" -> "postings", "buckets" -> numBuckets.toString)) {
-      // df joins onto NARROW segment rows (AQE skew-split handles giant
+      // df joins onto NARROW exploded rows (AQE skew-split handles giant
       // terms); one hash shuffle on (bucket, salt) co-locates each (term,
       // salt) run WITH its output bucket, and the radix sort inside each
       // task hands the streaming encoder its runs in order — every run
       // bounded by the salt width, never by a term's full df, and encoder
       // memory bounded by one run regardless of partition size.
       // termstats can exceed the broadcast threshold (singleton terms make
-      // |vocab| ~ O(corpus)); hint shuffle-hash so the 50M-row segment side
+      // |vocab| ~ O(corpus)); hint shuffle-hash so the 50M-row pair side
       // is never sorted for the join — its only sort is the run sort below.
       // termHash leads the intra-bucket sort key so row comparisons resolve
       // on a long instead of the term string (term itself only breaks the
       // rare hash ties); runs stay (term, salt)-contiguous either way.
-      val sorted = segments
-        .withColumn("salt", saltOf(col("docIntId")))
+      val sorted = pairs
         .join(termstats.select("term", "df").hint("shuffle_hash"), "term")
         .withColumn("bucket", bucketOf(col("term"), numBuckets))
         .withColumn("termHash", xxhash64(col("term")))
@@ -519,9 +427,7 @@ object IndexBuilder {
       "tokenPattern" -> cfg.tokenPattern,
       "stemmer" -> (if (cfg.stem) "snowball-en" else "none"),
       "stopwords" -> "en-33",
-      "docVectors" -> cfg.storeDocVectors.toString,
-      "docvecsFormat" -> (if (cfg.storeDocVectors) docvecsFormatOf(store)
-                          else "none"),
+      "docVectors" -> "true", "docvecsFormat" -> "packed",
       "numDocs" -> numDocs.toString, "avgdl" -> avgdl.toString,
       "numTokens" -> numTokens.toString,
       "numBuckets" -> numBuckets.toString,

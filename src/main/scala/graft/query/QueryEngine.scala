@@ -49,13 +49,15 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   lazy val termstats: DataFrame = spark.read.parquet(s"$indexDir/termstats")
 
   /** Whether this index stores per-document term vectors (the Pyserini
-    * `--storeDocvectors` analogue; IndexBuilder.Config.storeDocVectors).
-    * Indexes built before the docvecs stage existed report false.
+    * `--storeDocvectors` analogue). Every build writes them: the segment
+    * groups' output is the packed docvecs table. Indexes built before the
+    * docvecs table existed, or with the since-removed option to skip it,
+    * report false.
     */
   val hasDocVectors: Boolean = props.get("docVectors").contains("true")
 
-  /** Docvecs layout: "packed" (one row per doc — docIntId, salt, terms[],
-    * tfs[]) for indexes built/backfilled from round 6 on; "rows" for legacy
+  /** Docvecs layout: "packed" (one row per doc — docIntId, salt, len,
+    * terms[], tfs[]) for every index built since round 6; "rows" for legacy
     * round-5 indexes (one row per (doc, term)). Rm3.feedbackVectors
     * branches on this when unpacking.
     */
@@ -70,7 +72,7 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   lazy val docvecs: DataFrame = {
     require(hasDocVectors,
       s"index at $indexDir was built without doc vectors " +
-        "(IndexBuilder.Config.storeDocVectors = false)")
+        "(by an older build); rebuild it to store them")
     spark.read.parquet(s"$indexDir/docvecs")
   }
 

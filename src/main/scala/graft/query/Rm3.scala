@@ -186,9 +186,10 @@ object Rm3 {
     // unpack AFTER pruning: the packed layout (one row per doc — terms[],
     // tfs[]) keeps partition + row-group pruning on ~numDocs rows, and only
     // the ≤ nQueries × fbDocs surviving vectors explode back to (term, tf)
-    // pairs. A doc split across input-split boundaries at build time yields
-    // two partial rows whose pairs union here — each (doc, term) exists
-    // exactly once globally, so the result is identical.
+    // pairs. Indexes built before the segment groups wrote the vectors
+    // could split a doc into two partial rows at an input-split boundary;
+    // their pairs union here — each (doc, term) exists exactly once
+    // globally, so the result is identical.
     val unpacked =
       if (index.docvecsFormat == "packed")
         pruned.select(col("docIntId"),
@@ -224,12 +225,13 @@ object Rm3 {
   }
 
   /** Stored vectors of distinct docIntIds collected to the driver by ONE
-    * pruned docvecs scan: docIntId → (terms, tfs). A doc split across
-    * input splits at build time arrives as two partial packed rows, which
-    * concatenate here (each (doc, term) pair exists once), so Σtfs is the
-    * doc's full length — the docs table's `len` by construction (the docs
-    * stage reads it from the packed rows). Legacy "rows"-format tables
-    * group their (docIntId, term, tf) rows the same way.
+    * pruned docvecs scan: docIntId → (terms, tfs). A build writes one
+    * packed row per doc, so Σtfs is the doc's full length — the docs
+    * table's `len` by construction (the docs stage reads it from the
+    * packed rows). Older packed indexes could split a doc into two partial
+    * rows, which concatenate here (each (doc, term) pair exists once);
+    * legacy "rows"-format tables group their (docIntId, term, tf) rows the
+    * same way.
     */
   private[query] def fetchVectors(index: BM25Index, ids: Array[Long])
       : Map[Long, (Array[String], Array[Long])] = {
@@ -308,8 +310,8 @@ object Rm3 {
 
   /** BM25+RM3 over a built index with the relevance model read from the
     * index's STORED doc vectors (no corpus scan, no re-tokenization).
-    * Requires an index built with `storeDocVectors` (the default); for
-    * legacy indexes without doc vectors use [[searchIndexedRetokenize]].
+    * Every build stores the doc vectors; for legacy indexes built without
+    * them use [[searchIndexedRetokenize]].
     *
     * The batch takes the engine's one kernel route (the same probe, doc
     * filter resolution, chunking and finish as

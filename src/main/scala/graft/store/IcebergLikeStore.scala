@@ -69,7 +69,7 @@ class IcebergLikeStore(tableDir: String) {
   def readCommits(): Seq[PartitionCommit] = listManifests().map(readCommit)
 
   /** The latest commit of `group`, if any: the stage metadata recorded at
-    * commit time (row count, the docvecs stage's format key) that a
+    * commit time (row count, the files a segment group wrote) that a
     * resumed build reads instead of assuming the current layout.
     */
   def lastCommit(group: String): Option[PartitionCommit] =

@@ -39,7 +39,7 @@ class ResumeSpec extends SparkTestBase {
 
   /** Build `dir` over corpusDf with one sentinel doc of the LAST segment
     * group whose content raises `Injected` when read: the build dies inside
-    * that group's segments write, after the earlier groups committed. The
+    * that group's docvecs write, after the earlier groups committed. The
     * corpus is staged as parquet first — over a local relation the
     * optimizer would evaluate the sentinel column while planning.
     */
@@ -67,7 +67,7 @@ class ResumeSpec extends SparkTestBase {
     IndexBuilder.build(spark, corpusDf, dirA, cfg)
 
     // killed build: dies inside segment group 2's write, after group 1
-    // committed; whatever that write left under segments/g=2 has no
+    // committed; whatever that write left under docvecs/g=2 has no
     // manifest and is overwritten on resume
     killedBuild(dirB, cfg)
     val store = new IcebergLikeStore(dirB)
@@ -107,56 +107,74 @@ class ResumeSpec extends SparkTestBase {
     assert(props1 == props2) // buildElapsedSec unchanged ⇒ nothing re-ran
   }
 
-  test("packed docvecs unpack to exactly the segments (doc, term, tf) pairs") {
-    import org.apache.spark.sql.functions._
-    val dir = tmpDir("graft-dvpack")
-    IndexBuilder.build(spark, corpusDf, dir,
-      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
-    val unpacked = spark.read.parquet(s"$dir/docvecs")
+  private def docvecPairs(dir: String): Seq[(Long, String, Long)] =
+    spark.read.parquet(s"$dir/docvecs")
       .select(col("docIntId"), explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
       .select(col("docIntId"), col("tt.terms").as("term"), col("tt.tfs").as("tf"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
-    val segs = spark.read.parquet(s"$dir/segments")
-      .select("docIntId", "term", "tf")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
-    assert(unpacked == segs)
-    // pairs are globally unique even if a doc straddled an input split
-    assert(unpacked.distinct.size == unpacked.size)
+
+  test("packed docvecs hold exactly the tokenized corpus pairs, one row per doc") {
+    val dir = tmpDir("graft-dvpack")
+    IndexBuilder.build(spark, corpusDf, dir,
+      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
+    val unpacked = docvecPairs(dir)
+    val intIds = spark.read.parquet(s"$dir/docs").select("docId", "docIntId")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = corpusDf.collect().toSeq.flatMap { r =>
+      graft.tokenize.Tokenizer.tokenizeScalar(r.getString(1))
+        .groupBy(identity).map { case (t, ts) => (intIds(r.getString(0)), t, ts.size.toLong) }
+    }.sorted
+    assert(unpacked == want)
+    // a document is exactly one packed row, whose len is its token count
+    val rows = spark.read.parquet(s"$dir/docvecs")
+      .select(col("docIntId"), col("len"), aggregate(col("tfs"), lit(0L), (a, b) => a + b))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(rows.length == intIds.size)
+    assert(rows.map(_._1).distinct.length == rows.length)
+    assert(rows.forall { case (_, len, tfSum) => len == tfSum })
   }
 
-  test("complete no-docvec store is backfilled when storeDocVectors is requested") {
-    val dir = tmpDir("graft-backfill")
-    val cfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4,
-      storeDocVectors = false)
-    IndexBuilder.build(spark, corpusDf, dir, cfg)
-    val props0 = new graft.store.IcebergLikeStore(dir).readProperties()
-    assert(props0("docVectors") == "false")
+  test("seg-* commit rowCounts sum to the df sum and the packed pair count") {
+    val dir = tmpDir("graft-segrows")
+    IndexBuilder.build(spark, corpusDf, dir,
+      IndexBuilder.Config(numSegmentGroups = 3, numBuckets = 4))
+    val commits = new IcebergLikeStore(dir).readCommits()
+    val segs = commits.filter(_.group.startsWith("seg-"))
+    assert(segs.map(_.group).toSet == Set("seg-0", "seg-1", "seg-2"))
+    assert(segs.forall(c => c.metrics("stage") == "segments" && c.metrics("format") == "packed"))
+    assert(!commits.exists(_.group == "docvecs"))
+    val segRows = segs.map(_.rowCount).sum
+    val dfSum = spark.read.parquet(s"$dir/termstats").agg(sum("df")).head().getLong(0)
+    val pairs = spark.read.parquet(s"$dir/docvecs").agg(sum(size(col("terms")))).head().getLong(0)
+    assert(segRows > 0)
+    assert(segRows == dfSum)
+    assert(segRows == pairs)
+  }
+
+  test("a partial index with an old-layout seg-0 commit fails loudly") {
+    val dir = tmpDir("graft-oldlayout")
+    // a seg-0 manifest as the exploded-segments layout wrote it
+    val commits = java.nio.file.Paths.get(dir, "_commits")
+    java.nio.file.Files.createDirectories(commits)
+    java.nio.file.Files.writeString(commits.resolve("00000-seg-0.json"),
+      """{"group": "seg-0", "rowCount": 40, "files": ["segments/g=0"],
+        | "metrics": {"stage": "segments", "group": "0"}, "elapsedSec": 0.1}""".stripMargin)
+    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir,
+      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)))
+    assert(e.getMessage.contains(s"$dir/segments"), e.getMessage)
+    assert(e.getMessage.contains("built by an older layout; delete and rebuild"), e.getMessage)
+    // nothing was written over the old partial index
+    assert(new IcebergLikeStore(dir).committedGroups() == Set("seg-0"))
     assert(!new java.io.File(s"$dir/docvecs").exists())
-    // re-invoking with the default (storeDocVectors = true) backfills the
-    // stage instead of silently returning the vectorless store
-    IndexBuilder.build(spark, corpusDf, dir, cfg.copy(storeDocVectors = true))
-    val props1 = new graft.store.IcebergLikeStore(dir).readProperties()
-    assert(props1("docVectors") == "true")
-    assert(props1("docvecsFormat") == "packed")
-    assert(props1("numDocs") == props0("numDocs")) // nothing else re-ran
-    val idx = new graft.query.BM25Index(spark, dir)
-    assert(idx.hasDocVectors && idx.docvecsFormat == "packed")
-    // the backfilled vectors feed RM3 end to end
-    import spark.implicits._
-    val q = Seq(("q1", "merge sort")).toDF("qid", "query")
-    assert(graft.query.Rm3.searchIndexed(idx, q, 5, fbDocs = 3).count() >= 0)
   }
 
-  test("resumed legacy row-per-term docvecs commit stamps docvecsFormat=rows") {
-    // r6 ADVICE (medium): a pre-round-6 partial index whose LEGACY
-    // row-per-term docvecs group is already committed must not be stamped
-    // docvecsFormat=packed on resume — Rm3's packed unpack would then fail
-    // at query time on a table without terms[]/tfs[] columns. The format is
-    // now derived from the docvecs commit's own metadata.
-    import org.apache.spark.sql.functions._
+  test("legacy row-per-term docvecs (docvecsFormat=rows) feed RM3 identically") {
+    // read compatibility: indexes built before round 6 store one docvecs
+    // row per (doc, term) and record docvecsFormat=rows; Rm3 unpacks them
+    // through its rows branch
     val dir = tmpDir("graft-legacydv")
-    val cfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)
-    IndexBuilder.build(spark, corpusDf, dir, cfg)
+    IndexBuilder.build(spark, corpusDf, dir,
+      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
     import spark.implicits._
     val q = Seq(("q1", "merge sort")).toDF("qid", "query")
     def rm3Rows() = graft.query.Rm3
@@ -165,40 +183,22 @@ class ResumeSpec extends SparkTestBase {
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3)))
       .sorted.toSeq
     val want = rm3Rows()
-    // devolve to the legacy on-disk state: row-per-term docvecs, a commit
-    // manifest without the format key, no _properties.json (= a pre-packed
-    // build interrupted right before finishing)
+    val pairs = docvecPairs(dir)
+    // rewrite the docvecs table to the legacy layout: docvecs/salt=<s>/
+    // (docIntId, term, tf)
     val legacyTmp = tmpDir("graft-legacydv-rows")
-    spark.read.parquet(s"$dir/docvecs")
-      .select(col("docIntId"),
-        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"), col("salt"))
-      .select(col("docIntId"), col("tt.terms").as("term"),
-        col("tt.tfs").as("tf"), col("salt"))
+    pairs.toDF("docIntId", "term", "tf")
+      .withColumn("salt", IndexBuilder.saltOf(col("docIntId")))
       .write.partitionBy("salt").parquet(s"$legacyTmp/docvecs")
     graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
     java.nio.file.Files.move(java.nio.file.Paths.get(s"$legacyTmp/docvecs"),
       java.nio.file.Paths.get(s"$dir/docvecs"))
-    // the manifest is rewritten through the Hadoop FS, which keeps its
-    // checksum file in step
-    val commits = new org.apache.hadoop.fs.Path(s"$dir/_commits")
-    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = fs.listStatus(commits).map(_.getPath)
-      .filter(_.getName.endsWith("-docvecs.json")).head
-    val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    val in = fs.open(manifest)
-    val body = try json.readTree(in) finally in.close()
-    val metrics = body.get("metrics")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    assert(metrics.remove("format") != null, s"format key not found in manifest: $body")
-    val out = fs.create(manifest, true)
-    try out.write(json.writeValueAsBytes(body)) finally out.close()
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$dir/_properties.json"))
-    // resume: every group is committed, so only properties are re-stamped
-    IndexBuilder.build(spark, corpusDf, dir, cfg)
+    val store = new IcebergLikeStore(dir)
+    store.writeProperties(store.readProperties() + ("docvecsFormat" -> "rows"))
     val idx = new graft.query.BM25Index(spark, dir)
-    assert(idx.docvecsFormat == "rows",
-      s"resumed legacy index stamped ${idx.docvecsFormat}")
+    assert(idx.docvecsFormat == "rows")
+    assert(spark.read.parquet(s"$dir/docvecs").columns.toSet ==
+      Set("docIntId", "term", "tf", "salt"))
     assert(rm3Rows() == want) // the rows branch feeds RM3 identically
   }
 
