@@ -582,8 +582,8 @@ object OpsQueries {
        |  round(avg(p), 5) AS p
        |FROM per GROUP BY 1""".stripMargin
 
-  /** Full index-backed engine over documents — IndexBuilder (docmap,
-    * per-group packed doc vectors, salted posting runs, delta+varbyte
+  /** Full index-backed engine over documents — IndexBuilder (per-group
+    * ids and packed doc vectors, salted posting runs, delta+varbyte
     * blocks, float32 eager impacts) →
     * WAND retrieval — now DRIVER-ORACLE-CHECKED end to end: the build uses
     * the ASCII/no-stem pipeline the DuckDB oracle can replicate exactly,

@@ -24,8 +24,7 @@ final case class PostingBlock(
   *
   * Layout under `indexDir` (an IcebergLikeStore-managed table):
   *
-  *   docmap/   (docId STRING, docIntId LONG, salt INT)
-  *   docvecs/  g=<group>/salt=<s>/ (docIntId, len, terms[], tfs[])
+  *   docvecs/  g=<group>/salt=<s>/ (docIntId, docId, len, terms[], tfs[])
   *             one packed row per document: its stored term vector
   *             [resumable per corpus group]
   *   docs/     (docIntId LONG, docId STRING, len LONG, salt INT)
@@ -35,19 +34,24 @@ final case class PostingBlock(
   *   _properties.json  scoring params + global stats (N, avgdl, numTokens)
   *
   * Scale design (SURVEY.md §4, §7):
-  *  - docIntId: surrogate ids assigned by a cheap column-pruned job (range
-  *    partition by docId + per-partition offsets), so posting lists
-  *    delta-encode and WAND walks ids in ascending order. salt = high bits
-  *    of docIntId ⇒ contiguous doc ranges; every (term, salt) posting group
+  *  - docIntId: dense surrogate ids, (p << 33) + the doc's docId rank in
+  *    its id partition p = pmod(hash(docId), P), the partition
+  *    `repartition(P, docId)` sends it to. Each segment group job assigns
+  *    them itself, after a docId sample and a doc count job: posting lists
+  *    delta-encode, WAND walks ids in ascending order, and every (group,
+  *    salt) docvecs file is one contiguous id range. salt = high bits of
+  *    docIntId ⇒ contiguous doc ranges; every (term, salt) posting group
   *    is bounded (≤ 2^SaltShift docs), which is the explicit skew salting
   *    the north rule demands — a term occurring in 50% of all docs still
   *    never forms one giant shuffle group.
   *  - the segment stage is committed per corpus group: a killed build
   *    re-runs only uncommitted groups (tokenization — the expensive part —
   *    never repeats for committed groups). In a production Iceberg
-  *    deployment the groups key off manifest file splits; here they key off
-  *    hash(docId). Each group's output is its packed doc vectors, so every
-  *    (doc, term, tf) pair is stored once.
+  *    deployment the groups key off manifest file splits; here they are
+  *    docId ranges. Each group's output is its packed doc vectors, so every
+  *    (doc, term, tf) pair is stored once; its one shuffle spreads its
+  *    tokenization over P tasks. Its manifest records P, the config fields
+  *    that shape its rows and a checksum of the sample cuts and counts.
   *  - merge stage explodes the packed rows to narrow (term, docIntId, tf,
   *    len) rows, computes exact global df with a narrow partial+final hash
   *    agg (termstats table) joined back onto them, and eagerly
@@ -56,7 +60,7 @@ final case class PostingBlock(
   */
 object IndexBuilder {
 
-  /** docs-per-salt group = 2^SaltShift (within one docmap partition). */
+  /** docs-per-salt group = 2^SaltShift (within one id partition). */
   val SaltShift = 20
 
   final case class Config(
@@ -74,7 +78,9 @@ object IndexBuilder {
       // scale weaken partition pruning and task granularity, too many at
       // small scale fragment the table into sub-row-group files.
       numBuckets: Int = 16,
-      docmapPartitions: Int = 0) // 0 = spark default parallelism
+      // id partitions P: docIntId bits 33+ hold a doc's hash partition. 0 =
+      // default parallelism; a resume keeps the P its seg-* commits recorded.
+      docmapPartitions: Int = 0)
 
   def saltOf(docIntId: Column): Column =
     shiftrightunsigned(docIntId, SaltShift).cast(IntegerType)
@@ -184,37 +190,32 @@ object IndexBuilder {
     obs.get("n").asInstanceOf[Long]
   }
 
-  /** Parquet layout knobs for the docvecs table: point-lookup-shaped, not
-    * scan-shaped. A feedback fetch filters by a SCATTERED docIntId set
-    * (top-k hits land anywhere in the corpus), which row-group MIN/MAX
-    * stats cannot skip — measured: a 100-id scattered fetch read 100% of
-    * records under the default 128 MB row groups, vs 10% with 256 KB
-    * groups + a bloom filter (BASELINE.md "Round-6 A/B: packed doc
-    * vectors", point-lookup layout). Small row groups + a docIntId bloom
-    * filter make skipped-record volume ∝ nIds × rowGroup instead of ∝
-    * table size; the cost is a few % of table size in metadata.
-    * Contiguous-range fetches keep pruning via the min/max stats as
-    * before.
+  /** Parquet layout knobs for the docvecs (key docIntId) and postings
+    * (key term) tables: point-lookup-shaped, not scan-shaped.
+    *  - docvecs: a feedback fetch filters by a SCATTERED docIntId set
+    *    (top-k hits land anywhere in the corpus), which row-group MIN/MAX
+    *    stats cannot skip — measured: a 100-id scattered fetch read 100% of
+    *    records under the default 128 MB row groups, vs 10% with 256 KB
+    *    groups + a bloom filter (BASELINE.md "Round-6 A/B: packed doc
+    *    vectors", point-lookup layout). Contiguous-range fetches keep
+    *    pruning via the min/max stats.
+    *  - postings: a query batch's distinct terms are SCATTERED across the
+    *    term-sorted row groups, so with default 128 MB groups the candidate
+    *    scan read 100% of posting rows per batch (BASELINE.md "Round-6
+    *    postings point-lookup layout": 736k records for 1,312 matching rows
+    *    at 480k docs). Term bloom filter + 1 MB row groups: 6.0% of
+    *    records, 4× faster scan, table no larger. Bucket partition pruning
+    *    and the In(term) row-group stats pruning are unchanged.
+    * Small row groups + a key bloom filter make skipped-record volume ∝
+    * nKeys × rowGroup instead of ∝ table size. The filter is sized for the
+    * `ndv` keys a file can hold, at most 16,384 (32 KB at parquet's default
+    * 1% fpp): one sized for more keys than a small file holds is mostly
+    * empty bytes. (Parquet writes none for a column chunk its dictionary
+    * encodes whole, as it does the terms of small postings files.)
     */
-  private val DocvecsWriteOptions: Map[String, String] = Map(
-    "parquet.bloom.filter.enabled#docIntId" -> "true",
-    "parquet.bloom.filter.expected.ndv#docIntId" -> "16384",
-    "parquet.block.size" -> (1 << 20).toString)
-
-  /** Same point-lookup layout for the postings table, keyed by term: a
-    * query batch's distinct terms are SCATTERED across the term-sorted row
-    * groups, so with default 128 MB groups the candidate scan read 100% of
-    * posting rows per batch (BASELINE.md "Round-6 postings point-lookup
-    * layout": 736k records for 1,312 matching rows at 480k docs). Term
-    * bloom filter + 1 MB row groups: 6.0% of records, 4× faster scan,
-    * table no larger — and the fraction keeps falling with corpus size
-    * (IO ∝ nTerms × rowGroup).
-    * Bucket partition pruning and the In(term) row-group stats pruning
-    * for narrow term sets are unchanged.
-    */
-  private val PostingsWriteOptions: Map[String, String] = Map(
-    "parquet.bloom.filter.enabled#term" -> "true",
-    "parquet.bloom.filter.expected.ndv#term" -> "16384",
+  private def pointLookupOptions(key: String, ndv: Long): Map[String, String] = Map(
+    s"parquet.bloom.filter.enabled#$key" -> "true",
+    s"parquet.bloom.filter.expected.ndv#$key" -> math.max(1L, math.min(16384L, ndv)).toString,
     "parquet.block.size" -> (1 << 20).toString)
 
   /** Build (or resume) the index for a corpus of (docId STRING, content
@@ -224,69 +225,68 @@ object IndexBuilder {
             cfg: Config = Config()): IcebergLikeStore = {
     val store = new IcebergLikeStore(indexDir)
     if (store.isComplete) return store
-    // a build resumes only its own layout: segment groups committed by the
-    // older layout (exploded rows under segments/) would be skipped here
-    // and leave their docs out of docvecs, docs and postings
-    for (g <- 0 until cfg.numSegmentGroups;
-         c <- store.lastCommit(s"seg-$g") if c.files.exists(_.startsWith("segments/")))
+    val commits = store.readCommits()
+    // a build resumes only its own layout: an older one took its ids from a
+    // docmap table, or wrote exploded rows under segments/
+    for (c <- commits.find(c => c.group == "docmap" || c.files.exists(_.startsWith("segments/"))))
       throw new IllegalStateException(s"partial index at $indexDir holds " +
-        s"$indexDir/segments, built by an older layout; delete and rebuild")
+        s"$indexDir/${if (c.group == "docmap") "docmap" else "segments"}, " +
+        "built by an older layout; delete and rebuild")
     val t0 = System.nanoTime()
 
-    val P = if (cfg.docmapPartitions > 0) cfg.docmapPartitions
-            else spark.sparkContext.defaultParallelism
+    val G = cfg.numSegmentGroups
+    val segCommits = commits.filter(_.group.startsWith("seg-"))
+    val P = segCommits.flatMap(_.metrics.get("idPartitions")).headOption.map(_.toInt)
+      .getOrElse(if (cfg.docmapPartitions > 0) cfg.docmapPartitions
+                 else spark.sparkContext.defaultParallelism)
+    val pending = (0 until G).filterNot(g => segCommits.exists(_.group == s"seg-$g"))
 
-    // A small corpus parquet collapses to one input split (128 MB default
-    // packing), which would serialize tokenization on one task. At real
-    // scale inputs have thousands of splits and this no-ops. The split
-    // count is ESTIMATED from plan statistics (file-size metadata /
-    // maxPartitionBytes) — `corpus.rdd.getNumPartitions` materialized the
-    // full RDD-conversion lineage once per build just to read a partition
-    // count (r6 VERDICT nit; guide §1.2 "don't compute things you throw
-    // away").
-    val corpusP = {
-      val maxSplitBytes = org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-      val estSplits =
-        (corpus.queryExecution.optimizedPlan.stats.sizeInBytes
-          + maxSplitBytes - 1) / maxSplitBytes
-      if (estSplits < P) corpus.repartition(P, col("docId")) else corpus
-    }
-
-    // ---- stage 0: docmap — deterministic surrogate ids. Column-pruned
-    // scan (only docId); one HASH shuffle of narrow rows + per-partition
-    // sort. Hash instead of range: ids only need to be deterministic
-    // (hash(docId) partitioning + sorted-within-partition is), not globally
-    // docId-ordered, and repartitionByRange would execute the child an
-    // extra time to sample range bounds — pure fixed cost per build.
-    val docmapPath = s"$indexDir/docmap"
-    store.stage("docmap", Seq("docmap"), Map("stage" -> "docmap")) {
-      writeCounted(
-        corpus.select(col("docId")) // column-pruned: only docId shuffles here
-          .repartition(P, col("docId"))
-          .sortWithinPartitions("docId")
-          .withColumn("docIntId", monotonically_increasing_id())
-          .withColumn("salt", saltOf(col("docIntId"))),
-        docmapPath)
-    }
-    val docmap = spark.read.parquet(docmapPath)
+    // Corpus groups are docId ranges cut at the G-quantiles of a sample
+    // (the docIds of the 256·G smallest hashes), so an id partition holds
+    // them in docId order: a group numbered after the groups before it
+    // gets the ids of one partition + sort + monotonically_increasing_id.
+    lazy val sample = corpus.select(col("docId"))
+      .orderBy(xxhash64(col("docId")), col("docId")).limit(256 * G)
+      .orderBy("docId").collect().map(_.getString(0))
+    val bounds = if (pending.isEmpty) Nil
+                 else (1 until G).flatMap(i => sample.lift(i * sample.length / G))
+    val groupOf = bounds.foldLeft(lit(0))((n, b) => n + when(col("docId") >= b, 1).otherwise(0))
+    // docs per (group, id partition)
+    val counts = Array.ofDim[Long](G, P)
+    if (pending.nonEmpty)
+      corpus.groupBy(groupOf.as("g"), pmod(hash(col("docId")), lit(P))).count().collect()
+        .foreach(r => counts(r.getInt(0))(r.getInt(1)) = r.getLong(2))
+    // what fixes a group's rows, recorded in its manifest: a resume whose
+    // config or corpus differs would duplicate some docs and lose others
+    val recorded = Seq("numSegmentGroups" -> G.toString,
+      "tokenPattern" -> cfg.tokenPattern, "stem" -> cfg.stem.toString,
+      "idPartitions" -> P.toString) ++
+      (if (pending.isEmpty) Nil else Seq("docCounts" -> java.security.MessageDigest
+        .getInstance("SHA-256").digest((bounds ++ counts.map(_.mkString(","))).mkString(";")
+          .getBytes("UTF-8"))
+        .map(b => f"$b%02x").mkString))
+    for (c <- segCommits; (k, v) <- recorded if !c.metrics.get(k).contains(v))
+      throw new IllegalStateException(s"partial index at $indexDir: ${c.group} was " +
+        s"committed with $k=${c.metrics.getOrElse(k, "(none)")}, this build has $k=$v; " +
+        "resume with the corpus and config it started with, or delete and rebuild")
 
     // ---- stage 1: segments — tokenize + per-doc term frequencies, one
     // packed doc vector per document, committed per corpus group (resume
     // skips committed groups). The stored vectors ARE the segment output:
-    // termstats and postings explode them, docs reads their len.
-    for (g <- 0 until cfg.numSegmentGroups)
-      store.stage(s"seg-$g", Seq(s"docvecs/g=$g"),
+    // termstats and postings explode them, docs projects them.
+    for (g <- 0 until G)
+      store.stage(s"seg-$g", Seq(s"docvecs/g=$g"), recorded.toMap ++
           Map("stage" -> "segments", "group" -> g.toString, "format" -> "packed")) {
-        val part = corpusP.where(
-          pmod(xxhash64(col("docId")), lit(cfg.numSegmentGroups.toLong)) === g)
-        // shuffle-hash join, never sort-merge: SMJ would SORT the full
-        // content payload by docId; hash join only shuffles it (planner
-        // still picks broadcast when docmap fits under the threshold)
-        // (null content tokenizes as empty: every doc gets its one row)
-        val toks = part.join(docmap.hint("shuffle_hash"), "docId")
-          .select(col("docIntId"), col("salt"),
+        // the one shuffle: each doc lands in its id partition, sorted by
+        // docId, numbered after the docs of groups < g there
+        val before = typedLit((0 until P).map(p => (0 until g).map(counts(_)(p)).sum))
+        val toks = corpus.where(groupOf === g)
+          .repartition(P, col("docId"))
+          .sortWithinPartitions("docId")
+          .select(col("docId"),
+            (monotonically_increasing_id() + element_at(before, spark_partition_id() + 1))
+              .as("docIntId"),
+            // (null content tokenizes as empty: every doc gets its one row)
             Tokenizer.tokens(coalesce(col("content"), lit("")), cfg.tokenPattern,
               cfg.stem).as("toks"))
         // per-doc tf computed INSIDE the row (TermCountsExpr): the previous
@@ -294,21 +294,20 @@ object IndexBuilder {
         // keys, so its hash map overflowed to a sort at scale (measured
         // super-linear past ~10^6 docs)
         val packed = toks
-          .select(col("docIntId"), col("salt"),
+          .select(col("docIntId"), col("docId"), saltOf(col("docIntId")).as("salt"),
             size(col("toks")).cast(LongType).as("len"),
             graft.index.expr.TermCountsExprs.termCounts(col("toks")).as("tc"))
-          .select(col("docIntId"), col("salt"), col("len"),
-            col("tc.term").as("terms"), col("tc.tf").as("tfs"))
-        // one shuffle of the packed rows (tokenization already ran on the
-        // join's tasks) gathers each salt on one task: one docIntId-sorted
-        // file per (group, salt), whose small row groups and docIntId bloom
-        // filter keep a feedback fetch point-lookup-shaped. The commit's
-        // rowCount is the group's (doc, term) pair count, the termstats
-        // df sum.
-        writeCounted(
-          packed.repartition(col("salt")).sortWithinPartitions("salt", "docIntId"),
+          .select(col("docIntId"), col("docId"), col("len"),
+            col("tc.term").as("terms"), col("tc.tf").as("tfs"), col("salt"))
+        // a partition holds all of its salts, so no second shuffle: one
+        // docIntId-sorted file per (group, salt), whose small row groups and
+        // docIntId bloom filter (sized for the group's fullest partition)
+        // keep a feedback fetch point-lookup-shaped. The commit's rowCount
+        // is the group's (doc, term) pair count, the termstats df sum.
+        writeCounted(packed.sortWithinPartitions("salt", "docIntId"),
           s"$indexDir/docvecs/g=$g", partitionCols = Seq("salt"),
-          options = DocvecsWriteOptions, counted = size(col("terms")).cast(LongType))
+          options = pointLookupOptions("docIntId", counts(g).max),
+          counted = size(col("terms")).cast(LongType))
       }
 
     // The downstream stages re-read the packed rows uncached: each
@@ -317,7 +316,8 @@ object IndexBuilder {
     // The schema is given, not inferred: an empty corpus writes no data
     // file under the salt-partitioned dirs.
     val docvecs = spark.read.schema(StructType(Seq(
-        StructField("docIntId", LongType), StructField("len", LongType),
+        StructField("docIntId", LongType), StructField("docId", StringType),
+        StructField("len", LongType),
         StructField("terms", ArrayType(StringType)),
         StructField("tfs", ArrayType(LongType)),
         StructField("g", IntegerType), StructField("salt", IntegerType))))
@@ -328,16 +328,11 @@ object IndexBuilder {
       .select(col("docIntId"), col("salt"), col("len"),
         col("tt.terms").as("term"), col("tt.tfs").as("tf"))
 
-    // ---- stage 2: docs table (docId, len) + global stats. A document is
-    // exactly one packed row, so its length is a two-column pruned scan.
+    // ---- stage 2: docs table (docId, len) + global stats: a projection of
+    // the packed rows, one per doc. The narrow shuffle by salt lets AQE
+    // coalesce their files (readers collect docs with incremental limits).
     store.stage("docs", Seq("docs"), Map("stage" -> "docs")) {
-      // shuffle-hash, not sort-merge: neither side needs sorting for a
-      // plain equi-join and SMJ would sort both million-row sides
-      writeCounted(
-        docmap.join(docvecs.select("docIntId", "len").hint("shuffle_hash"),
-            Seq("docIntId"), "left")
-          .select(col("docIntId"), col("docId"),
-            coalesce(col("len"), lit(0L)).as("len"), col("salt")),
+      writeCounted(docvecs.select("docIntId", "docId", "len", "salt").repartition(col("salt")),
         s"$indexDir/docs")
     }
 
@@ -366,9 +361,11 @@ object IndexBuilder {
 
     // effective bucket count: explicit, or vocabulary-derived (the vocab
     // size is the termstats commit's own row count — no extra job)
-    val numBuckets =
-      if (cfg.numBuckets > 0) cfg.numBuckets
-      else autoBuckets(store.lastCommit("termstats").map(_.rowCount).getOrElse(0L))
+    val vocab = store.lastCommit("termstats").map(_.rowCount).getOrElse(0L)
+    val numBuckets = if (cfg.numBuckets > 0) cfg.numBuckets else autoBuckets(vocab)
+    // a bucket's term count is binomial around vocab / numBuckets: four
+    // standard deviations of margin cover the fullest bucket
+    val termsPerBucket = (vocab + numBuckets - 1) / numBuckets
 
     store.stage("postings", Seq("postings"),
         Map("stage" -> "postings", "buckets" -> numBuckets.toString)) {
@@ -417,7 +414,8 @@ object IndexBuilder {
           .repartition(col("bucket"))
           .sortWithinPartitions("bucket", "term", "salt"),
         s"$indexDir/postings", partitionCols = Seq("bucket"),
-        options = PostingsWriteOptions)
+        options = pointLookupOptions("term",
+          termsPerBucket + math.ceil(4 * math.sqrt(termsPerBucket.toDouble)).toLong))
     }
 
     store.writeProperties(Map(

@@ -57,7 +57,7 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   val hasDocVectors: Boolean = props.get("docVectors").contains("true")
 
   /** Docvecs layout: "packed" (one row per doc — docIntId, salt, len,
-    * terms[], tfs[]) for every index built since round 6; "rows" for legacy
+    * terms[], tfs[], and docId in newer builds) since round 6; "rows" for legacy
     * round-5 indexes (one row per (doc, term)). Rm3.feedbackVectors
     * branches on this when unpacking.
     */
@@ -647,7 +647,7 @@ object QueryEngine {
       .select(col("term"), col("salt"), col("maxImpact"), col("blocks"))
       .crossJoin(broadcast(spark.range(G).select(col("id").cast("int").as("qgrp"))))
       // hash the salt before bucketing: salt VALUES are sparse multiples
-      // (docIntId's high bits = docmap partition id << bits), so a plain
+      // (docIntId's high bits = id partition << bits), so a plain
       // pmod(salt, S) collapses every salt into bucket 0
       .withColumn("sbucket", pmod(hash(col("salt")), lit(S)))
       .repartition(nParts, col("sbucket"), col("qgrp"))

@@ -28,26 +28,28 @@ class ResumeSpec extends SparkTestBase {
 
   private def assertSameIndex(dirA: String, dirB: String): Unit = {
     assert(postingsFingerprint(dirA) == postingsFingerprint(dirB))
-    val docsA = spark.read.parquet(s"$dirA/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
-    val docsB = spark.read.parquet(s"$dirB/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
-    assert(docsA == docsB)
+    def rows(dir: String, table: String, cols: String*): Seq[String] =
+      spark.read.parquet(s"$dir/$table").selectExpr(cols: _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(dirA, "docs", "docIntId", "docId", "len", "salt") ==
+      rows(dirB, "docs", "docIntId", "docId", "len", "salt"))
+    val vectors = Seq("docIntId", "docId", "len", "to_json(terms)", "to_json(tfs)", "g", "salt")
+    assert(rows(dirA, "docvecs", vectors: _*) == rows(dirB, "docvecs", vectors: _*))
+    assert(rows(dirA, "termstats", "term", "df", "ctf") == rows(dirB, "termstats", "term", "df", "ctf"))
+    assert(new IcebergLikeStore(dirA).readProperties().removed("buildElapsedSec") ==
+      new IcebergLikeStore(dirB).readProperties().removed("buildElapsedSec"))
   }
 
   private val Injected = "injected failure: sentinel doc"
 
   /** Build `dir` over corpusDf with one sentinel doc of the LAST segment
-    * group whose content raises `Injected` when read: the build dies inside
-    * that group's docvecs write, after the earlier groups committed. The
-    * corpus is staged as parquet first — over a local relation the
-    * optimizer would evaluate the sentinel column while planning.
+    * group (groups are docId ranges: the largest docId) whose content
+    * raises `Injected` when read: the build dies inside that group's
+    * docvecs write, after the earlier groups committed. The corpus is
+    * staged as parquet first — over a local relation the optimizer would
+    * evaluate the sentinel column while planning.
     */
   private def killedBuild(dir: String, cfg: IndexBuilder.Config): Unit = {
-    val groups = cfg.numSegmentGroups
-    val sentinel = corpusDf
-      .where(pmod(xxhash64(col("docId")), lit(groups.toLong)) === groups - 1)
-      .agg(min("docId")).head().getString(0)
+    val sentinel = corpusDf.agg(max("docId")).head().getString(0)
     val staged = s"${tmpDir("graft-killing-corpus")}/corpus"
     corpusDf.write.parquet(staged)
     val killing: DataFrame = spark.read.parquet(staged).withColumn("content",
@@ -72,12 +74,167 @@ class ResumeSpec extends SparkTestBase {
     killedBuild(dirB, cfg)
     val store = new IcebergLikeStore(dirB)
     assert(!store.isComplete)
-    assert(store.committedGroups() == Set("docmap", "seg-0", "seg-1"))
+    assert(store.committedGroups() == Set("seg-0", "seg-1"))
 
     // resume: only seg-2 and downstream stages run
     IndexBuilder.build(spark, corpusDf, dirB, cfg)
     assert(new IcebergLikeStore(dirB).isComplete)
     assertSameIndex(dirA, dirB)
+  }
+
+  private val matrixCfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)
+  private lazy val completed = {
+    val dir = tmpDir("graft-completed")
+    IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+    dir
+  }
+
+  /** A copy of the completed build, cut back to a kill inside `stage`:
+    * "write" before its write (no data, no manifest), "rename" after the
+    * write and before the manifest rename (its data and a truncated temp
+    * manifest), "commit" after the rename. The later stages left nothing,
+    * and `_properties.json` is never there.
+    */
+  private def killedCopy(stage: String, at: String): String = {
+    val dir = tmpDir(s"graft-kill-$stage-$at")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(completed), new java.io.File(dir))
+    val commitsDir = new java.io.File(dir, "_commits")
+    // manifests are named <seq>-<group>.json in commit order
+    val manifests = commitsDir.listFiles.filter(_.getName.head.isDigit).sortBy(_.getName)
+    val commits = new IcebergLikeStore(dir).readCommits()
+    assert(commits.map(_.group) == Seq("seg-0", "seg-1", "docs", "termstats", "postings"))
+    for ((c, m) <- commits.zip(manifests).dropWhile(_._1.group != stage)) {
+      if (c.group != stage || at == "write")
+        c.files.foreach(f => graft.util.Dirs.deleteRecursively(new java.io.File(dir, f)))
+      if (c.group != stage || at != "commit") {
+        m.delete()
+        new java.io.File(commitsDir, s".${m.getName}.crc").delete()
+      }
+      if (c.group == stage && at == "rename")
+        java.nio.file.Files.writeString(
+          new java.io.File(commitsDir, ".tmp-" + m.getName.stripSuffix(".json")).toPath,
+          s"""{"group": "$stage", "rowCount": """)
+    }
+    new java.io.File(dir, "_properties.json").delete()
+    dir
+  }
+
+  for (stage <- Seq("seg-0", "seg-1", "docs", "termstats", "postings");
+       at <- Seq("write", "rename", "commit"))
+    test(s"a build killed at $stage, $at, resumes to the identical index") {
+      val dir = killedCopy(stage, at)
+      val store = new IcebergLikeStore(dir)
+      assert(!store.isComplete)
+      assert(store.committedGroups().contains(stage) == (at == "commit"))
+      IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+      assert(new IcebergLikeStore(dir).isComplete)
+      assertSameIndex(completed, dir)
+    }
+
+  test("a resume under another default parallelism numbers with the recorded P") {
+    val dir = killedCopy("seg-0", "commit")
+    val sc = spark.sparkContext
+    val conf = classOf[org.apache.spark.SparkContext].getMethod("conf").invoke(sc)
+      .asInstanceOf[org.apache.spark.SparkConf]
+    val before = sc.defaultParallelism
+    conf.set("spark.default.parallelism", (before + 3).toString)
+    try {
+      assert(sc.defaultParallelism == before + 3)
+      IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+    } finally conf.remove("spark.default.parallelism")
+    assert(sc.defaultParallelism == before)
+    assertSameIndex(completed, dir)
+  }
+
+  /** Resuming `dir` under `cfg` fails naming `field` and writes nothing. */
+  private def assertRefused(dir: String, corpus: DataFrame, cfg: IndexBuilder.Config,
+                            field: String): Unit = {
+    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpus, dir, cfg))
+    assert(e.getMessage.contains(s"seg-0 was committed with $field="), e.getMessage)
+    assert(new IcebergLikeStore(dir).committedGroups() == Set("seg-0"))
+    assert(new java.io.File(s"$dir/docvecs").list().toSeq == Seq("g=0"))
+  }
+
+  test("a resume with a changed group count, token pattern or stemming fails loudly") {
+    assertRefused(killedCopy("seg-0", "commit"), corpusDf,
+      matrixCfg.copy(numSegmentGroups = 3), "numSegmentGroups")
+    assertRefused(killedCopy("seg-0", "commit"), corpusDf,
+      matrixCfg.copy(tokenPattern = graft.tokenize.Tokenizer.AsciiTokenPattern), "tokenPattern")
+    assertRefused(killedCopy("seg-0", "commit"), corpusDf,
+      matrixCfg.copy(stem = false), "stem")
+  }
+
+  test("a resume over a changed corpus fails loudly") {
+    import spark.implicits._
+    val grown = corpusDf.union(Seq(("extra-doc", "merge sort")).toDF("docId", "content"))
+    assertRefused(killedCopy("seg-0", "commit"), grown, matrixCfg, "docCounts")
+  }
+
+  test("a partial index with a docmap commit fails loudly") {
+    val dir = killedCopy("seg-0", "commit")
+    // a docmap manifest as the joined-docmap layout wrote it, first in the log
+    val commits = java.nio.file.Paths.get(dir, "_commits")
+    java.nio.file.Files.move(commits.resolve("00000-seg-0.json"), commits.resolve("00001-seg-0.json"))
+    java.nio.file.Files.writeString(commits.resolve("00000-docmap.json"),
+      """{"group": "docmap", "rowCount": 80, "files": ["docmap"],
+        | "metrics": {"stage": "docmap"}, "elapsedSec": 0.1}""".stripMargin)
+    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir, matrixCfg))
+    assert(e.getMessage.contains(s"$dir/docmap"), e.getMessage)
+    assert(e.getMessage.contains("built by an older layout; delete and rebuild"), e.getMessage)
+    assert(new IcebergLikeStore(dir).committedGroups() == Set("docmap", "seg-0"))
+  }
+
+  test("ids: the docId rank in its hash partition, whatever the group count") {
+    // the rule a separate docmap table used to hold: hash partition of P,
+    // sorted by docId, numbered by monotonically_increasing_id
+    val rule = corpusDf.select("docId").repartition(4, col("docId"))
+      .sortWithinPartitions("docId").withColumn("docIntId", monotonically_increasing_id())
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    for (groups <- Seq(1, 3)) {
+      val dir = tmpDir(s"graft-ids-$groups")
+      IndexBuilder.build(spark, corpusDf, dir,
+        IndexBuilder.Config(numSegmentGroups = groups, numBuckets = 4, docmapPartitions = 4))
+      val ids = spark.read.parquet(s"$dir/docs").collect()
+        .map(r => r.getAs[String]("docId") -> r.getAs[Long]("docIntId")).toMap
+      assert(ids == rule, s"$groups groups")
+      // every group holds docs, and each (group, salt) file one id range
+      val ranges = spark.read.parquet(s"$dir/docvecs").groupBy("g", "salt")
+        .agg(count(lit(1)), min("docIntId"), max("docIntId")).collect()
+      assert(ranges.map(_.getInt(0)).distinct.length == groups)
+      for (r <- ranges) {
+        val inRange = rule.values.count(id => id >= r.getLong(3) && id <= r.getLong(4))
+        assert(inRange == r.getLong(2), r)
+      }
+    }
+  }
+
+  test("bloom filters are sized for the keys a file holds") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+    // parquet writes no bloom filter for a column chunk it could encode
+    // with a dictionary alone, as it does the terms of small postings files
+    val dir = tmpDir("graft-bloom")
+    spark.conf.set("parquet.enable.dictionary", "false")
+    try IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+    finally spark.conf.unset("parquet.enable.dictionary")
+    val full = new BlockSplitBloomFilter(BlockSplitBloomFilter.optimalNumOfBits(16384, 0.01) / 8)
+      .getBitsetSize
+    def bloomBytes(table: String, column: String): Seq[Int] =
+      org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir, table),
+          Array("parquet"), true).asScala.toSeq.flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getBlocks.asScala.toSeq.map { b =>
+          r.readBloomFilter(b.getColumns.asScala.find(_.getPath.toDotString == column).get)
+            .getBitsetSize
+        } finally r.close()
+      }
+    for ((table, column) <- Seq("docvecs" -> "docIntId", "postings" -> "term")) {
+      val sizes = bloomBytes(table, column)
+      assert(sizes.nonEmpty, table)
+      assert(sizes.forall(_ < full), s"$table bloom bytes $sizes, 16384-ndv size $full")
+    }
   }
 
   test("a truncated temp manifest left by a killed commit is not read as a commit") {
@@ -91,7 +248,7 @@ class ResumeSpec extends SparkTestBase {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dirB, "_commits", ".tmp-docs.json"),
       "{\"group\": \"docs\", \"rowCount\": ")
-    assert(new IcebergLikeStore(dirB).committedGroups() == Set("docmap", "seg-0"))
+    assert(new IcebergLikeStore(dirB).committedGroups() == Set("seg-0"))
     IndexBuilder.build(spark, corpusDf, dirB, cfg)
     assert(new IcebergLikeStore(dirB).isComplete)
     assertSameIndex(dirA, dirB)

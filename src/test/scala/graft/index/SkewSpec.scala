@@ -26,7 +26,7 @@ class SkewSpec extends SparkTestBase {
     val dir = tmpDir("graft-skew")
     import spark.implicits._
     val df = corpus.toDF("docId", "content")
-    // several docmap partitions -> several salts even at this small size
+    // several id partitions -> several salts even at this small size
     IndexBuilder.build(spark, df, dir,
       IndexBuilder.Config(stem = false,
         tokenPattern = graft.tokenize.Tokenizer.AsciiTokenPattern,

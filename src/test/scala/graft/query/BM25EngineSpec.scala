@@ -319,6 +319,6 @@ class BM25EngineSpec extends SparkTestBase {
     // per-partition lineage present
     val commits = idx.store.readCommits()
     assert(commits.map(_.group).toSet
-      .intersect(Set("docmap", "seg-0", "seg-1", "docs", "postings")).size == 5)
+      .intersect(Set("seg-0", "seg-1", "docs", "termstats", "postings")).size == 5)
   }
 }

@@ -2,17 +2,25 @@
 """Check that a parent revision and this checkout build the same index.
 
   python3 tools/same_index.py --parent <rev> [--seed 4001] [--work DIR]
+  python3 tools/same_index.py --dirs <parent index> <change index>
 
 Exports the parent with `git archive` into DIR/parent-<sha> (as
 tools/perfbench_ab.py does, and reused from it), builds perfbench on each
 side, and runs one short `rm3_k100` perfbench pass per side whose work
-directory is kept, so the index it built stays at DIR/index-<side>. Then
-compares the two index directories with pyarrow: postings (term, salt, df,
-count, maxImpact and block bytes), docs rows, docmap ids, termstats and the
-(docIntId, term, tf) pair sets of `docvecs` (or of `segments`, where a side
-still has that table). Prints each table's parquet bytes and file count.
-Exit status 1 when any comparison differs.
+directory is kept, so the index it built stays at DIR/index-<side>
+(`--dirs` compares two existing index directories instead). Prints each
+table's parquet bytes and file count, then compares the two indexes with
+pyarrow, keyed by docId: postings impacts per (term, docId) with the ids
+resolved through `docs`, (docId, term, tf) pairs of `docvecs` (or of
+`segments`, where a side still has that table), docs (docId, len) rows and
+termstats. Exit status 1 when any of these differs. A second block compares
+by raw docIntId (postings with their block bytes, docs rows, pairs). It is
+informational: it holds while both sides number each doc by its docId rank
+in its hash partition of P, as the docmap table did and the segment groups
+now do at any numSegmentGroups; top-k ties break by docIntId, so it shows
+whether tied results keep their order.
 """
+import struct
 import argparse
 import glob
 import os
@@ -64,43 +72,95 @@ def pairs(index):
                   for t, f in zip(r["terms"], r["tfs"]))
 
 
-CHECKS = {
+def doc_ids(index):
+    return {r["docIntId"]: r["docId"] for r in rows(index, "docs")}
+
+
+def decode_ids(data, n):
+    """Codec.decodeDeltaVarByte: n delta-coded 7-bit varints."""
+    out, pos, prev = [], 0, 0
+    for i in range(n):
+        v = shift = 0
+        while True:
+            b = data[pos]
+            pos += 1
+            v |= (b & 0x7F) << shift
+            shift += 7
+            if not b & 0x80:
+                break
+        prev = v if i == 0 else prev + v
+        out.append(prev)
+    return out
+
+
+def doc_pairs(index):
+    ids = doc_ids(index)
+    return sorted((ids[d], t, f) for d, t, f in pairs(index))
+
+
+def impacts(index):
+    ids = doc_ids(index)
+    return sorted((r["term"], ids[d], imp) for r in rows(index, "postings")
+                  for b in r["blocks"]
+                  for d, imp in zip(decode_ids(b["ids"], b["n"]),
+                                    struct.unpack(f"<{b['n']}f", b["imps"])))
+
+
+BY_DOC_ID = {
+    "postings impacts per (term, docId)": impacts,
+    "(docId, term, tf) pairs": doc_pairs,
+    "docs (docId, len)": lambda i: sorted((r["docId"], r["len"]) for r in rows(i, "docs")),
+    "termstats": lambda i: sorted((r["term"], r["df"], r["ctf"])
+                                  for r in rows(i, "termstats")),
+}
+
+BY_RAW_ID = {
     "postings": lambda i: sorted(
         (r["term"], r["salt"], r["df"], r["count"], r["maxImpact"],
          tuple((b["first"], b["last"], b["max"], b["n"], b["ids"], b["imps"])
                for b in r["blocks"])) for r in rows(i, "postings")),
     "docs": lambda i: sorted((r["docIntId"], r["docId"], r["len"], r["salt"])
                              for r in rows(i, "docs")),
-    "docmap": lambda i: sorted((r["docId"], r["docIntId"], r["salt"])
-                               for r in rows(i, "docmap")),
-    "termstats": lambda i: sorted((r["term"], r["df"], r["ctf"])
-                                  for r in rows(i, "termstats")),
     "(docIntId, term, tf) pairs": pairs,
 }
 
 
+def compare(checks, sides):
+    same = True
+    for name, f in checks.items():
+        x, y = f(sides["parent"]), f(sides["change"])
+        print(f"  {name}: {len(x)} vs {len(y)} rows, identical={x == y}")
+        same &= x == y
+    return same
+
+
 def main():
     p = argparse.ArgumentParser()
-    p.add_argument("--parent", required=True)
+    p.add_argument("--parent")
+    p.add_argument("--dirs", nargs=2, metavar=("PARENT_INDEX", "CHANGE_INDEX"))
     p.add_argument("--seed", type=int, default=4001)
     p.add_argument("--work")
     a = p.parse_args()
-    work = a.work or tempfile.mkdtemp(prefix="same-index-")
-    sha, parent = export(a.parent, work)
-    sides = {"parent": build_index(parent, a.seed, os.path.join(work, "index-parent")),
-             "change": build_index(REPO, a.seed, os.path.join(work, "index-change"))}
+    if a.dirs:
+        sides = dict(zip(["parent", "change"], a.dirs))
+    elif a.parent:
+        work = a.work or tempfile.mkdtemp(prefix="same-index-")
+        sha, parent = export(a.parent, work)
+        sides = {"parent": build_index(parent, a.seed, os.path.join(work, "index-parent")),
+                 "change": build_index(REPO, a.seed, os.path.join(work, "index-change"))}
+    else:
+        p.error("give --parent or --dirs")
     for side, index in sides.items():
-        print(f"{side} ({sha if side == 'parent' else 'worktree'}):")
+        print(f"{side} ({index}):")
         for t in TABLES:
             files = glob.glob(os.path.join(index, t, "**", "*.parquet"), recursive=True)
             if files:
                 mb = sum(os.path.getsize(f) for f in files) / 1e6
                 print(f"  {t:10s} {mb:.3f} MB in {len(files)} files")
-    same = True
-    for name, f in CHECKS.items():
-        x, y = f(sides["parent"]), f(sides["change"])
-        print(f"{name}: {len(x)} vs {len(y)} rows, identical={x == y}")
-        same &= x == y
+    print("by docId:")
+    same = compare(BY_DOC_ID, sides)
+    print("by raw docIntId (informational):")
+    compare(BY_RAW_ID, sides)
     sys.exit(0 if same else 1)
 
 
