@@ -3,7 +3,7 @@ package graft.query
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.index.{Codec, IndexBuilder}
@@ -77,16 +77,44 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   }
 
   /** docs dimension (docIntId → docId, len): cached MEMORY_AND_DISK — it is
-    * re-read by every query's finish join (spills to disk if the corpus is
-    * too large to pin, so this stays safe at scale). Deliberately cached
-    * UNpartitioned: pre-repartitioning by docIntId was tried and measured
-    * SLOWER end to end (the cached exchange cost more than the per-batch
-    * shuffle it saved).
+    * re-read by doc-filter resolution, the [[docIdDict]] build, RM3's
+    * declarative feedback fetch and the finish join of an index above
+    * `broadcastHitsMaxRows` docs (spills
+    * to disk if the corpus is too large to pin, so this stays safe at
+    * scale). Deliberately cached UNpartitioned: pre-repartitioning by
+    * docIntId was tried and measured SLOWER end to end (the cached exchange
+    * cost more than the per-batch shuffle it saved).
     */
   lazy val docs: DataFrame = {
     val d = spark.read.parquet(s"$indexDir/docs")
     d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     d
+  }
+
+  /** The docId dictionary of an index of at most `broadcastHitsMaxRows`
+    * docs ([[QueryEngine.finishTopK]] checks the bound): built on first use
+    * by one collect of docs(docIntId, docId) and broadcast once per handle.
+    * It reads the cached dimension, which a doc filter has often
+    * materialized already. It retains ~150 bytes per doc on the driver
+    * with 42-character docIds (the deserialized arrays plus the broadcast's
+    * serialized blocks), ~70 MB at 480k docs.
+    */
+  private[graft] lazy val docIdDict: Broadcast[DocIdDict] = {
+    import spark.implicits._
+    val pairs = docs.select(col("docIntId"), col("docId")).as[(Long, String)].collect()
+      .sortBy(_._1)
+    spark.sparkContext.broadcast(new DocIdDict(pairs.map(_._1), pairs.map(_._2)))
+  }
+}
+
+/** docIntId → docId over the whole docs table: `ids` ascending, `docIds`
+  * beside them. Resolves only final top-k hits, by binary search.
+  */
+final class DocIdDict(ids: Array[Long], docIds: Array[String]) extends Serializable {
+  def docIdOf(docIntId: Long): String = {
+    val i = java.util.Arrays.binarySearch(ids, docIntId)
+    if (i < 0) throw new IllegalStateException(s"docIntId $docIntId is not in the docs table")
+    docIds(i)
   }
 }
 
@@ -198,8 +226,10 @@ object QueryEngine {
     }
   }
 
-  /** Max hit rows (nQueries × k) the finish join may broadcast; above this
-    * it becomes a shuffled hash join (hits as build side — docs is never
+  /** Max hit rows (nQueries × k) the finish join may broadcast, and max
+    * docs of an index whose finish resolves docIds from the handle's
+    * broadcast [[BM25Index.docIdDict]] instead of joining. Above both the
+    * join is a shuffled hash join (hits as build side — docs is never
     * sorted or broadcast). 10k queries × k=1000 would otherwise push a
     * 10M-row broadcast to the driver + every executor.
     */
@@ -207,46 +237,72 @@ object QueryEngine {
     spark.conf.getOption("spark.graft.broadcastHitsMaxRows")
       .map(_.toLong).getOrElse(1L << 20)
 
-  /** The docId-resolution finish shared by both paths: ONE join of the
-    * ranked hit set (qid, docIntId, score, rank) — at most nQueries × k
-    * rows — with the docs dimension. Up to broadcastHitsMaxRows hit rows
-    * the hits are broadcast; above it the join is a shuffled hash join
-    * (hits as the hash build side; docs is never sorted or broadcast). The
-    * exact path ranks with the grouped [[topHits]] udaf; the kernel path
-    * with [[mergePartials]], whose qid strings come from an O(1)
-    * `element_at` into the chunk's qid array literal after the merge.
+  /** Ranked hits (qid, docIntId, score, rank): at most nQueries × k rows. */
+  private type Hits = Dataset[(String, Long, Double, Int)]
+
+  /** The docId resolution shared by both paths, over the ranked hit set.
+    * An index of at most `broadcastHitsMaxRows` docs maps each hit through
+    * [[BM25Index.docIdDict]] in the task that ranked it: no join, no docs
+    * scan and no exchange. A larger index joins the hits with the docs
+    * dimension: broadcast hits up to `broadcastHitsMaxRows` hit rows,
+    * shuffled hash above (hits as the hash build side; docs is never
+    * sorted or broadcast). The exact path ranks with the grouped
+    * [[topHits]] udaf, the kernel path with [[mergePartials]].
     */
-  private def finishTopK(index: BM25Index, hits: DataFrame, k: Int,
+  private def finishTopK(index: BM25Index, hits: Hits, k: Int,
                          nQueries: Long): DataFrame = {
-    val joined =
-      if (nQueries * k <= broadcastHitsMaxRows(index.spark))
-        index.docs.join(broadcast(hits), "docIntId")
-      else
-        index.docs.join(hits.hint("shuffle_hash"), "docIntId")
-    joined.select(col("qid"), col("docId"), col("score"), col("rank"))
+    val bound = broadcastHitsMaxRows(index.spark)
+    if (index.numDocs <= bound) {
+      import index.spark.implicits._
+      val dict = index.docIdDict
+      hits.map { case (qid, id, score, rank) => (qid, dict.value.docIdOf(id), score, rank) }
+        .toDF("qid", "docId", "score", "rank")
+    } else {
+      val h = hits.toDF("qid", "docIntId", "score", "rank")
+      val joined =
+        if (nQueries * k <= bound) index.docs.join(broadcast(h), "docIntId")
+        else index.docs.join(h.hint("shuffle_hash"), "docIntId")
+      joined.select(col("qid"), col("docId"), col("score"), col("rank"))
+    }
   }
 
   /** The exact path's ranking: grouped bounded-heap top-k per qid through
     * the [[TopKAggregator]] udaf, exploded to (qid, docIntId, score, rank).
     */
-  private def topHits(scored: DataFrame, k: Int): DataFrame = {
+  private def topHits(scored: DataFrame, k: Int): Hits = {
+    import scored.sparkSession.implicits._
     val topk = udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])
     scored.groupBy("qid").agg(topk(col("docIntId"), col("score")).as("hits"))
       .select(col("qid"), posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(col("qid"), col("hit.docId").as("docIntId"),
         col("hit.score").as("score"), (col("pos") + 1).cast("int").as("rank"))
+      .as[(String, Long, Double, Int)]
   }
+
+  /** Final hits (nQueries × k) per merge task. A batch of fewer than
+    * S × G × this hits merges in fewer tasks than the kernel's S × G, down
+    * to one, so a small call's finished rows do not land in S × G
+    * near-empty partitions or spilled files. The docs join used to gather
+    * them into one; without it the driver suite's filtered indexed entry
+    * ran slower until this bound.
+    */
+  private val MergeTaskHits = 1L << 16
 
   /** The kernel path's ranking: kernel partials (qidx, docIntIds, scores —
     * sorted lists, see [[wandPartials]]) repartitioned by qidx into the
-    * kernel's own S × G partitions, then ONE k-way merge per query
+    * kernel's own S × G partitions (fewer for a batch of under
+    * S × G × [[MergeTaskHits]] hits), then ONE k-way merge per query
     * ([[TopKAggregator.mergeSorted]]) that emits only the final top-k with
-    * ranks. A merge task holds its queries' lists, about one kernel task's
-    * heap rows. `qid` maps qidx to the qid string.
+    * ranks, its qid read from the chunk's query broadcast. A merge task
+    * holds its queries' lists, about one kernel task's heap rows; with the
+    * docId dictionary, [[finishTopK]]'s lookup runs in the same task.
     */
-  private def mergePartials(partials: Partials, k: Int, qid: Column): DataFrame = {
+  private def mergePartials(partials: Partials, k: Int): Hits = {
     import partials.df.sparkSession.implicits._
-    partials.df.repartition(partials.nParts, col("qidx"))
+    val bq = partials.bq
+    val nParts = math.min(partials.nParts.toLong,
+      (bq.value.length.toLong * k + MergeTaskHits - 1) / MergeTaskHits).toInt
+    partials.df.repartition(nParts, col("qidx"))
       .as[(Int, Array[Long], Array[Double])]
       .mapPartitions { rows =>
         val byQuery = scala.collection.mutable.HashMap
@@ -256,12 +312,11 @@ object QueryEngine {
             ((ids, scores))
         }
         byQuery.iterator.flatMap { case (q, lists) =>
+          val qid = bq.value(q)._1
           val (ids, scores) = TopKAggregator.mergeSorted(lists, k)
-          Iterator.tabulate(ids.length)(i => (q, ids(i), scores(i), i + 1))
+          Iterator.tabulate(ids.length)(i => (qid, ids(i), scores(i), i + 1))
         }
       }
-      .toDF("qidx", "docIntId", "score", "rank")
-      .select(qid.as("qid"), col("docIntId"), col("score"), col("rank"))
   }
 
   /** One chunk's top-k hits collected to the driver BEFORE the docs join:
@@ -503,8 +558,7 @@ object QueryEngine {
       if (live.isEmpty) None
       else {
         val p = wandPartialsWithHandle(index, live, k, allowedBc)
-        val qidOf = element_at(typedLit(live.map(_._1).toSeq), col("qidx") + 1)
-        Some((finishTopK(index, mergePartials(p, k, qidOf), k, live.length), p.bq))
+        Some((finishTopK(index, mergePartials(p, k), k, live.length), p.bq))
       }
     }
     try {

@@ -2,6 +2,7 @@ package graft.store
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
@@ -110,6 +111,7 @@ class IcebergLikeStore(tableDir: String) {
 
   private def readCommit(manifest: Path): PartitionCommit = {
     val j = readJson(manifest)
+    if (!Seq("group", "rowCount", "elapsedSec").forall(j.has)) throw unreadable(manifest, null)
     PartitionCommit(j.get("group").asText, j.path("files").asScala.map(_.asText).toSeq,
       j.get("rowCount").asLong, textFields(j.path("metrics")), j.get("elapsedSec").asDouble)
   }
@@ -117,10 +119,25 @@ class IcebergLikeStore(tableDir: String) {
   private def textFields(j: JsonNode): Map[String, String] =
     j.properties.asScala.map(e => e.getKey -> e.getValue.asText).toMap
 
+  /** The JSON object in `p`. An empty, truncated or non-object file (a
+    * write cut short outside the temp-and-rename protocol, or a damaged
+    * copy) fails naming the file, not as a bare parser error or an NPE;
+    * so does a manifest missing a field ([[readCommit]]).
+    */
   private def readJson(p: Path): JsonNode = {
     val in = fs.open(p)
-    try IcebergLikeStore.Json.readTree(in) finally in.close()
+    val j =
+      try IcebergLikeStore.Json.readTree(in)
+      catch { case e: JsonProcessingException => throw unreadable(p, e) }
+      finally in.close()
+    if (j == null || !j.isObject) throw unreadable(p, null)
+    j
   }
+
+  private def unreadable(p: Path, cause: Throwable): IllegalStateException =
+    new IllegalStateException(s"$p is empty or incomplete (truncated JSON or missing fields); " +
+      "delete it and every later _commits manifest, then re-run the build to resume, " +
+      "or delete the index and rebuild", cause)
 
   /** Write `value` as JSON to a hidden temp file beside `target`, then
     * rename it over `target`. A filesystem whose rename does not replace

@@ -254,6 +254,48 @@ class ResumeSpec extends SparkTestBase {
     assertSameIndex(dirA, dirB)
   }
 
+  /** Overwrites `file` under `dir` with `body` as a torn write would leave
+    * it, dropping its Hadoop checksum sidecar (a stale one would fail the
+    * read before the JSON parser sees the bytes).
+    */
+  private def tear(dir: String, file: String, body: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get(dir, file)
+    java.nio.file.Files.writeString(p, body)
+    java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    p
+  }
+
+  private def assertNamed(e: IllegalStateException, file: java.nio.file.Path): Unit = {
+    assert(e.getMessage.contains(file.toString), e.getMessage)
+    assert(e.getMessage.contains("delete it"), e.getMessage)
+  }
+
+  for ((what, manifest, props) <- Seq(
+      ("an empty", "", ""),
+      ("a truncated", """{"group": "docs", "rowCount": """, """{"k1": "1.2", "b": """)))
+    test(s"$what committed manifest or _properties.json fails naming the file") {
+      // a manifest: the store and the build refuse it by name; deleting it
+      // and the later manifests, as the message says, resumes
+      val dir = killedCopy("postings", "commit")
+      val torn = tear(dir, "_commits/00002-docs.json", manifest)
+      assertNamed(intercept[IllegalStateException](new IcebergLikeStore(dir).readCommits()), torn)
+      assertNamed(intercept[IllegalStateException](
+        IndexBuilder.build(spark, corpusDf, dir, matrixCfg)), torn)
+      for (m <- Seq("00002-docs", "00003-termstats", "00004-postings");
+           f <- Seq(s"$m.json", s".$m.json.crc"))
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "_commits", f))
+      IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+      assertSameIndex(completed, dir)
+      // the properties file: opening the index refuses it by name; deleting
+      // it and re-running the build writes it again
+      val tornProps = tear(dir, "_properties.json", props)
+      assertNamed(intercept[IllegalStateException](
+        new graft.query.BM25Index(spark, dir)), tornProps)
+      java.nio.file.Files.delete(tornProps)
+      IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+      assertSameIndex(completed, dir)
+    }
+
   test("completed build is a no-op on re-invocation") {
     val dir = tmpDir("graft-noop")
     val cfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)

@@ -248,6 +248,35 @@ class BM25EngineSpec extends SparkTestBase {
     }
   }
 
+  test("the docId dictionary finish returns the join finish's rows") {
+    // an index of at most broadcastHitsMaxRows docs resolves docIds from the
+    // handle's dictionary; a bound below numDocs takes the docs join — both
+    // must give identical rows on every path that finishes through them
+    import org.apache.spark.sql.functions._
+    val idx = new BM25Index(spark, indexDir)
+    val pred = Some(pmod(xxhash64(col("docId")), lit(2)) === 0)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def parity(leg: String, confs: (String, String)*)(
+        search: => org.apache.spark.sql.DataFrame): Unit = {
+      confs.foreach { case (c, v) => spark.conf.set(c, v) }
+      try {
+        val dict = rows(search)
+        spark.conf.set("spark.graft.broadcastHitsMaxRows", (idx.numDocs - 1).toString)
+        val joined =
+          try rows(search) finally spark.conf.unset("spark.graft.broadcastHitsMaxRows")
+        assert(dict.nonEmpty, leg)
+        assert(dict == joined, s"$leg: dictionary and join finishes differ")
+      } finally confs.foreach { case (c, _) => spark.conf.unset(c) }
+    }
+    parity("searchWand k=10")(QueryEngine.searchWand(idx, queriesDf, k))
+    parity("searchWand k=1000")(QueryEngine.searchWand(idx, queriesDf, 1000))
+    parity("searchExact")(QueryEngine.searchExact(idx, queriesDf, k))
+    parity("filtered searchWand")(QueryEngine.searchWand(idx, queriesDf, k, pred))
+    parity("early drains", "spark.graft.taskHeapMaxRows" -> "1")(
+      QueryEngine.searchWand(idx, queriesDf, k))
+  }
+
   test("warm small-batch searchWand job count, unfiltered and filtered") {
     // both benchmark workloads take this leg: one limit-collect probe, the
     // kernel and the finish — no count() and no second probe. The filtered
@@ -255,10 +284,11 @@ class BM25EngineSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val idx = new BM25Index(spark, indexDir)
     val pred = Some(pmod(xxhash64(col("docId")), lit(2)) === 0)
-    // the counts measured before the kernel entry points shared one route
-    for ((flt, maxJobs) <- Seq((None, 5), (pred, 8))) {
+    // the counts measured once the finish resolved docIds from the handle's
+    // dictionary instead of joining docs (5 and 8 with the join)
+    for ((flt, maxJobs) <- Seq((None, 4), (pred, 7))) {
       def call() = QueryEngine.searchWand(idx, queriesDf, k, flt).collect()
-      call() // first use opens the index tables and caches the docs dimension
+      call() // first use opens the index tables and builds the docId dictionary
       val jobs = jobsIn(call())
       assert(jobs <= maxJobs, s"filter=${flt.isDefined}: $jobs jobs")
     }

@@ -110,11 +110,23 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val q = Seq(("q1", "binary search tree"), ("q2", "hash index merge"))
       .toDF("qid", "query")
-    // Above the bound: nQueries*k=2000 > 1000 -> shuffled hash join, hits
-    // as build side; docs must be neither broadcast nor sort-merged. qid
-    // resolution is an element_at into the chunk's literal qid array — no
-    // join, so NO hash broadcast belongs in this plan at all.
-    spark.conf.set("spark.graft.broadcastHitsMaxRows", "1000")
+    // At the default bound the fixture's 100 docs resolve through the
+    // handle's docId dictionary inside the merge task: the kernel plan has
+    // no join but the kernel's query-group cross join, and never reads the
+    // docs table.
+    for (kk <- Seq(10, 1000)) {
+      val phys = QueryEngine.searchWand(idx, q, kk).queryExecution.executedPlan.toString
+      assert("\\w*Join".r.findAllIn(phys).toSet == Set("BroadcastNestedLoopJoin"),
+        s"k=$kk: a join in the dictionary finish:\n$phys")
+      assert(!phys.contains(s"$indexDir/docs]") && !phys.contains("InMemoryTableScan"),
+        s"k=$kk: the docs table is scanned:\n$phys")
+    }
+    // A bound below the 100 docs takes the join. Above the hit bound:
+    // nQueries*k=2000 > 50 -> shuffled hash join, hits as build side; docs
+    // must be neither broadcast nor sort-merged. qid resolution reads the
+    // chunk's query broadcast in the merge task — no join, so NO hash
+    // broadcast belongs in this plan at all.
+    spark.conf.set("spark.graft.broadcastHitsMaxRows", "50")
     try {
       val big = QueryEngine.searchWand(idx, q, 1000)
       val physBig = big.queryExecution.executedPlan.toString
@@ -129,7 +141,7 @@ class PlanSpec extends SparkTestBase {
       assert(nBroadcasts == 0,
         s"$nBroadcasts hash broadcasts (expected none):\n$physBig")
       assert(big.count() > 0)
-      // Below the bound: broadcast resolution join as before.
+      // Below the hit bound (2*10=20 ≤ 50): broadcast resolution join.
       val small = QueryEngine.searchWand(idx, q, 10)
       assert(small.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
     } finally spark.conf.unset("spark.graft.broadcastHitsMaxRows")

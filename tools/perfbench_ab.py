@@ -17,7 +17,11 @@ by more than the parent's interquartile range, and a no-regression
 verdict against the metric's BENCHMARK.json `bound` (a relative change):
 `worse` when the change's median is worse than the parent's by more than
 the bound, else `unresolved` when the parent's IQR/median exceeds the
-bound (its runs spread too widely to tell), else `ok`. Raw run results go
+bound (its runs spread too widely to tell), else `ok`. A second table
+gives `heap_retained_mb` over only the pairs whose two sides ran the same
+number of calls (`attempted` - 1): the retained heap grows with the calls a
+run makes in its window, so over all pairs a throughput gain reads as a heap
+rise. Raw run results go
 to --out as JSON lines. Exit status 1 when any run fails or is incorrect.
 
 Noise guard: each run prints `calibration_ms=`, a fixed CPU-bound loop timed
@@ -129,6 +133,14 @@ def main():
     print(f"{a.workload}: parent {sha} vs working tree, {a.pairs} interleaved pairs")
     both = [(p, c) for p, c in zip(results["parent"], results["change"]) if p and c]
     table(metrics, both)
+    # heap_retained_mb grows with the calls a run makes in its window, so a
+    # throughput change moves it; the pairs whose sides ran the same number
+    # of calls compare the heap alone
+    even = [(p, c) for p, c in both if p.get("attempted") == c.get("attempted")]
+    print(f"equal calls: {len(even)} of {len(both)} pairs ran the same number of "
+          f"calls (attempted - 1) on both sides" + (":" if even else "."))
+    if even:
+        table({"heap_retained_mb": metrics["heap_retained_mb"]}, even)
     calibs = [r["calibration_ms"] for pc in both for r in pc if "calibration_ms" in r]
     if calibs:
         med = statistics.median(calibs)
