@@ -25,9 +25,9 @@ final case class PostingBlock(
   * Layout under `indexDir` (an IcebergLikeStore-managed table):
   *
   *   docvecs/  g=<group>/salt=<s>/ (docIntId, docId, len, terms[], tfs[])
-  *             one packed row per document: its stored term vector
-  *             [resumable per corpus group]
-  *   docs/     (docIntId LONG, docId STRING, len LONG, salt INT)
+  *             one packed row per document: its stored term vector, and
+  *             the docs dimension (docIntId, docId, len, salt) that
+  *             BM25Index.docs projects from it [resumable per corpus group]
   *   termstats/ (term STRING, df LONG, ctf LONG)
   *   postings/ bucket=<b>/ (term, salt, df, count, maxImpact, blocks)
   *   _commits/ *.json  per-partition-group lineage + metrics
@@ -81,6 +81,12 @@ object IndexBuilder {
       // id partitions P: docIntId bits 33+ hold a doc's hash partition. 0 =
       // default parallelism; a resume keeps the P its seg-* commits recorded.
       docmapPartitions: Int = 0)
+
+  /** The packed doc-vector table with its partition columns: read with it,
+    * not inferred, since an empty corpus writes no data file under them.
+    */
+  private[graft] val DocvecsSchema: StructType = StructType.fromDDL("docIntId BIGINT, " +
+    "docId STRING, len BIGINT, terms ARRAY<STRING>, tfs ARRAY<BIGINT>, g INT, salt INT")
 
   def saltOf(docIntId: Column): Column =
     shiftrightunsigned(docIntId, SaltShift).cast(IntegerType)
@@ -273,7 +279,7 @@ object IndexBuilder {
     // ---- stage 1: segments — tokenize + per-doc term frequencies, one
     // packed doc vector per document, committed per corpus group (resume
     // skips committed groups). The stored vectors ARE the segment output:
-    // termstats and postings explode them, docs projects them.
+    // termstats and postings explode them, the docs dimension projects them.
     for (g <- 0 until G)
       store.stage(s"seg-$g", Seq(s"docvecs/g=$g"), recorded.toMap ++
           Map("stage" -> "segments", "group" -> g.toString, "format" -> "packed")) {
@@ -313,42 +319,26 @@ object IndexBuilder {
     // The downstream stages re-read the packed rows uncached: each
     // column-prunes a different subset, and re-scanning narrow columns
     // measured FASTER than a columnar cache (BASELINE.md "Segments cache").
-    // The schema is given, not inferred: an empty corpus writes no data
-    // file under the salt-partitioned dirs.
-    val docvecs = spark.read.schema(StructType(Seq(
-        StructField("docIntId", LongType), StructField("docId", StringType),
-        StructField("len", LongType),
-        StructField("terms", ArrayType(StringType)),
-        StructField("tfs", ArrayType(LongType)),
-        StructField("g", IntegerType), StructField("salt", IntegerType))))
-      .parquet(s"$indexDir/docvecs")
+    val docvecs = spark.read.schema(DocvecsSchema).parquet(s"$indexDir/docvecs")
     val pairs = docvecs
       .select(col("docIntId"), col("salt"), col("len"),
         explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
       .select(col("docIntId"), col("salt"), col("len"),
         col("tt.terms").as("term"), col("tt.tfs").as("tf"))
 
-    // ---- stage 2: docs table (docId, len) + global stats: a projection of
-    // the packed rows, one per doc. The narrow shuffle by salt lets AQE
-    // coalesce their files (readers collect docs with incremental limits).
-    store.stage("docs", Seq("docs"), Map("stage" -> "docs")) {
-      writeCounted(docvecs.select("docIntId", "docId", "len", "salt").repartition(col("salt")),
-        s"$indexDir/docs")
-    }
-
-    val docs = spark.read.parquet(s"$indexDir/docs")
-    val statsRow = docs.agg(count(lit(1)), avg(col("len")), sum(col("len")),
+    // global stats over the docs projection of the packed rows, one per doc
+    val statsRow = docvecs.agg(count(lit(1)), avg(col("len")), sum(col("len")),
       countDistinct(col("salt"))).head()
     val numDocs = statsRow.getLong(0)
     val avgdl = if (numDocs == 0 || statsRow.isNullAt(1)) 0.0 else statsRow.getDouble(1)
     val numTokens = if (statsRow.isNullAt(2)) 0L else statsRow.getLong(2)
     val numSalts = statsRow.getLong(3)
 
-    // ---- stage 3: postings — sorted (term, salt) runs, global df from the
+    // ---- stage 2: postings — sorted (term, salt) runs, global df from the
     // narrow termstats agg, eager impacts, delta+varbyte blocks.
     val p = cfg.params
 
-    // stage 3a: narrow per-term stats (exact global df; partial+final hash
+    // stage 2a: narrow per-term stats (exact global df; partial+final hash
     // agg, so a term in 50% of docs never concentrates on one task).
     // Persisted: also the query-side term dictionary for diagnostics.
     store.stage("termstats", Seq("termstats"), Map("stage" -> "termstats")) {

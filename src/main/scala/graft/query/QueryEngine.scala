@@ -76,26 +76,31 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
     spark.read.parquet(s"$indexDir/docvecs")
   }
 
-  /** docs dimension (docIntId → docId, len): cached MEMORY_AND_DISK — it is
-    * re-read by doc-filter resolution, the [[docIdDict]] build, RM3's
-    * declarative feedback fetch and the finish join of an index above
-    * `broadcastHitsMaxRows` docs (spills
-    * to disk if the corpus is too large to pin, so this stays safe at
-    * scale). Deliberately cached UNpartitioned: pre-repartitioning by
-    * docIntId was tried and measured SLOWER end to end (the cached exchange
-    * cost more than the per-batch shuffle it saved).
+  /** docs dimension (docIntId, docId, len, salt): the projection of the
+    * packed [[docvecs]] rows read with [[IndexBuilder.DocvecsSchema]], or
+    * the `docs/` table of an index built while one was written. Cached
+    * MEMORY_AND_DISK for doc-filter resolution, the [[docIdDict]] build,
+    * RM3's declarative feedback fetch and the finish join above
+    * `broadcastHitsMaxRows` docs; up to that bound as one partition, so
+    * `collectAllowed`'s limit-collect runs one job (BASELINE "Store each
+    * document once"). Repartitioning by docIntId measured SLOWER.
     */
   lazy val docs: DataFrame = {
-    val d = spark.read.parquet(s"$indexDir/docs")
+    val table = new org.apache.hadoop.fs.Path(indexDir, "docs")
+    val d =
+      if (table.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(table))
+        spark.read.parquet(table.toString)
+      else spark.read.schema(IndexBuilder.DocvecsSchema).parquet(s"$indexDir/docvecs")
+        .select("docIntId", "docId", "len", "salt")
+        .transform(p => if (numDocs <= QueryEngine.broadcastHitsMaxRows(spark)) p.coalesce(1) else p)
     d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d
   }
 
   /** The docId dictionary of an index of at most `broadcastHitsMaxRows`
     * docs ([[QueryEngine.finishTopK]] checks the bound): built on first use
-    * by one collect of docs(docIntId, docId) and broadcast once per handle.
-    * It reads the cached dimension, which a doc filter has often
-    * materialized already. It retains ~150 bytes per doc on the driver
+    * by one collect of the cached [[docs]] projection's (docIntId, docId),
+    * which a doc filter has often materialized already, and broadcast once
+    * per handle. It retains ~150 bytes per doc on the driver
     * with 42-character docIds (the deserialized arrays plus the broadcast's
     * serialized blocks), ~70 MB at 480k docs.
     */
@@ -107,13 +112,13 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   }
 }
 
-/** docIntId → docId over the whole docs table: `ids` ascending, `docIds`
+/** docIntId → docId over the whole docs dimension: `ids` ascending, `docIds`
   * beside them. Resolves only final top-k hits, by binary search.
   */
 final class DocIdDict(ids: Array[Long], docIds: Array[String]) extends Serializable {
   def docIdOf(docIntId: Long): String = {
     val i = java.util.Arrays.binarySearch(ids, docIntId)
-    if (i < 0) throw new IllegalStateException(s"docIntId $docIntId is not in the docs table")
+    if (i < 0) throw new IllegalStateException(s"docIntId $docIntId is not in the docs dimension")
     docIds(i)
   }
 }

@@ -226,12 +226,11 @@ object Rm3 {
 
   /** Stored vectors of distinct docIntIds collected to the driver by ONE
     * pruned docvecs scan: docIntId → (terms, tfs). A build writes one
-    * packed row per doc, so Σtfs is the doc's full length — the docs
-    * table's `len` by construction (the docs stage reads it from the
-    * packed rows). Older packed indexes could split a doc into two partial
-    * rows, which concatenate here (each (doc, term) pair exists once);
-    * legacy "rows"-format tables group their (docIntId, term, tf) rows the
-    * same way.
+    * packed row per doc, so Σtfs is the doc's full length — the `len`
+    * that row carries into the docs dimension. Older packed indexes could
+    * split a doc into two partial rows, which concatenate here (each
+    * (doc, term) pair exists once); legacy "rows"-format tables group
+    * their (docIntId, term, tf) rows the same way.
     */
   private[query] def fetchVectors(index: BM25Index, ids: Array[Long])
       : Map[Long, (Array[String], Array[Long])] = {

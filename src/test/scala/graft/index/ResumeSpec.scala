@@ -26,12 +26,17 @@ class ResumeSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getString(3)))
       .toSeq.sortBy(t => (t._1, t._2))
 
+  /** The docs dimension of the index at `dir`, as its handle reads it. */
+  private def docsOf(dir: String): DataFrame = new graft.query.BM25Index(spark, dir).docs
+
   private def assertSameIndex(dirA: String, dirB: String): Unit = {
     assert(postingsFingerprint(dirA) == postingsFingerprint(dirB))
+    def sorted(df: DataFrame, cols: String*): Seq[String] =
+      df.selectExpr(cols: _*).collect().map(_.toString).sorted.toSeq
     def rows(dir: String, table: String, cols: String*): Seq[String] =
-      spark.read.parquet(s"$dir/$table").selectExpr(cols: _*).collect().map(_.toString).sorted.toSeq
-    assert(rows(dirA, "docs", "docIntId", "docId", "len", "salt") ==
-      rows(dirB, "docs", "docIntId", "docId", "len", "salt"))
+      sorted(spark.read.parquet(s"$dir/$table"), cols: _*)
+    assert(sorted(docsOf(dirA), "docIntId", "docId", "len", "salt") ==
+      sorted(docsOf(dirB), "docIntId", "docId", "len", "salt"))
     val vectors = Seq("docIntId", "docId", "len", "to_json(terms)", "to_json(tfs)", "g", "salt")
     assert(rows(dirA, "docvecs", vectors: _*) == rows(dirB, "docvecs", vectors: _*))
     assert(rows(dirA, "termstats", "term", "df", "ctf") == rows(dirB, "termstats", "term", "df", "ctf"))
@@ -102,7 +107,7 @@ class ResumeSpec extends SparkTestBase {
     // manifests are named <seq>-<group>.json in commit order
     val manifests = commitsDir.listFiles.filter(_.getName.head.isDigit).sortBy(_.getName)
     val commits = new IcebergLikeStore(dir).readCommits()
-    assert(commits.map(_.group) == Seq("seg-0", "seg-1", "docs", "termstats", "postings"))
+    assert(commits.map(_.group) == Seq("seg-0", "seg-1", "termstats", "postings"))
     for ((c, m) <- commits.zip(manifests).dropWhile(_._1.group != stage)) {
       if (c.group != stage || at == "write")
         c.files.foreach(f => graft.util.Dirs.deleteRecursively(new java.io.File(dir, f)))
@@ -119,7 +124,7 @@ class ResumeSpec extends SparkTestBase {
     dir
   }
 
-  for (stage <- Seq("seg-0", "seg-1", "docs", "termstats", "postings");
+  for (stage <- Seq("seg-0", "seg-1", "termstats", "postings");
        at <- Seq("write", "rename", "commit"))
     test(s"a build killed at $stage, $at, resumes to the identical index") {
       val dir = killedCopy(stage, at)
@@ -194,7 +199,7 @@ class ResumeSpec extends SparkTestBase {
       val dir = tmpDir(s"graft-ids-$groups")
       IndexBuilder.build(spark, corpusDf, dir,
         IndexBuilder.Config(numSegmentGroups = groups, numBuckets = 4, docmapPartitions = 4))
-      val ids = spark.read.parquet(s"$dir/docs").collect()
+      val ids = docsOf(dir).collect()
         .map(r => r.getAs[String]("docId") -> r.getAs[Long]("docIntId")).toMap
       assert(ids == rule, s"$groups groups")
       // every group holds docs, and each (group, salt) file one id range
@@ -243,11 +248,11 @@ class ResumeSpec extends SparkTestBase {
     val cfg = IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)
     IndexBuilder.build(spark, corpusDf, dirA, cfg)
     killedBuild(dirB, cfg)
-    // a kill inside the docs commit, before its rename, leaves a truncated
-    // temp manifest behind
+    // a kill inside the termstats commit, before its rename, leaves a
+    // truncated temp manifest behind
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dirB, "_commits", ".tmp-docs.json"),
-      "{\"group\": \"docs\", \"rowCount\": ")
+      java.nio.file.Paths.get(dirB, "_commits", ".tmp-termstats.json"),
+      "{\"group\": \"termstats\", \"rowCount\": ")
     assert(new IcebergLikeStore(dirB).committedGroups() == Set("seg-0"))
     IndexBuilder.build(spark, corpusDf, dirB, cfg)
     assert(new IcebergLikeStore(dirB).isComplete)
@@ -272,16 +277,16 @@ class ResumeSpec extends SparkTestBase {
 
   for ((what, manifest, props) <- Seq(
       ("an empty", "", ""),
-      ("a truncated", """{"group": "docs", "rowCount": """, """{"k1": "1.2", "b": """)))
+      ("a truncated", """{"group": "termstats", "rowCount": """, """{"k1": "1.2", "b": """)))
     test(s"$what committed manifest or _properties.json fails naming the file") {
       // a manifest: the store and the build refuse it by name; deleting it
       // and the later manifests, as the message says, resumes
       val dir = killedCopy("postings", "commit")
-      val torn = tear(dir, "_commits/00002-docs.json", manifest)
+      val torn = tear(dir, "_commits/00002-termstats.json", manifest)
       assertNamed(intercept[IllegalStateException](new IcebergLikeStore(dir).readCommits()), torn)
       assertNamed(intercept[IllegalStateException](
         IndexBuilder.build(spark, corpusDf, dir, matrixCfg)), torn)
-      for (m <- Seq("00002-docs", "00003-termstats", "00004-postings");
+      for (m <- Seq("00002-termstats", "00003-postings");
            f <- Seq(s"$m.json", s".$m.json.crc"))
         java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, "_commits", f))
       IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
@@ -317,7 +322,7 @@ class ResumeSpec extends SparkTestBase {
     IndexBuilder.build(spark, corpusDf, dir,
       IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
     val unpacked = docvecPairs(dir)
-    val intIds = spark.read.parquet(s"$dir/docs").select("docId", "docIntId")
+    val intIds = docsOf(dir).select("docId", "docIntId")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = corpusDf.collect().toSeq.flatMap { r =>
       graft.tokenize.Tokenizer.tokenizeScalar(r.getString(1))
@@ -348,6 +353,49 @@ class ResumeSpec extends SparkTestBase {
     assert(segRows > 0)
     assert(segRows == dfSum)
     assert(segRows == pairs)
+  }
+
+  test("a build writes no docs table: BM25Index.docs projects the packed rows") {
+    assert(!new java.io.File(s"$completed/docs").exists())
+    assert(new IcebergLikeStore(completed).readCommits().map(_.group) ==
+      Seq("seg-0", "seg-1", "termstats", "postings"))
+    val docs = docsOf(completed)
+    val rows = docs.collect().map(_.toString).sorted.toSeq
+    assert(rows.length == corpusDf.count())
+    assert(docs.select("docId").distinct().count() == rows.length)
+    assert(rows == spark.read.parquet(s"$completed/docvecs")
+      .select("docIntId", "docId", "len", "salt").collect().map(_.toString).sorted.toSeq)
+    // one cached partition below the dictionary bound: a filter's
+    // limit-collect over it runs one job
+    assert(docs.rdd.getNumPartitions == 1)
+  }
+
+  test("an index with a docs table and docId-less docvecs opens through docs/") {
+    // the layout of builds that wrote a separate docs table: docs/
+    // (docIntId, docId, len, salt) and packed docvecs rows without docId
+    val dir = tmpDir("graft-legacydocs")
+    IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
+    import spark.implicits._
+    val q = Seq(("q1", "merge sort"), ("q2", "binary search tree")).toDF("qid", "query")
+    def results(idx: graft.query.BM25Index): Seq[Seq[String]] =
+      Seq(graft.query.QueryEngine.searchWand(idx, q, 5),
+        graft.query.QueryEngine.searchExact(idx, q, 5),
+        graft.query.Rm3.searchIndexed(idx, q, 5, fbDocs = 3))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+    val want = results(new graft.query.BM25Index(spark, dir))
+    val old = tmpDir("graft-legacydocs-tables")
+    docsOf(dir).write.parquet(s"$old/docs")
+    spark.read.parquet(s"$dir/docvecs").drop("docId")
+      .write.partitionBy("g", "salt").parquet(s"$old/docvecs")
+    graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
+    for (t <- Seq("docs", "docvecs"))
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$old/$t"), java.nio.file.Paths.get(s"$dir/$t"))
+    val idx = new graft.query.BM25Index(spark, dir)
+    assert(!idx.docvecs.columns.contains("docId"))
+    val plan = idx.docs.queryExecution.executedPlan.toString
+    assert(plan.contains(s"$dir/docs]") && !plan.contains(s"$dir/docvecs]"), plan)
+    assert(want.forall(_.nonEmpty))
+    assert(results(idx) == want)
   }
 
   test("a partial index with an old-layout seg-0 commit fails loudly") {
@@ -384,14 +432,16 @@ class ResumeSpec extends SparkTestBase {
     val want = rm3Rows()
     val pairs = docvecPairs(dir)
     // rewrite the docvecs table to the legacy layout: docvecs/salt=<s>/
-    // (docIntId, term, tf)
+    // (docIntId, term, tf), beside the docs table that layout had
     val legacyTmp = tmpDir("graft-legacydv-rows")
     pairs.toDF("docIntId", "term", "tf")
       .withColumn("salt", IndexBuilder.saltOf(col("docIntId")))
       .write.partitionBy("salt").parquet(s"$legacyTmp/docvecs")
+    docsOf(dir).write.parquet(s"$legacyTmp/docs")
     graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
-    java.nio.file.Files.move(java.nio.file.Paths.get(s"$legacyTmp/docvecs"),
-      java.nio.file.Paths.get(s"$dir/docvecs"))
+    for (t <- Seq("docs", "docvecs"))
+      java.nio.file.Files.move(java.nio.file.Paths.get(s"$legacyTmp/$t"),
+        java.nio.file.Paths.get(s"$dir/$t"))
     val store = new IcebergLikeStore(dir)
     store.writeProperties(store.readProperties() + ("docvecsFormat" -> "rows"))
     val idx = new graft.query.BM25Index(spark, dir)
@@ -421,9 +471,9 @@ class ResumeSpec extends SparkTestBase {
     val dir = tmpDir("graft-sha")
     val c = corpusDf
     IndexBuilder.build(spark, c, dir, IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
-    // every input docId appears exactly once in the docs table
+    // every input docId appears exactly once in the docs dimension
     val in = c.select(col("docId"), sha2(col("content").cast("binary"), 256).as("sha"))
-    val out = spark.read.parquet(s"$dir/docs").select("docId")
+    val out = docsOf(dir).select("docId")
     assert(out.count() == in.count())
     assert(out.join(in, "docId").count() == in.count())
     // and the content hashes of the input are stable across two reads

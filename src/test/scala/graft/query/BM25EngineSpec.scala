@@ -348,7 +348,6 @@ class BM25EngineSpec extends SparkTestBase {
     assert(idx.props("stemmer") == "snowball-en")
     // per-partition lineage present
     val commits = idx.store.readCommits()
-    assert(commits.map(_.group).toSet
-      .intersect(Set("seg-0", "seg-1", "docs", "termstats", "postings")).size == 5)
+    assert(commits.map(_.group).toSet == Set("seg-0", "seg-1", "termstats", "postings"))
   }
 }

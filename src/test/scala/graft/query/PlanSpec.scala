@@ -10,7 +10,8 @@ import graft.util.SynthCorpus
   *  - query-term candidate scan prunes postings bucket partitions and
   *    pushes the term predicate into the parquet scan;
   *  - the composed driver queries keep their scans column-pruned;
-  *  - dimension joins broadcast.
+  *  - dimension joins broadcast;
+  *  - a warm indexed driver entry runs a pinned number of jobs.
   */
 class PlanSpec extends SparkTestBase {
 
@@ -105,6 +106,17 @@ class PlanSpec extends SparkTestBase {
     assert(physical.contains("BroadcastHashJoin"), physical)
   }
 
+  test("warm bm25_topk_filtered_indexed entry job count") {
+    // the entry reuses its index handle, so a warm call neither re-caches
+    // the docs dimension nor rebuilds the docId dictionary: 8 jobs, where
+    // a new handle per call ran 11
+    assumeFixtures()
+    def call() = graft.entry.OpsQueries.bm25TopkFilteredIndexed(spark, sfDir).collect()
+    call()
+    val jobs = jobsIn(call())
+    assert(jobs <= 8, s"$jobs jobs")
+  }
+
   test("finish join never broadcasts hits above the row bound") {
     val idx = new BM25Index(spark, indexDir)
     import spark.implicits._
@@ -113,13 +125,13 @@ class PlanSpec extends SparkTestBase {
     // At the default bound the fixture's 100 docs resolve through the
     // handle's docId dictionary inside the merge task: the kernel plan has
     // no join but the kernel's query-group cross join, and never reads the
-    // docs table.
+    // docs dimension (the packed docvecs rows) or its cache.
     for (kk <- Seq(10, 1000)) {
       val phys = QueryEngine.searchWand(idx, q, kk).queryExecution.executedPlan.toString
       assert("\\w*Join".r.findAllIn(phys).toSet == Set("BroadcastNestedLoopJoin"),
         s"k=$kk: a join in the dictionary finish:\n$phys")
-      assert(!phys.contains(s"$indexDir/docs]") && !phys.contains("InMemoryTableScan"),
-        s"k=$kk: the docs table is scanned:\n$phys")
+      assert(!phys.contains(s"$indexDir/docvecs]") && !phys.contains("InMemoryTableScan"),
+        s"k=$kk: the docs dimension is scanned:\n$phys")
     }
     // A bound below the 100 docs takes the join. Above the hit bound:
     // nQueries*k=2000 > 50 -> shuffled hash join, hits as build side; docs

@@ -11,10 +11,12 @@ directory is kept, so the index it built stays at DIR/index-<side>
 (`--dirs` compares two existing index directories instead). Prints each
 table's parquet bytes and file count, then compares the two indexes with
 pyarrow, keyed by docId: postings impacts per (term, docId) with the ids
-resolved through `docs`, (docId, term, tf) pairs of `docvecs` (or of
-`segments`, where a side still has that table), docs (docId, len) rows and
-termstats. Exit status 1 when any of these differs. A second block compares
-by raw docIntId (postings with their block bytes, docs rows, pairs). It is
+resolved through the docs dimension, (docId, term, tf) pairs of `docvecs`
+(or of `segments`, where a side still has that table), docs (docId, len)
+rows and termstats. The docs dimension is the `docs` table where a side
+has one, else the (docIntId, docId, len, salt) projection of `docvecs`.
+Exit status 1 when any of these differs. A second block compares by raw
+docIntId (postings with their block bytes, docs rows, pairs). It is
 informational: it holds while both sides number each doc by its docId rank
 in its hash partition of P, as the docmap table did and the segment groups
 now do at any numSegmentGroups; top-k ties break by docIntId, so it shows
@@ -72,8 +74,15 @@ def pairs(index):
                   for t, f in zip(r["terms"], r["tfs"]))
 
 
+def docs(index):
+    """The docs table, or the docs projection of the packed docvecs rows."""
+    table = "docs" if os.path.isdir(os.path.join(index, "docs")) else "docvecs"
+    return [{c: r[c] for c in ("docIntId", "docId", "len", "salt")}
+            for r in rows(index, table)]
+
+
 def doc_ids(index):
-    return {r["docIntId"]: r["docId"] for r in rows(index, "docs")}
+    return {r["docIntId"]: r["docId"] for r in docs(index)}
 
 
 def decode_ids(data, n):
@@ -109,7 +118,7 @@ def impacts(index):
 BY_DOC_ID = {
     "postings impacts per (term, docId)": impacts,
     "(docId, term, tf) pairs": doc_pairs,
-    "docs (docId, len)": lambda i: sorted((r["docId"], r["len"]) for r in rows(i, "docs")),
+    "docs (docId, len)": lambda i: sorted((r["docId"], r["len"]) for r in docs(i)),
     "termstats": lambda i: sorted((r["term"], r["df"], r["ctf"])
                                   for r in rows(i, "termstats")),
 }
@@ -120,7 +129,7 @@ BY_RAW_ID = {
          tuple((b["first"], b["last"], b["max"], b["n"], b["ids"], b["imps"])
                for b in r["blocks"])) for r in rows(i, "postings")),
     "docs": lambda i: sorted((r["docIntId"], r["docId"], r["len"], r["salt"])
-                             for r in rows(i, "docs")),
+                             for r in docs(i)),
     "(docIntId, term, tf) pairs": pairs,
 }
 
