@@ -63,6 +63,13 @@ object IndexBuilder {
   /** docs-per-salt group = 2^SaltShift (within one id partition). */
   val SaltShift = 20
 
+  /** docIntId bits from here up hold the doc's id partition p: the layout
+    * of `monotonically_increasing_id`, which numbers the segment groups.
+    * A salt is therefore (p << (IdPartitionShift − SaltShift)) + its run j
+    * within the partition.
+    */
+  private[graft] val IdPartitionShift = 33
+
   final case class Config(
       params: BM25Params = BM25Params(),
       tokenPattern: String = Tokenizer.TokenPattern,

@@ -135,10 +135,11 @@ final class DocIdDict(ids: Array[Long], docIds: Array[String]) extends Serializa
   *    sparse by construction: only docs containing a query term are touched.
   *
   *  - `searchWand`: per-(term,salt) posting runs are repartitioned by salt
-  *    (contiguous doc ranges), and each task runs document-at-a-time WAND
-  *    with block-max skipping and a bounded heap per query; each task's
-  *    sorted per-query lists then k-way merge per query. The analogue of
-  *    PISA's `block_max_maxscore` (benchmark/on_pisa.py:51,98-100).
+  *    bucket and query group (contiguous doc ranges), and each task runs
+  *    document-at-a-time WAND with block-max skipping (or term-at-a-time
+  *    accumulation at deep k) into a bounded heap per query; each query's
+  *    unsorted heap arrays then meet in one select+sort of its top k. The
+  *    analogue of PISA's `block_max_maxscore` (benchmark/on_pisa.py:51,98-100).
   *
   * Every kernel-backed entry point — `searchWand`, `searchWandWeighted`
   * and `Rm3.searchIndexed` — takes ONE route ([[route]]): a single probe,
@@ -294,13 +295,14 @@ object QueryEngine {
   private val MergeTaskHits = 1L << 16
 
   /** The kernel path's ranking: kernel partials (qidx, docIntIds, scores —
-    * sorted lists, see [[wandPartials]]) repartitioned by qidx into the
-    * kernel's own S × G partitions (fewer for a batch of under
-    * S × G × [[MergeTaskHits]] hits), then ONE k-way merge per query
-    * ([[TopKAggregator.mergeSorted]]) that emits only the final top-k with
-    * ranks, its qid read from the chunk's query broadcast. A merge task
-    * holds its queries' lists, about one kernel task's heap rows; with the
-    * docId dictionary, [[finishTopK]]'s lookup runs in the same task.
+    * unsorted heap arrays, see [[wandPartials]]) repartitioned by qidx into
+    * the kernel's own S × G partitions (fewer for a batch of under
+    * S × G × [[MergeTaskHits]] hits), then ONE select+sort per query
+    * ([[TopKAggregator.selectSorted]]: the best k of its ≤ S × k entries,
+    * and only those sorted) that emits the final top-k with ranks, its qid
+    * read from the chunk's query broadcast. A merge task holds its
+    * queries' lists, about one kernel task's heap rows; with the docId
+    * dictionary, [[finishTopK]]'s lookup runs in the same task.
     */
   private def mergePartials(partials: Partials, k: Int): Hits = {
     import partials.df.sparkSession.implicits._
@@ -318,7 +320,7 @@ object QueryEngine {
         }
         byQuery.iterator.flatMap { case (q, lists) =>
           val qid = bq.value(q)._1
-          val (ids, scores) = TopKAggregator.mergeSorted(lists, k)
+          val (ids, scores) = TopKAggregator.selectSorted(lists, k)
           Iterator.tabulate(ids.length)(i => (qid, ids(i), scores(i), i + 1))
         }
       }
@@ -326,10 +328,10 @@ object QueryEngine {
 
   /** One chunk's top-k hits collected to the driver BEFORE the docs join:
     * (docIntId, score) in rank order, indexed by the query's position in
-    * `qArr`, with no docId round trip. The kernel's sorted lists are
-    * collected as they are and merged on the driver
-    * ([[TopKAggregator.mergeSorted]]), so the collect runs no exchange. It
-    * is bounded by nQ × S × k entries (S salt buckets, see
+    * `qArr`, with no docId round trip. The kernel's unsorted lists are
+    * collected as they are and each query's best k selected and sorted on
+    * the driver ([[TopKAggregator.selectSorted]]), so the collect runs no
+    * exchange. It is bounded by nQ × S × k entries (S salt buckets, see
     * [[wandPartials]]) plus one list per query for each early drain.
     * Destroys the chunk's query broadcast (the collect has run).
     */
@@ -342,7 +344,7 @@ object QueryEngine {
       case (q, ids, scores) => lists(q) = (ids, scores) :: lists(q)
     } finally p.bq.destroy()
     lists.map { l =>
-      val (ids, scores) = TopKAggregator.mergeSorted(l, k)
+      val (ids, scores) = TopKAggregator.selectSorted(l, k)
       ids.zip(scores)
     }
   }
@@ -452,7 +454,10 @@ object QueryEngine {
     * sweeps at 480k docs × 1200 queries × k=1000 (BASELINE.md "Deep-k
     * salt-bucket cap"): 4.6 s at S=4 vs 6.6 s at S=8 and 76 s at S=1,
     * G=64 on the round-2 kernel; S ∈ {2,4,6} re-checked on round 3's
-    * direct-heap kernel, S=4 still best.
+    * direct-heap kernel, S=4 still best. Every one of those sweeps ran
+    * under the old hashed placement (pmod(hash(salt), S), then a hash of
+    * (bucket, group) into S × G partitions), which left some tasks
+    * without rows; none has run under [[saltBucket]]'s round-robin one.
     */
   private val DeepKSaltBuckets = 4
 
@@ -643,11 +648,12 @@ object QueryEngine {
   }
 
   /** One chunk's kernel partials: (qidx, docIntIds array<bigint>, scores
-    * array<double>), one row per non-empty task heap per drain, each list
-    * sorted by (score DESC, docIntId ASC) and at most k long. A query gets
-    * one list from each of the ≤ S salt-bucket tasks that hold its query
-    * group, plus one per early drain; across its lists a docIntId appears
-    * at most once. [[mergePartials]] merges them into the top k.
+    * array<double>), one row per non-empty task heap per drain: the heap's
+    * arrays as they are, UNSORTED, at most k long. A query gets one list
+    * from each of the ≤ S salt-bucket tasks that hold its query group (see
+    * [[fanOut]] and [[kernelInput]]), plus one per early drain; across its
+    * lists a docIntId appears at most once. [[mergePartials]] selects and
+    * sorts its top k from them.
     */
   private[graft] def wandPartials(index: BM25Index, qArr: QueryArr,
                                   k: Int): DataFrame =
@@ -677,52 +683,16 @@ object QueryEngine {
     val useTaat = k >= scoreAllMinK(spark) ||
       qArr.length >= taatMinBatchQueries(spark)
     val shift = index.saltShift
-    val P2 = spark.sparkContext.defaultParallelism * 2
-
-    // Parallelism = salt buckets × query groups. At index scale salts ≫
-    // cores and G = 1 (no replicated decode); on a small index queries
-    // split into G groups so the kernel still fills the cluster — posting
-    // rows replicate G× through the shuffle.
-    // Each task's kernels insert into ONE heap per query covering every
-    // salt the task holds, so shuffled emission is nQueries × S lists of
-    // ≤ k entries — bounded by the BUCKET count S, not numSalts. TAAT mode
-    // caps S at DeepKSaltBuckets and raises G to keep S×G ≈ 2·parallelism: a
-    // little replicated block decode buys 4× less emission + finish
-    // traffic. At 10^12-doc scale the same cap keeps emission independent
-    // of the million-salt index layout.
-    var G = math.max(1, math.min(qArr.length,
-      (P2 + index.numSalts - 1) / math.max(1, index.numSalts)))
-    var S = math.min(index.numSalts.toLong, math.max(1L, P2.toLong / G)).toInt
-    if (useTaat) {
-      // S CONSTANT in deep-k mode — emission per query (S × k rows) must
-      // not grow with cluster size, or per-query merge work rises with
-      // cores and caps throughput scaling; G alone carries parallelism
-      S = math.min(index.numSalts, DeepKSaltBuckets)
-      G = math.max(1, math.min(qArr.length, P2 / S))
-    }
-    val nParts = S * G
-
-    val cand = candidates(index, terms)
-      .select(col("term"), col("salt"), col("maxImpact"), col("blocks"))
-      .crossJoin(broadcast(spark.range(G).select(col("id").cast("int").as("qgrp"))))
-      // hash the salt before bucketing: salt VALUES are sparse multiples
-      // (docIntId's high bits = id partition << bits), so a plain
-      // pmod(salt, S) collapses every salt into bucket 0
-      .withColumn("sbucket", pmod(hash(col("salt")), lit(S)))
-      .repartition(nParts, col("sbucket"), col("qgrp"))
-      // sorted runs let mapPartitions stream one (salt, qgrp) group at a
-      // time instead of materializing the whole partition (external sort —
-      // spills, never OOMs)
-      .sortWithinPartitions("salt", "qgrp")
-      .drop("sbucket")
+    val (nS, nG) = fanOut(index, qArr.length, useTaat)
+    val cand = kernelInput(index, terms, nS, nG)
 
     // Cap on buffered per-task heap rows before an early emit-and-clear.
     // Bounds task memory for huge query chunks. Correctness invariant:
     // each (qid, docId) pair is emitted AT MOST ONCE per task — drains
     // happen only at (salt, qgrp) group boundaries, where a doc has been
     // scored exactly once for a query, so the drain merely splits the
-    // emission into more sorted lists. The k-way merge
-    // (TopKAggregator.mergeSorted) has NO docId dedup; a mid-group drain
+    // emission into more lists. The merge's select+sort
+    // (TopKAggregator.selectSorted) has NO docId dedup; a mid-group drain
     // (same doc scored before and after) would surface duplicates.
     val maxHeapRows = spark.conf.getOption("spark.graft.taskHeapMaxRows")
       .map(_.toLong).getOrElse(4L << 20)
@@ -733,7 +703,7 @@ object QueryEngine {
     implicit val enc = Encoders.product[(Int, Array[Long], Array[Double])]
     val nQ = qArr.length
     val out = cand.mapPartitions { rows =>
-      // rows arrive sorted by (salt, qgrp): buffer exactly one run at a time
+      // rows arrive sorted by salt, all of one qgrp: buffer exactly one run at a time
       // — the same working set the WAND cursors need anyway.
       // TAAT accumulator buffers are reused across every group of the task.
       val allowed: Array[Long] = allowedBc.map(_.value).orNull
@@ -743,7 +713,8 @@ object QueryEngine {
       // touches the qidx values of its own query groups
       val heaps = new Array[TopKBuf](nQ)
       var heapRows = 0L
-      // one sorted (qidx, docIntIds, scores) row per non-empty heap
+      // one (qidx, docIntIds, scores) row per non-empty heap: its arrays
+      // as they are, unsorted (the merge selects and sorts each query once)
       def drainHeaps(): Iterator[(Int, Array[Long], Array[Double])] = {
         val out = scala.collection.mutable.ArrayBuffer
           .empty[(Int, Array[Long], Array[Double])]
@@ -751,10 +722,9 @@ object QueryEngine {
         while (qi < nQ) {
           val h = heaps(qi)
           if (h != null) {
-            if (h.size > 0) {
-              val (ids, scores) = agg.drainSorted(h)
-              out += ((qi, ids, scores))
-            }
+            if (h.size == kk) out += ((qi, h.docIds, h.scores))
+            else if (h.size > 0) out += ((qi, java.util.Arrays.copyOf(h.docIds, h.size),
+              java.util.Arrays.copyOf(h.scores, h.size)))
             heaps(qi) = null
           }
           qi += 1
@@ -787,14 +757,72 @@ object QueryEngine {
           if (useTaat) taat.topkInto(qterms, byTerm, salt, agg, h, allowed)
           else Wand.topkInto(qterms, byTerm, agg, h, allowed)
           heapRows += h.size - before
-          qidx += G
+          qidx += nG
         }
         if (heapRows > maxHeapRows) drainHeaps() else Iterator.empty
       }
       perGroup ++ drainHeaps()
     }.toDF("qidx", "docIntIds", "scores")
-    Partials(out, bq, nParts)
+    Partials(out, bq, nS * nG)
   }
+
+  /** The kernel's fan-out: (S salt buckets, G query groups), one task per
+    * (bucket, group). At index scale salts ≫ cores and G = 1 (no
+    * replicated decode); on a small index queries split into G groups so
+    * the kernel still fills the cluster — posting rows replicate G×
+    * through the shuffle. Each task's kernels insert into ONE heap per
+    * query covering every salt the task holds, so emission is nQueries × S
+    * lists of ≤ k entries — bounded by the BUCKET count S, not numSalts.
+    * Deep-k (TAAT) mode holds S at [[DeepKSaltBuckets]] and raises G to
+    * keep S × G ≈ 2·parallelism: emission per query (S × k rows) must not
+    * grow with cluster size, or per-query merge work rises with cores and
+    * caps throughput scaling. At 10^12-doc scale the same cap keeps
+    * emission independent of the million-salt index layout.
+    */
+  private[query] def fanOut(index: BM25Index, nQueries: Int, useTaat: Boolean): (Int, Int) = {
+    val p2 = index.spark.sparkContext.defaultParallelism * 2
+    if (useTaat) {
+      val s = math.min(index.numSalts, DeepKSaltBuckets)
+      (s, math.max(1, math.min(nQueries, p2 / s)))
+    } else {
+      val g = math.max(1, math.min(nQueries,
+        (p2 + index.numSalts - 1) / math.max(1, index.numSalts)))
+      (math.min(index.numSalts.toLong, math.max(1L, p2.toLong / g)).toInt, g)
+    }
+  }
+
+  /** A salt's bucket among `s`: salts are dealt round-robin by id
+    * partition p and run j within it (salt = (p << (IdPartitionShift −
+    * saltShift)) + j), bucket = (p + j) mod s. Salt VALUES are sparse
+    * multiples of 2^(IdPartitionShift − saltShift), so `pmod(salt, s)`
+    * would put them all in bucket 0, and hashing them left buckets empty:
+    * the 4 salts of a 4-partition index hashed to buckets {3, 2, 0, 0}.
+    * Buckets differ by at most one salt when each id partition holds one
+    * salt (up to 2^saltShift docs), and at the deep-k cap of 4 buckets
+    * for the layouts BM25EngineSpec checks; with several salts per
+    * partition and more buckets than partitions (DAAT at S = numSalts),
+    * some buckets can stay empty.
+    */
+  private[query] def saltBucket(salt: Column, saltShift: Int, s: Int): Column = {
+    val runBits = IndexBuilder.IdPartitionShift - saltShift
+    pmod(shiftright(salt, runBits) + salt.bitwiseAND(lit((1 << runBits) - 1)), lit(s))
+  }
+
+  /** The kernel's input over `s` × `g` partitions: each candidate (term,
+    * salt) run once per query group `qgrp` (a literal explode: no job), in
+    * partition saltBucket · g + qgrp, which `repartitionById` takes as the
+    * partition id, so each task holds exactly one (bucket, group); sorted
+    * by salt, so the kernel streams one (salt, qgrp) run group at a time
+    * (external sort: spills, never OOMs). Columns: term, salt, maxImpact,
+    * blocks, qgrp.
+    */
+  private[query] def kernelInput(index: BM25Index, terms: Seq[String],
+                                 s: Int, g: Int): DataFrame =
+    candidates(index, terms)
+      .select(col("term"), col("salt"), col("maxImpact"), col("blocks"),
+        explode(typedLit((0 until g).toArray)).as("qgrp"))
+      .repartitionById(s * g, saltBucket(col("salt"), index.saltShift, s) * g + col("qgrp"))
+      .sortWithinPartitions("salt")
 
   /** Streams consecutive runs of rows sharing a key from a SORTED iterator —
     * grouping without materializing the partition (the round-1 `toSeq`

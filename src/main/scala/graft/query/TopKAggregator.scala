@@ -20,13 +20,14 @@ final case class TopKBuf(var docIds: Array[Long], var scores: Array[Double], var
   * (benchmark/on_rank_bm25.py:25-46): each partition keeps a bounded heap
   * (≙ the reference's per-thread heaps), partial buffers merge at the
   * shuffle (≙ its result concatenation), so per-group work is O(N log k)
-  * with O(k) state instead of a full sort.
+  * with O(k) state instead of a full sort; `finish` sorts the k once.
   *
   * Usage: `val topk = functions.udaf(new TopKAggregator(k), Encoders.product[ScoredDoc])`
   * then `df.groupBy("qid").agg(topk(col("docId"), col("score")))`.
-  * The udaf serves `searchExact` and `ops/Similarity`; the kernels use the
-  * heap alone ([[insert]], [[drainSorted]]) and their sorted lists merge
-  * through [[TopKAggregator.mergeSorted]].
+  * The udaf serves `searchExact` and `ops/Similarity`. The kernels use the
+  * heap alone ([[insert]]: its root rejects most candidates in O(1)) and
+  * emit its arrays unsorted; each query's lists meet in one
+  * [[TopKAggregator.selectSorted]], which also backs `finish`.
   */
 class TopKAggregator(k: Int)
     extends Aggregator[ScoredDoc, TopKBuf, Seq[ScoredDoc]] with Serializable {
@@ -74,24 +75,6 @@ class TopKAggregator(k: Int)
     b
   }
 
-  /** Pops the heap into (docIds, scores), best first under (score DESC,
-    * docId ASC), and leaves `b` empty. An in-place heap sort: each pop
-    * moves the current worst to the end of the live range, so no
-    * [[ScoredDoc]] is built; the result is a trimmed copy.
-    */
-  def drainSorted(b: TopKBuf): (Array[Long], Array[Double]) = {
-    var n = b.size
-    while (n > 1) {
-      n -= 1
-      val ts = b.scores(0); b.scores(0) = b.scores(n); b.scores(n) = ts
-      val td = b.docIds(0); b.docIds(0) = b.docIds(n); b.docIds(n) = td
-      siftDown(b, n)
-    }
-    val out = (java.util.Arrays.copyOf(b.docIds, b.size), java.util.Arrays.copyOf(b.scores, b.size))
-    b.size = 0
-    out
-  }
-
   override def reduce(b: TopKBuf, in: ScoredDoc): TopKBuf =
     insert(b, in.docId, in.score)
 
@@ -102,7 +85,8 @@ class TopKAggregator(k: Int)
   }
 
   override def finish(b: TopKBuf): Seq[ScoredDoc] = {
-    val (ids, scores) = drainSorted(b)
+    val (ids, scores) = TopKAggregator.selectSorted(Iterator.single(
+      (java.util.Arrays.copyOf(b.docIds, b.size), java.util.Arrays.copyOf(b.scores, b.size))), k)
     scala.collection.immutable.ArraySeq.tabulate(ids.length)(i => ScoredDoc(ids(i), scores(i)))
   }
 
@@ -117,46 +101,71 @@ object TopKAggregator {
   @inline private[query] def worse(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
     s1 < s2 || (s1 == s2 && d1 > d2)
 
-  /** K-way merge of one query's sorted lists (each best first, as
-    * [[TopKAggregator.drainSorted]] emits them) into its top `k`, best
-    * first; it stops after `k` entries. The lists must hold pairwise
-    * DISJOINT docIds: the merge has no dedup. A small heap of list indices,
-    * keyed by each list's head, picks the next entry in O(log lists) — the
-    * shape of Lucene's `TopDocs.merge` over per-shard hits.
+  /** One query's top `k` out of its unsorted lists (kernel heap arrays,
+    * one per task holding the query and per early drain), best first
+    * under (score DESC, docId ASC). The lists must hold pairwise DISJOINT
+    * docIds: there is no dedup. They are copied into one array pair, and a
+    * partial quicksort selects and sorts only the best `k`: it recurses
+    * only into ranges that reach below `k`, so a query costs O(entries +
+    * k log k) and is sorted once, after the reduction (the reference's
+    * `argpartition` then sort, benchmark/on_bm25s.py:144-150).
     */
-  def mergeSorted(lists: Iterable[(Array[Long], Array[Double])],
-                  k: Int): (Array[Long], Array[Double]) = {
-    val ls = lists.filter(_._1.nonEmpty).toArray
-    val n = math.min(k.toLong, ls.iterator.map(_._1.length.toLong).sum).toInt
+  def selectSorted(lists: IterableOnce[(Array[Long], Array[Double])],
+                   k: Int): (Array[Long], Array[Double]) = {
+    val ls = lists.iterator.toArray
+    val n = ls.iterator.map(_._1.length).sum
     val ids = new Array[Long](n); val scores = new Array[Double](n)
-    val pos = new Array[Int](ls.length)
-    // heap(0) is the list whose head ranks best
-    val heap = Array.range(0, ls.length)
-    var live = ls.length
-    def behind(a: Int, b: Int): Boolean =
-      worse(ls(a)._2(pos(a)), ls(a)._1(pos(a)), ls(b)._2(pos(b)), ls(b)._1(pos(b)))
-    def siftDown(i0: Int): Unit = {
-      var i = i0
-      while (true) {
-        val l = 2 * i + 1; val r = l + 1
-        var m = i
-        if (l < live && behind(heap(m), heap(l))) m = l
-        if (r < live && behind(heap(m), heap(r))) m = r
-        if (m == i) return
-        val t = heap(i); heap(i) = heap(m); heap(m) = t
-        i = m
-      }
-    }
-    (live / 2 - 1 to 0 by -1).foreach(siftDown)
     var o = 0
-    while (o < n) {
-      val li = heap(0)
-      ids(o) = ls(li)._1(pos(li)); scores(o) = ls(li)._2(pos(li))
-      o += 1
-      pos(li) += 1
-      if (pos(li) == ls(li)._1.length) { live -= 1; heap(0) = heap(live) }
-      siftDown(0)
+    ls.foreach { case (i, s) =>
+      System.arraycopy(i, 0, ids, o, i.length); System.arraycopy(s, 0, scores, o, s.length)
+      o += i.length
     }
-    (ids, scores)
+    val m = math.min(k, n)
+    if (m > 0) partialSort(ids, scores, 0, n - 1, m)
+    if (m == n) (ids, scores)
+    else (java.util.Arrays.copyOf(ids, m), java.util.Arrays.copyOf(scores, m))
+  }
+
+  /** Sorts best first whatever of [lo, hi] lies below `m`: Hoare
+    * partitions around a median-of-three pivot (equal keys split evenly,
+    * so heavy score ties stay O(n log n)), recursing into the smaller
+    * needed side and looping on the other; a side wholly at or above `m`
+    * is dropped. Short ranges finish by insertion sort.
+    */
+  private def partialSort(ids: Array[Long], scores: Array[Double],
+                          lo0: Int, hi0: Int, m: Int): Unit = {
+    def swap(a: Int, b: Int): Unit = {
+      val ts = scores(a); scores(a) = scores(b); scores(b) = ts
+      val td = ids(a); ids(a) = ids(b); ids(b) = td
+    }
+    // true if entry a ranks strictly worse than entry b
+    def behind(a: Int, b: Int): Boolean = worse(scores(a), ids(a), scores(b), ids(b))
+    var lo = lo0; var hi = hi0
+    while (hi - lo >= 16) {
+      val mid = (lo + hi) >>> 1
+      if (behind(lo, mid)) swap(lo, mid)
+      if (behind(mid, hi)) swap(mid, hi)
+      if (behind(lo, mid)) swap(lo, mid)
+      val ps = scores(mid); val pd = ids(mid)
+      var i = lo - 1; var j = hi + 1
+      var split = -1
+      while (split < 0) {
+        i += 1
+        while (worse(ps, pd, scores(i), ids(i))) i += 1
+        j -= 1
+        while (worse(scores(j), ids(j), ps, pd)) j -= 1
+        if (i >= j) split = j else swap(i, j)
+      }
+      // [lo, split] ranks at or above the pivot, [split + 1, hi] at or below
+      if (split + 1 >= m) hi = split
+      else if (split - lo < hi - split) { partialSort(ids, scores, lo, split, m); lo = split + 1 }
+      else { partialSort(ids, scores, split + 1, hi, m); hi = split }
+    }
+    var a = lo + 1
+    while (a <= hi) {
+      var b = a
+      while (b > lo && behind(b - 1, b)) { swap(b - 1, b); b -= 1 }
+      a += 1
+    }
   }
 }

@@ -195,17 +195,11 @@ class BM25EngineSpec extends SparkTestBase {
     QueryEngine.wandPartials(idx, qArr, kk).as[(Int, Array[Long], Array[Double])].collect()
   }
 
-  /** true if the list is in (score DESC, docIntId ASC) order. */
-  private def sortedBestFirst(ids: Array[Long], scores: Array[Double]): Boolean =
-    ids.indices.drop(1).forall { i =>
-      scores(i - 1) > scores(i) || (scores(i - 1) == scores(i) && ids(i - 1) < ids(i))
-    }
-
   test("deep-k partial emission is bounded by salt-bucket cap, not numSalts") {
     // the scale contract: per query the pre-merge candidates are at most
     // min(numSalts, S = 4) × k — independent of how many salts the index
-    // has (at 10^12-doc scale numSalts is ~10^6); each emitted list is
-    // sorted best first, as the k-way merge expects
+    // has (at 10^12-doc scale numSalts is ~10^6); each emitted list is a
+    // task heap's arrays as they are, unsorted, at most k long
     val idx = new BM25Index(spark, indexDir)
     val kk = 7
     try {
@@ -214,7 +208,6 @@ class BM25EngineSpec extends SparkTestBase {
       assert(lists.nonEmpty)
       lists.foreach { case (q, ids, scores) =>
         assert(ids.length == scores.length && ids.nonEmpty && ids.length <= kk)
-        assert(sortedBestFirst(ids, scores), s"qidx $q: list not sorted")
       }
       lists.groupBy(_._1).foreach { case (q, ls) =>
         val n = ls.map(_._2.length.toLong).sum
@@ -234,9 +227,6 @@ class BM25EngineSpec extends SparkTestBase {
         spark.conf.set("spark.graft.scoreAllMinK", minK)
         val lists = partialLists(idx, k)
         assert(lists.groupBy(_._1).exists(_._2.length > 1), "no query drained twice")
-        lists.foreach { case (q, ids, scores) =>
-          assert(sortedBestFirst(ids, scores), s"qidx $q: list not sorted")
-        }
         lists.groupBy(_._1).foreach { case (q, ls) =>
           val ids = ls.toSeq.flatMap(_._2.toSeq)
           assert(ids.distinct.size == ids.size, s"scoreAllMinK=$minK qidx $q: repeated docIntId")
@@ -245,6 +235,46 @@ class BM25EngineSpec extends SparkTestBase {
     } finally {
       spark.conf.unset("spark.graft.taskHeapMaxRows")
       spark.conf.unset("spark.graft.scoreAllMinK")
+    }
+  }
+
+  test("salt placement: bucket sizes differ by at most one salt") {
+    // salts deal round-robin over the deep-k kernel's S = min(numSalts, 4)
+    // buckets by id partition p and run j: salt = (p << 13) + j at the
+    // default shift of 20
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val shift = IndexBuilder.SaltShift
+    for (nP <- Seq(1, 3, 4, 8, 64); runs <- Seq(1, 2)) {
+      val salts = for (p <- 0 until nP; j <- 0 until runs)
+        yield (p << (IndexBuilder.IdPartitionShift - shift)) + j
+      val nS = math.min(salts.size, 4)
+      val buckets = salts.toDF("salt")
+        .select(QueryEngine.saltBucket(col("salt"), shift, nS)).as[Int].collect()
+      val sizes = (0 until nS).map(b => buckets.count(_ == b))
+      assert(sizes.max - sizes.min <= 1, s"P=$nP runs=$runs S=$nS: bucket sizes $sizes")
+    }
+  }
+
+  test("salt placement: each of the S×G kernel partitions holds one (bucket, group)") {
+    // a 4-salt index at deep k: S = 4 buckets × G query groups, one task
+    // each — none empty, none shared (the hashed placement left 5 of 8
+    // kernel tasks of a 4-salt index without rows)
+    import org.apache.spark.sql.functions._
+    val idx = new BM25Index(spark, indexDir)
+    assert(idx.numSalts == 4, s"fixture has ${idx.numSalts} salts")
+    val qArr = QueryEngine.tokenizeRows(idx, queriesDf.collect())
+    val terms = qArr.flatMap(_._2.map(_._1)).distinct.toSeq
+    val (nS, nG) = QueryEngine.fanOut(idx, qArr.length, useTaat = true)
+    assert(nS == 4 && nG == 2, s"S=$nS G=$nG")
+    val parts = QueryEngine.kernelInput(idx, terms, nS, nG)
+      .select(spark_partition_id().as("pid"),
+        QueryEngine.saltBucket(col("salt"), idx.saltShift, nS).as("bucket"), col("qgrp"))
+      .distinct().collect().map(r => (r.getInt(0), (r.getInt(1), r.getInt(2))))
+    val byPart = parts.groupBy(_._1).map { case (pid, rs) => pid -> rs.map(_._2).toSet }
+    assert(byPart.keySet == (0 until nS * nG).toSet, s"partitions with rows: ${byPart.keySet}")
+    byPart.foreach { case (pid, groups) =>
+      assert(groups == Set((pid / nG, pid % nG)), s"partition $pid holds $groups")
     }
   }
 
@@ -284,9 +314,10 @@ class BM25EngineSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val idx = new BM25Index(spark, indexDir)
     val pred = Some(pmod(xxhash64(col("docId")), lit(2)) === 0)
-    // the counts measured once the finish resolved docIds from the handle's
-    // dictionary instead of joining docs (5 and 8 with the join)
-    for ((flt, maxJobs) <- Seq((None, 4), (pred, 7))) {
+    // the counts measured once the kernel's query groups became a literal
+    // explode (4 and 7 with a `range(G)` cross join, 5 and 8 with the docs
+    // join before the handle's docId dictionary)
+    for ((flt, maxJobs) <- Seq((None, 3), (pred, 6))) {
       def call() = QueryEngine.searchWand(idx, queriesDf, k, flt).collect()
       call() // first use opens the index tables and builds the docId dictionary
       val jobs = jobsIn(call())

@@ -103,6 +103,25 @@ class MoreLikeThisSpec extends SparkTestBase {
     assert(facade.columns.toSeq == Seq("qid", "docId", "score", "rank"))
   }
 
+  test("warm searchIndexed and searchIndexedText job counts") {
+    // the counts measured with the seed query built by a Spark plan
+    // (feedback vectors, df join, row_number cut) before the kernel route
+    import spark.implicits._
+    val idx = new BM25Index(spark, indexDir)
+    val seeds = corpusDf.select("docId").limit(5)
+    val texts = corpusDf.limit(5).collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq.toDF("qid", "text")
+    for ((leg, maxJobs, call) <- Seq[(String, Int, () => Unit)](
+        ("searchIndexed", 18,
+          () => MoreLikeThis.searchIndexed(idx, seeds, k = 10).collect()),
+        ("searchIndexedText", 10,
+          () => MoreLikeThis.searchIndexedText(idx, texts, k = 10).collect()))) {
+      call() // first use opens the index tables and builds the docId dictionary
+      val jobs = jobsIn(call())
+      assert(jobs <= maxJobs, s"$leg: $jobs jobs")
+    }
+  }
+
   test("composed driver entry: schema, seeds present, rank contiguity") {
     val df = graft.entry.DriverQueries.bm25Mlt(spark, "/root/testdata/sf0.001")
     val rows = df.collect()
