@@ -104,6 +104,48 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
   }
 
+  test("sorted drain empties the heap best first, also a pre-loaded one") {
+    // a kernel drain hands a task heap's arrays on as they are (the first
+    // `size` entries) and drops the heap; one selectSorted puts them best
+    // first, also after two insert rounds (two salts) into one heap
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 100) {
+      val k = 1 + rnd.nextInt(20)
+      val agg = new TopKAggregator(k)
+      val h = agg.zero
+      // distinct ids, forced score ties
+      val xs = rnd.shuffle((0L until 60L).toList).take(rnd.nextInt(60))
+        .map(d => (d, rnd.nextInt(6) / 2.0))
+      val (first, second) = xs.splitAt(xs.size / 2)
+      first.foreach { case (d, s) => agg.insert(h, d, s) }
+      second.foreach { case (d, s) => agg.insert(h, d, s) }
+      assert(h.size == math.min(k, xs.size))
+      val drained = (0 until h.size).map(i => (h.docIds(i), h.scores(i)))
+      assert(select(Seq(drained), k) == oracle(xs, k), s"trial $trial (k=$k)")
+      // the heap's arrays are never reordered by the selection
+      assert((0 until h.size).map(i => (h.docIds(i), h.scores(i))) == drained)
+      assert(select(Seq(drained.take(0)), k).isEmpty)
+    }
+  }
+
+  test("k-way merge of sorted lists == sort-take oracle (seed 42)") {
+    // already-sorted lists (presorted runs) are one input shape of the
+    // per-query merge; its selection must match a full sort of their union
+    val rnd = new scala.util.Random(42)
+    for (trial <- 1 to 200) {
+      val k = 1 + rnd.nextInt(30)
+      val nLists = rnd.nextInt(7)
+      // disjoint ids (one doc leaves one task once), small score range for
+      // ties within and across lists; lists are cut at random lengths
+      val ids = rnd.shuffle((0L until 200L).toList)
+      val lists = ids.grouped(1 + rnd.nextInt(40)).take(nLists).toSeq.map { ds =>
+        oracle(ds.map(d => (d, rnd.nextInt(8) / 2.0)), rnd.nextInt(ds.size + 1))
+      }
+      assert(select(lists, k) == oracle(lists.flatten, k),
+        s"trial $trial (lists=${lists.map(_.size)} k=$k)")
+    }
+  }
+
   test("select+sort stays fast on all-tied, sorted and reversed input") {
     // Hoare partitions split equal keys evenly and the median-of-three
     // pivot handles presorted runs: none of these may go quadratic
