@@ -78,10 +78,10 @@ object Graft {
     * pass 1 retrieves fbDocs feedback docs per query, a relevance model is
     * estimated from the index's stored doc vectors (a pruned fetch of only
     * those docs — no corpus scan), and the α-interpolated weighted query
-    * runs pass 2. See [[graft.query.Rm3]] for the math and scale shape;
-    * for a legacy index without doc vectors use
-    * [[graft.query.Rm3.searchIndexedRetokenize]]. `docFilter` restricts
-    * BOTH passes (feedback docs and final ranking) to the allowed subset.
+    * runs pass 2. See [[graft.query.Rm3]] for the math and scale shape,
+    * and [[graft.query.Rm3.searchIndexedRetokenize]] for its cross-check
+    * twin. `docFilter` restricts BOTH passes (feedback docs and final
+    * ranking) to the allowed subset.
     */
   def searchRm3(index: BM25Index, queries: DataFrame,
                 k: Int = 1000, fbDocs: Int = 10, fbTerms: Int = 10,
@@ -273,10 +273,10 @@ object Graft {
     val rt = Runtime.getRuntime
     val report = RunReport(
       model = modelName, dataset = dataset,
-      stemmer = index.props.getOrElse("stemmer", "none"),
+      stemmer = index.props("stemmer"),
       tokenizer = index.tokenPattern,
       method = index.params.method,
-      stopwords = index.props.getOrElse("stopwords", "none"),
+      stopwords = index.props("stopwords"),
       k1 = index.params.k1, b = index.params.b, delta = index.params.delta,
       date = java.time.format.DateTimeFormatter
         .ofPattern("yyyy-MM-dd HH:mm:ss")
@@ -286,7 +286,7 @@ object Graft {
       maxMemGb = (rt.totalMemory() - rt.freeMemory()) / 1e9,
       numDocs = index.numDocs,
       numQueries = numQueries,
-      numTokens = index.props.getOrElse("numTokens", "0").toLong,
+      numTokens = index.props("numTokens").toLong,
       timing = timer.results,
       scores = Map(
         "ndcg" -> metric(_._1), "map" -> metric(_._2),

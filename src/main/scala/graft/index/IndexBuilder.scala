@@ -33,6 +33,9 @@ final case class PostingBlock(
   *   _commits/ *.json  per-partition-group lineage + metrics
   *   _properties.json  scoring params + global stats (N, avgdl, numTokens)
   *
+  * Every manifest and `_properties.json` record [[FormatVersion]]: the
+  * readers and a resuming build open that one layout and refuse any other.
+  *
   * Scale design (SURVEY.md §4, §7):
   *  - docIntId: dense surrogate ids, (p << 33) + the doc's docId rank in
   *    its id partition p = pmod(hash(docId), P), the partition
@@ -70,6 +73,28 @@ object IndexBuilder {
     */
   private[graft] val IdPartitionShift = 33
 
+  /** The index layout this build writes, recorded as `formatVersion` in
+    * `_properties.json` and in every stage manifest. `BM25Index` and a
+    * resuming [[build]] open only this version; an index of any other is
+    * deleted and rebuilt, so no reader branches on an older layout.
+    */
+  private[graft] val FormatVersion = 1
+
+  /** A refusal of an index dir recorded with another format version. */
+  private[graft] final class FormatMismatch(msg: String) extends IllegalStateException(msg)
+
+  /** Refuses `indexDir` unless `what` (a manifest's metrics or the index
+    * properties) records [[FormatVersion]].
+    */
+  private[graft] def checkFormat(indexDir: String, what: String,
+                                 recorded: Map[String, String]): Unit = {
+    val found = recorded.get("formatVersion")
+    if (!found.contains(FormatVersion.toString))
+      throw new FormatMismatch(s"index at $indexDir: $what records formatVersion=" +
+        s"${found.getOrElse("(none)")}, this code reads and writes only formatVersion=" +
+        s"$FormatVersion; delete and rebuild")
+  }
+
   final case class Config(
       params: BM25Params = BM25Params(),
       tokenPattern: String = Tokenizer.TokenPattern,
@@ -85,8 +110,10 @@ object IndexBuilder {
       // scale weaken partition pruning and task granularity, too many at
       // small scale fragment the table into sub-row-group files.
       numBuckets: Int = 16,
-      // id partitions P: docIntId bits 33+ hold a doc's hash partition. 0 =
-      // default parallelism; a resume keeps the P its seg-* commits recorded.
+      // sets the id partitions P that each seg-* commit records as
+      // idPartitions: docIntId bits 33+ hold a doc's hash partition. 0 =
+      // default parallelism; a resume keeps the recorded P. (The name is
+      // the docmap table's, which it once sized; callers pass it by name.)
       docmapPartitions: Int = 0)
 
   /** The packed doc-vector table with its partition columns: read with it,
@@ -237,14 +264,14 @@ object IndexBuilder {
   def build(spark: SparkSession, corpus: DataFrame, indexDir: String,
             cfg: Config = Config()): IcebergLikeStore = {
     val store = new IcebergLikeStore(indexDir)
-    if (store.isComplete) return store
+    // a build resumes or reopens only its own format
     val commits = store.readCommits()
-    // a build resumes only its own layout: an older one took its ids from a
-    // docmap table, or wrote exploded rows under segments/
-    for (c <- commits.find(c => c.group == "docmap" || c.files.exists(_.startsWith("segments/"))))
-      throw new IllegalStateException(s"partial index at $indexDir holds " +
-        s"$indexDir/${if (c.group == "docmap") "docmap" else "segments"}, " +
-        "built by an older layout; delete and rebuild")
+    for (c <- commits) checkFormat(indexDir, s"the ${c.group} commit", c.metrics)
+    if (store.isComplete) {
+      checkFormat(indexDir, "_properties.json", store.readProperties())
+      return store
+    }
+    val version = "formatVersion" -> FormatVersion.toString
     val t0 = System.nanoTime()
 
     val G = cfg.numSegmentGroups
@@ -289,7 +316,7 @@ object IndexBuilder {
     // termstats and postings explode them, the docs dimension projects them.
     for (g <- 0 until G)
       store.stage(s"seg-$g", Seq(s"docvecs/g=$g"), recorded.toMap ++
-          Map("stage" -> "segments", "group" -> g.toString, "format" -> "packed")) {
+          Map(version, "stage" -> "segments", "group" -> g.toString, "format" -> "packed")) {
         // the one shuffle: each doc lands in its id partition, sorted by
         // docId, numbered after the docs of groups < g there
         val before = typedLit((0 until P).map(p => (0 until g).map(counts(_)(p)).sum))
@@ -348,7 +375,7 @@ object IndexBuilder {
     // stage 2a: narrow per-term stats (exact global df; partial+final hash
     // agg, so a term in 50% of docs never concentrates on one task).
     // Persisted: also the query-side term dictionary for diagnostics.
-    store.stage("termstats", Seq("termstats"), Map("stage" -> "termstats")) {
+    store.stage("termstats", Seq("termstats"), Map(version, "stage" -> "termstats")) {
       writeCounted(
         pairs.groupBy("term")
           .agg(count(lit(1)).as("df"), sum("tf").as("ctf")),
@@ -365,7 +392,7 @@ object IndexBuilder {
     val termsPerBucket = (vocab + numBuckets - 1) / numBuckets
 
     store.stage("postings", Seq("postings"),
-        Map("stage" -> "postings", "buckets" -> numBuckets.toString)) {
+        Map(version, "stage" -> "postings", "buckets" -> numBuckets.toString)) {
       // df joins onto NARROW exploded rows (AQE skew-split handles giant
       // terms); one hash shuffle on (bucket, salt) co-locates each (term,
       // salt) run WITH its output bucket, and the radix sort inside each
@@ -415,7 +442,7 @@ object IndexBuilder {
           termsPerBucket + math.ceil(4 * math.sqrt(termsPerBucket.toDouble)).toLong))
     }
 
-    store.writeProperties(Map(
+    store.writeProperties(Map(version,
       "engine" -> "graft-bm25",
       "method" -> p.method, "k1" -> p.k1.toString, "b" -> p.b.toString,
       "delta" -> p.delta.toString,

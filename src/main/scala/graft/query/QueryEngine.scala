@@ -15,24 +15,25 @@ import graft.tokenize.Tokenizer
 /** Handle over a built index (tables + scoring metadata from the commit
   * log, so query-side params can't drift from the build — the lesson of the
   * reference's Elasticsearch settings dance, benchmark/on_elastic.py:72-112).
+  * It opens only an index of `IndexBuilder.FormatVersion`: the properties
+  * it reads are then all there, and every table has the current layout.
   */
 class BM25Index(val spark: SparkSession, val indexDir: String) {
   val store = new IcebergLikeStore(indexDir)
   require(store.isComplete, s"index at $indexDir has no _properties.json (incomplete build)")
   val props: Map[String, String] = store.readProperties()
+  IndexBuilder.checkFormat(indexDir, "_properties.json", props)
   val params: BM25Params = BM25Params(
     k1 = props("k1").toDouble, b = props("b").toDouble,
     delta = props("delta").toDouble, method = props("method"))
   val tokenPattern: String = props("tokenPattern")
-  /** Stemming on/off, read from the build's properties (pre-stem-toggle
-    * indexes recorded "snowball-en" unconditionally).
-    */
-  val stem: Boolean = props.getOrElse("stemmer", "snowball-en") != "none"
+  /** Stemming on/off, read from the build's properties. */
+  val stem: Boolean = props("stemmer") != "none"
   val numDocs: Long = props("numDocs").toLong
   val avgdl: Double = props("avgdl").toDouble
   val numBuckets: Int = props("numBuckets").toInt
-  val numSalts: Int = props.getOrElse("numSalts", "1").toInt
-  val saltShift: Int = props.getOrElse("saltShift", "20").toInt
+  val numSalts: Int = props("numSalts").toInt
+  val saltShift: Int = props("saltShift").toInt
 
   /** Index tables are opened ONCE per handle: each `spark.read.parquet`
     * re-lists the table and runs a schema job, so a `def` paid that job on
@@ -49,52 +50,36 @@ class BM25Index(val spark: SparkSession, val indexDir: String) {
   lazy val termstats: DataFrame = spark.read.parquet(s"$indexDir/termstats")
 
   /** Whether this index stores per-document term vectors (the Pyserini
-    * `--storeDocvectors` analogue). Every build writes them: the segment
-    * groups' output is the packed docvecs table. Indexes built before the
-    * docvecs table existed, or with the since-removed option to skip it,
-    * report false.
+    * `--storeDocvectors` analogue): always true, since the segment groups'
+    * output is the packed docvecs table. Read from the properties for
+    * callers that report the layout; no engine code branches on it.
     */
-  val hasDocVectors: Boolean = props.get("docVectors").contains("true")
+  val hasDocVectors: Boolean = props("docVectors") == "true"
 
-  /** Docvecs layout: "packed" (one row per doc — docIntId, salt, len,
-    * terms[], tfs[], and docId in newer builds) since round 6; "rows" for legacy
-    * round-5 indexes (one row per (doc, term)). Rm3.feedbackVectors
-    * branches on this when unpacking.
+  /** Docvecs layout, from the properties: always "packed", one row per doc
+    * (docIntId, docId, len, terms[], tfs[]). Reported, never branched on.
     */
-  val docvecsFormat: String =
-    props.getOrElse("docvecsFormat", if (hasDocVectors) "rows" else "none")
+  val docvecsFormat: String = props("docvecsFormat")
 
   /** Stored doc term vectors, salt-partitioned and docIntId-sorted within
-    * files (see [[docvecsFormat]] for the row layout) — fetch through
-    * Rm3.feedbackVectors so partition + row-group pruning apply. The
-    * `require` runs on first use (a failed lazy val init is retried).
+    * files, read with [[IndexBuilder.DocvecsSchema]] (an empty corpus
+    * writes no data file to infer it from) — fetch through
+    * Rm3.feedbackVectors so partition + row-group pruning apply.
     */
-  lazy val docvecs: DataFrame = {
-    require(hasDocVectors,
-      s"index at $indexDir was built without doc vectors " +
-        "(by an older build); rebuild it to store them")
-    spark.read.parquet(s"$indexDir/docvecs")
-  }
+  lazy val docvecs: DataFrame =
+    spark.read.schema(IndexBuilder.DocvecsSchema).parquet(s"$indexDir/docvecs")
 
   /** docs dimension (docIntId, docId, len, salt): the projection of the
-    * packed [[docvecs]] rows read with [[IndexBuilder.DocvecsSchema]], or
-    * the `docs/` table of an index built while one was written. Cached
-    * MEMORY_AND_DISK for doc-filter resolution, the [[docIdDict]] build,
+    * packed [[docvecs]] rows. Cached MEMORY_AND_DISK for doc-filter
+    * resolution, the [[docIdDict]] build,
     * RM3's declarative feedback fetch and the finish join above
     * `broadcastHitsMaxRows` docs; up to that bound as one partition, so
     * `collectAllowed`'s limit-collect runs one job (BASELINE "Store each
     * document once"). Repartitioning by docIntId measured SLOWER.
     */
-  lazy val docs: DataFrame = {
-    val table = new org.apache.hadoop.fs.Path(indexDir, "docs")
-    val d =
-      if (table.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(table))
-        spark.read.parquet(table.toString)
-      else spark.read.schema(IndexBuilder.DocvecsSchema).parquet(s"$indexDir/docvecs")
-        .select("docIntId", "docId", "len", "salt")
-        .transform(p => if (numDocs <= QueryEngine.broadcastHitsMaxRows(spark)) p.coalesce(1) else p)
-    d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+  lazy val docs: DataFrame = docvecs.select("docIntId", "docId", "len", "salt")
+    .transform(p => if (numDocs <= QueryEngine.broadcastHitsMaxRows(spark)) p.coalesce(1) else p)
+    .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** The docId dictionary of an index of at most `broadcastHitsMaxRows`
     * docs ([[QueryEngine.finishTopK]] checks the bound): built on first use

@@ -156,7 +156,7 @@ object Rm3 {
     *
     * Scale shape: the doc set resolves against the cached docs dimension,
     * its docIntIds are collected (bounded — see `maxPrunedFeedbackDocs`),
-    * and the docvecs scan is pruned to the
+    * and the packed docvecs scan is pruned to the
     * matching salt PARTITIONS with a docIntId In-filter pushed to the
     * row-group stats (files are docIntId-sorted). No stage scans the
     * corpus or the full token table; at In-literal-unfriendly sizes the id
@@ -164,13 +164,6 @@ object Rm3 {
     */
   def feedbackVectors(index: BM25Index, fbDocIds: DataFrame): (DataFrame, DataFrame) = {
     val spark = index.spark
-    if (index.numDocs == 0) {
-      // an empty build leaves a schemaless docvecs dir — short-circuit with
-      // correctly-typed empty frames instead of a failing parquet read
-      import spark.implicits._
-      return (Seq.empty[(String, String, Long)].toDF("docId", "term", "tf"),
-        Seq.empty[(String, Long)].toDF("docId", "dl"))
-    }
     val dim = index.docs
       .join(broadcast(fbDocIds.select("docId").distinct()), Seq("docId"))
       .select(col("docId"), col("docIntId"), col("len"))
@@ -186,18 +179,10 @@ object Rm3 {
     // unpack AFTER pruning: the packed layout (one row per doc — terms[],
     // tfs[]) keeps partition + row-group pruning on ~numDocs rows, and only
     // the ≤ nQueries × fbDocs surviving vectors explode back to (term, tf)
-    // pairs. Indexes built before the segment groups wrote the vectors
-    // could split a doc into two partial rows at an input-split boundary;
-    // their pairs union here — each (doc, term) exists exactly once
-    // globally, so the result is identical.
-    val unpacked =
-      if (index.docvecsFormat == "packed")
-        pruned.select(col("docIntId"),
-          explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-          .select(col("docIntId"), col("tt.terms").as("term"),
-            col("tt.tfs").as("tf"))
-      else pruned // legacy row-per-(doc,term) layout
-    val docTf = unpacked
+    // pairs
+    val docTf = pruned
+      .select(col("docIntId"), explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
+      .select(col("docIntId"), col("tt.terms").as("term"), col("tt.tfs").as("tf"))
       .join(broadcast(dim.select("docIntId", "docId")), "docIntId")
       .select(col("docId"), col("term"), col("tf"))
     (docTf, dl)
@@ -227,28 +212,21 @@ object Rm3 {
   /** Stored vectors of distinct docIntIds collected to the driver by ONE
     * pruned docvecs scan: docIntId → (terms, tfs). A build writes one
     * packed row per doc, so Σtfs is the doc's full length — the `len`
-    * that row carries into the docs dimension. Older packed indexes could
-    * split a doc into two partial rows, which concatenate here (each
-    * (doc, term) pair exists once); legacy "rows"-format tables group
-    * their (docIntId, term, tf) rows the same way.
+    * that row carries into the docs dimension. A docIntId read twice means
+    * a damaged docvecs table, and fails naming it.
     */
   private[query] def fetchVectors(index: BM25Index, ids: Array[Long])
       : Map[Long, (Array[String], Array[Long])] = {
     if (ids.isEmpty) return Map.empty
     val spark = index.spark
     import spark.implicits._
-    val pruned = prunedDocvecs(index, ids)
-    val parts: Array[(Long, Array[String], Array[Long])] =
-      if (index.docvecsFormat == "packed")
-        pruned.select(col("docIntId"), col("terms"), col("tfs"))
-          .as[(Long, Array[String], Array[Long])].collect()
-      else
-        pruned.select(col("docIntId"), col("term"), col("tf").cast("long"))
-          .as[(Long, String, Long)].collect()
-          .map { case (d, t, tf) => (d, Array(t), Array(tf)) }
-    parts.groupBy(_._1).map { case (d, ps) =>
-      d -> (ps.flatMap(_._2), ps.flatMap(_._3))
-    }
+    val rows = prunedDocvecs(index, ids).select(col("docIntId"), col("terms"), col("tfs"))
+      .as[(Long, Array[String], Array[Long])].collect()
+    val vectors = rows.map { case (d, terms, tfs) => d -> (terms, tfs) }.toMap
+    if (vectors.size != rows.length)
+      throw new IllegalStateException(s"docIntId ${rows.map(_._1).diff(vectors.keys.toSeq).head} " +
+        s"has more than one row in ${index.indexDir}/docvecs; delete and rebuild the index")
+    vectors
   }
 
   /** Scalar twin of [[expandWeights]] for ONE query over driver-held
@@ -308,9 +286,9 @@ object Rm3 {
   }
 
   /** BM25+RM3 over a built index with the relevance model read from the
-    * index's STORED doc vectors (no corpus scan, no re-tokenization).
-    * Every build stores the doc vectors; for legacy indexes built without
-    * them use [[searchIndexedRetokenize]].
+    * index's STORED doc vectors (no corpus scan, no re-tokenization), which
+    * every build writes. [[searchIndexedRetokenize]] is its cross-check
+    * twin, which re-tokenizes the feedback docs from the corpus instead.
     *
     * The batch takes the engine's one kernel route (the same probe, doc
     * filter resolution, chunking and finish as
@@ -337,11 +315,6 @@ object Rm3 {
     require(fbDocs > 0, "fbDocs must be positive")
     require(fbTerms > 0, "fbTerms must be positive")
     require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1]: $alpha")
-    // checked up front: the driver route touches docvecs only for batches
-    // with positively-scored feedback
-    require(index.numDocs == 0 || index.hasDocVectors, s"index at " +
-      s"${index.indexDir} was built without doc vectors; use " +
-      "searchIndexedRetokenize")
     def plan(filterOverBound: Boolean) = searchIndexedPlan(index, queries, k,
       fbDocs, fbTerms, alpha, docFilter, filterOverBound)
     val chunk = chunkQueries(index.spark, fbDocs)
@@ -380,11 +353,11 @@ object Rm3 {
     } finally fb.unpersist()
   }
 
-  /** [[searchIndexed]] for indexes built WITHOUT stored doc vectors: the
-    * relevance model re-tokenizes the feedback docs out of `corpus`
-    * (docId, content — the same frame the index was built from) through a
-    * bounded semi-join. Exact and one-pass, but the semi-join reads the
-    * corpus table once per batch — prefer building with doc vectors.
+  /** The cross-check twin of [[searchIndexed]]: the relevance model
+    * re-tokenizes the feedback docs out of `corpus` (docId, content — the
+    * same frame the index was built from) through a bounded semi-join
+    * instead of reading the stored doc vectors. Exact and one-pass, but the
+    * semi-join reads the corpus table once per batch.
     */
   def searchIndexedRetokenize(index: BM25Index, corpus: DataFrame,
                               queries: DataFrame, k: Int, fbDocs: Int = 10,

@@ -3,7 +3,6 @@ package graft.store
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonProcessingException
-import com.fasterxml.jackson.core.json.JsonReadFeature
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -156,8 +155,5 @@ class IcebergLikeStore(tableDir: String) {
 }
 
 object IcebergLikeStore {
-  // unescaped control characters: manifests and properties written before
-  // the store moved to Jackson escaped only `"` and `\`
-  private val Json = JsonMapper.builder()
-    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
+  private val Json = new JsonMapper()
 }

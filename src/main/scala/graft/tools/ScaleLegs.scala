@@ -13,8 +13,13 @@ import graft.util.SynthCorpus
   * The driver bench's scaling legs (graft.Bench) time BUILD+QUERY at 1.2M
   * docs with per-leg in-JVM builds; at 4.8M a 1-cpu build alone is ~10
   * minutes of wall per round, so this probe holds the INDEX CONSTANT —
-  * built once at full parallelism; the on-disk artifact is byte-identical
-  * regardless of build parallelism — and measures the QUERY side per core.
+  * built once by `BenchCore.probeIndex` in a `local[32]` session, whose
+  * default parallelism makes the id partitions P = 32 on any host, one
+  * salt each up to 2^20 docs a partition — and measures the QUERY side per
+  * core over that 32-salt layout, not the few-salt layout a build at the
+  * host's parallelism writes (which layout to measure is ROADMAP direction
+  * 6's question). A probe index of another format version is deleted and
+  * built again.
   * Each leg runs in its own child JVM with `-XX:ActiveProcessorCount=N`
   * and `master=local[N]` (GC/thread pools sized to the emulated node),
   * rounds are INTERLEAVED low/high and the best per leg kept — exactly the
@@ -86,7 +91,13 @@ object ScaleLegs {
     // stage the shared index (untimed, full parallelism); child legs only
     // open it read-only
     val parent = graft.BenchCore.probeSession(32, "scalelegs")
-    val idx = graft.BenchCore.probeIndex(parent, nDocs)
+    val idx = try graft.BenchCore.probeIndex(parent, nDocs) catch {
+      case e: graft.index.IndexBuilder.FormatMismatch =>
+        println(s"[legs] ${e.getMessage}: deleting the probe index to build it again")
+        graft.util.Dirs.deleteRecursively(
+          new java.io.File(s"${graft.BenchCore.workBase}/qprobe-index-$nDocs"))
+        graft.BenchCore.probeIndex(parent, nDocs)
+    }
     val idxDir = idx.indexDir
     println(s"[legs] shared index ready: dir=$idxDir numDocs=${idx.numDocs}")
     parent.stop()

@@ -175,20 +175,6 @@ class ResumeSpec extends SparkTestBase {
     assertRefused(killedCopy("seg-0", "commit"), grown, matrixCfg, "docCounts")
   }
 
-  test("a partial index with a docmap commit fails loudly") {
-    val dir = killedCopy("seg-0", "commit")
-    // a docmap manifest as the joined-docmap layout wrote it, first in the log
-    val commits = java.nio.file.Paths.get(dir, "_commits")
-    java.nio.file.Files.move(commits.resolve("00000-seg-0.json"), commits.resolve("00001-seg-0.json"))
-    java.nio.file.Files.writeString(commits.resolve("00000-docmap.json"),
-      """{"group": "docmap", "rowCount": 80, "files": ["docmap"],
-        | "metrics": {"stage": "docmap"}, "elapsedSec": 0.1}""".stripMargin)
-    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir, matrixCfg))
-    assert(e.getMessage.contains(s"$dir/docmap"), e.getMessage)
-    assert(e.getMessage.contains("built by an older layout; delete and rebuild"), e.getMessage)
-    assert(new IcebergLikeStore(dir).committedGroups() == Set("docmap", "seg-0"))
-  }
-
   test("ids: the docId rank in its hash partition, whatever the group count") {
     // the rule a separate docmap table used to hold: hash partition of P,
     // sorted by docId, numbered by monotonically_increasing_id
@@ -370,85 +356,82 @@ class ResumeSpec extends SparkTestBase {
     assert(docs.rdd.getNumPartitions == 1)
   }
 
-  test("an index with a docs table and docId-less docvecs opens through docs/") {
-    // the layout of builds that wrote a separate docs table: docs/
-    // (docIntId, docId, len, salt) and packed docvecs rows without docId
-    val dir = tmpDir("graft-legacydocs")
-    IndexBuilder.build(spark, corpusDf, dir, matrixCfg)
-    import spark.implicits._
-    val q = Seq(("q1", "merge sort"), ("q2", "binary search tree")).toDF("qid", "query")
-    def results(idx: graft.query.BM25Index): Seq[Seq[String]] =
-      Seq(graft.query.QueryEngine.searchWand(idx, q, 5),
-        graft.query.QueryEngine.searchExact(idx, q, 5),
-        graft.query.Rm3.searchIndexed(idx, q, 5, fbDocs = 3))
-        .map(_.collect().map(_.toString).sorted.toSeq)
-    val want = results(new graft.query.BM25Index(spark, dir))
-    val old = tmpDir("graft-legacydocs-tables")
-    docsOf(dir).write.parquet(s"$old/docs")
-    spark.read.parquet(s"$dir/docvecs").drop("docId")
-      .write.partitionBy("g", "salt").parquet(s"$old/docvecs")
-    graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
-    for (t <- Seq("docs", "docvecs"))
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$old/$t"), java.nio.file.Paths.get(s"$dir/$t"))
-    val idx = new graft.query.BM25Index(spark, dir)
-    assert(!idx.docvecs.columns.contains("docId"))
-    val plan = idx.docs.queryExecution.executedPlan.toString
-    assert(plan.contains(s"$dir/docs]") && !plan.contains(s"$dir/docvecs]"), plan)
-    assert(want.forall(_.nonEmpty))
-    assert(results(idx) == want)
+  /** `e` refuses the index at `dir` as recording formatVersion=`found`. */
+  private def assertFormatRefused(e: IllegalStateException, dir: String, found: String): Unit = {
+    assert(e.isInstanceOf[IndexBuilder.FormatMismatch], e)
+    assert(e.getMessage.contains(s"index at $dir:"), e.getMessage)
+    assert(e.getMessage.contains(s"formatVersion=$found,"), e.getMessage)
+    assert(e.getMessage.contains("delete and rebuild"), e.getMessage)
   }
 
-  test("a partial index with an old-layout seg-0 commit fails loudly") {
-    val dir = tmpDir("graft-oldlayout")
-    // a seg-0 manifest as the exploded-segments layout wrote it
-    val commits = java.nio.file.Paths.get(dir, "_commits")
-    java.nio.file.Files.createDirectories(commits)
-    java.nio.file.Files.writeString(commits.resolve("00000-seg-0.json"),
-      """{"group": "seg-0", "rowCount": 40, "files": ["segments/g=0"],
-        | "metrics": {"stage": "segments", "group": "0"}, "elapsedSec": 0.1}""".stripMargin)
-    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir,
-      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4)))
-    assert(e.getMessage.contains(s"$dir/segments"), e.getMessage)
-    assert(e.getMessage.contains("built by an older layout; delete and rebuild"), e.getMessage)
-    // nothing was written over the old partial index
-    assert(new IcebergLikeStore(dir).committedGroups() == Set("seg-0"))
-    assert(!new java.io.File(s"$dir/docvecs").exists())
-  }
-
-  test("legacy row-per-term docvecs (docvecsFormat=rows) feed RM3 identically") {
-    // read compatibility: indexes built before round 6 store one docvecs
-    // row per (doc, term) and record docvecsFormat=rows; Rm3 unpacks them
-    // through its rows branch
-    val dir = tmpDir("graft-legacydv")
-    IndexBuilder.build(spark, corpusDf, dir,
-      IndexBuilder.Config(numSegmentGroups = 2, numBuckets = 4))
-    import spark.implicits._
-    val q = Seq(("q1", "merge sort")).toDF("qid", "query")
-    def rm3Rows() = graft.query.Rm3
-      .searchIndexed(new graft.query.BM25Index(spark, dir), q, 5, fbDocs = 3)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getInt(3)))
-      .sorted.toSeq
-    val want = rm3Rows()
-    val pairs = docvecPairs(dir)
-    // rewrite the docvecs table to the legacy layout: docvecs/salt=<s>/
-    // (docIntId, term, tf), beside the docs table that layout had
-    val legacyTmp = tmpDir("graft-legacydv-rows")
-    pairs.toDF("docIntId", "term", "tf")
-      .withColumn("salt", IndexBuilder.saltOf(col("docIntId")))
-      .write.partitionBy("salt").parquet(s"$legacyTmp/docvecs")
-    docsOf(dir).write.parquet(s"$legacyTmp/docs")
-    graft.util.Dirs.deleteRecursively(new java.io.File(s"$dir/docvecs"))
-    for (t <- Seq("docs", "docvecs"))
-      java.nio.file.Files.move(java.nio.file.Paths.get(s"$legacyTmp/$t"),
-        java.nio.file.Paths.get(s"$dir/$t"))
+  /** A copy of the completed build whose `_properties.json` records
+    * formatVersion `v` (none when `v` is None).
+    */
+  private def withPropsVersion(name: String, v: Option[String]): String = {
+    val dir = tmpDir(name)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(completed), new java.io.File(dir))
     val store = new IcebergLikeStore(dir)
-    store.writeProperties(store.readProperties() + ("docvecsFormat" -> "rows"))
-    val idx = new graft.query.BM25Index(spark, dir)
-    assert(idx.docvecsFormat == "rows")
-    assert(spark.read.parquet(s"$dir/docvecs").columns.toSet ==
-      Set("docIntId", "term", "tf", "salt"))
-    assert(rm3Rows() == want) // the rows branch feeds RM3 identically
+    val props = store.readProperties() - "formatVersion"
+    store.writeProperties(v.fold(props)(x => props + ("formatVersion" -> x)))
+    dir
+  }
+
+  test("opening an index whose properties record no or another formatVersion fails") {
+    for ((v, found) <- Seq(None -> "(none)", Some("2") -> "2")) {
+      val dir = withPropsVersion(s"graft-format-open-$found", v)
+      assertFormatRefused(intercept[IllegalStateException](
+        new graft.query.BM25Index(spark, dir)), dir, found)
+    }
+  }
+
+  test("a partial index of an older layout is refused and left as it was") {
+    // manifest logs as three earlier layouts wrote them: a docmap table's
+    // commit, a seg-0 commit of the exploded segments/ rows, and the
+    // hand-written manifest (an always-empty sha256 key) of the store
+    // before it used Jackson
+    for ((layout, name, manifest) <- Seq(
+        ("docmap", "00000-docmap.json",
+          """{"group": "docmap", "rowCount": 80, "files": ["docmap"],
+            | "metrics": {"stage": "docmap"}, "elapsedSec": 0.1}""".stripMargin),
+        ("segments", "00000-seg-0.json",
+          """{"group": "seg-0", "rowCount": 40, "files": ["segments/g=0"],
+            | "metrics": {"stage": "segments", "group": "0"}, "elapsedSec": 0.1}""".stripMargin),
+        ("handwritten", "00000-seg-0.json",
+          """{"group": "seg-0", "rowCount": 40,
+            | "files": ["docvecs/g=0"],
+            | "metrics": {"stage": "segments","group": "0","format": "packed"}, "elapsedSec": 4.0E-4,
+            | "sha256": ""}""".stripMargin))) {
+      val dir = tmpDir(s"graft-format-$layout")
+      val file = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_commits"))
+        .resolve(name)
+      java.nio.file.Files.writeString(file, manifest)
+      val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir, matrixCfg))
+      assertFormatRefused(e, dir, "(none)")
+      assert(e.getMessage.contains(s"the ${name.drop(6).stripSuffix(".json")} commit"), e.getMessage)
+      // nothing was written over the old partial index
+      assert(new java.io.File(dir).list().toSeq == Seq("_commits"), layout)
+      assert(new java.io.File(dir, "_commits").list().toSeq == Seq(name), layout)
+      assert(java.nio.file.Files.readString(file) == manifest, layout)
+    }
+  }
+
+  test("a build over a complete index of another formatVersion is refused") {
+    // the properties, or one manifest, record another version
+    val props = withPropsVersion("graft-format-complete-props", Some("2"))
+    assertFormatRefused(intercept[IllegalStateException](
+      IndexBuilder.build(spark, corpusDf, props, matrixCfg)), props, "2")
+    assert(new IcebergLikeStore(props).readProperties()("formatVersion") == "2")
+    val manifest = tmpDir("graft-format-complete-manifest")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(completed), new java.io.File(manifest))
+    val postings = java.nio.file.Paths.get(manifest, "_commits", "00003-postings.json")
+    val body = java.nio.file.Files.readString(postings)
+    val older = body.replace(
+      s"\"formatVersion\" : \"${IndexBuilder.FormatVersion}\"", "\"formatVersion\" : \"0\"")
+    assert(older != body)
+    tear(manifest, "_commits/00003-postings.json", older)
+    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, manifest, matrixCfg))
+    assertFormatRefused(e, manifest, "0")
+    assert(e.getMessage.contains("the postings commit"), e.getMessage)
   }
 
   test("numBuckets=0 derives a vocabulary-proportional bucket count") {

@@ -372,6 +372,20 @@ class BM25EngineSpec extends SparkTestBase {
     assert(QueryEngine.searchExact(idx, q, 5).count() == 0)
   }
 
+  test("empty corpus: docvecs opens with its schema and zero rows") {
+    // no data file to infer a schema from: the handle reads DocvecsSchema
+    val dir = tmpDir("graft-index-empty-docvecs")
+    import spark.implicits._
+    IndexBuilder.build(spark, Seq.empty[(String, String)].toDF("docId", "content"), dir,
+      IndexBuilder.Config(numSegmentGroups = 1, numBuckets = 4))
+    val idx = new BM25Index(spark, dir)
+    assert(idx.docvecs.schema == IndexBuilder.DocvecsSchema)
+    assert(idx.docvecs.count() == 0)
+    assert(idx.docs.count() == 0)
+    val (docTf, dl) = Rm3.feedbackVectors(idx, Seq("d1").toDF("docId"))
+    assert(docTf.count() == 0 && dl.count() == 0)
+  }
+
   test("index stats and properties recorded") {
     val idx = new BM25Index(spark, indexDir)
     assert(idx.params == BM25Params())
@@ -380,5 +394,9 @@ class BM25EngineSpec extends SparkTestBase {
     // per-partition lineage present
     val commits = idx.store.readCommits()
     assert(commits.map(_.group).toSet == Set("seg-0", "seg-1", "termstats", "postings"))
+    // the format version, in the properties and in every manifest
+    val version = IndexBuilder.FormatVersion.toString
+    assert(idx.props("formatVersion") == version)
+    assert(commits.forall(_.metrics.get("formatVersion").contains(version)), commits)
   }
 }

@@ -141,6 +141,24 @@ class Rm3Spec extends SparkTestBase {
       s"corpus scan leaked into the docvec fetch:\n$plan")
   }
 
+  test("a docIntId stored in two docvecs rows fails the vector fetch loudly") {
+    val dir = tmpDir("graft-rm3-dupvec")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(indexDir), new java.io.File(dir))
+    val first = new BM25Index(spark, dir).docvecs.orderBy("docIntId").limit(1)
+    val Array((id, g, salt)) = first.select("docIntId", "g", "salt").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    // a second copy of its row, as a file beside its (group, salt) file
+    val staged = s"${tmpDir("graft-rm3-dupvec-row")}/row"
+    first.drop("g", "salt").coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles.filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath,
+      java.nio.file.Paths.get(dir, "docvecs", s"g=$g", s"salt=$salt", "part-dup.parquet"))
+    val e = intercept[IllegalStateException](
+      Rm3.fetchVectors(new BM25Index(spark, dir), Array(id)))
+    assert(e.getMessage.contains(s"docIntId $id has more than one row in $dir/docvecs"),
+      e.getMessage)
+  }
+
   test("over-bound docvec-fetch fallbacks (semi-join, broadcast In) stay exact") {
     val idx = new BM25Index(spark, indexDir)
     val want = resultsByQid(
