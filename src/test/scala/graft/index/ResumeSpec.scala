@@ -384,35 +384,67 @@ class ResumeSpec extends SparkTestBase {
     }
   }
 
-  test("a partial index of an older layout is refused and left as it was") {
-    // manifest logs as three earlier layouts wrote them: a docmap table's
-    // commit, a seg-0 commit of the exploded segments/ rows, and the
-    // hand-written manifest (an always-empty sha256 key) of the store
-    // before it used Jackson
-    for ((layout, name, manifest) <- Seq(
-        ("docmap", "00000-docmap.json",
-          """{"group": "docmap", "rowCount": 80, "files": ["docmap"],
-            | "metrics": {"stage": "docmap"}, "elapsedSec": 0.1}""".stripMargin),
-        ("segments", "00000-seg-0.json",
-          """{"group": "seg-0", "rowCount": 40, "files": ["segments/g=0"],
-            | "metrics": {"stage": "segments", "group": "0"}, "elapsedSec": 0.1}""".stripMargin),
-        ("handwritten", "00000-seg-0.json",
-          """{"group": "seg-0", "rowCount": 40,
-            | "files": ["docvecs/g=0"],
-            | "metrics": {"stage": "segments","group": "0","format": "packed"}, "elapsedSec": 4.0E-4,
-            | "sha256": ""}""".stripMargin))) {
-      val dir = tmpDir(s"graft-format-$layout")
-      val file = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_commits"))
-        .resolve(name)
-      java.nio.file.Files.writeString(file, manifest)
-      val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir, matrixCfg))
-      assertFormatRefused(e, dir, "(none)")
-      assert(e.getMessage.contains(s"the ${name.drop(6).stripSuffix(".json")} commit"), e.getMessage)
-      // nothing was written over the old partial index
-      assert(new java.io.File(dir).list().toSeq == Seq("_commits"), layout)
-      assert(new java.io.File(dir, "_commits").list().toSeq == Seq(name), layout)
-      assert(java.nio.file.Files.readString(file) == manifest, layout)
+  /** A build over the partial index at `dir` fails as recording no
+    * formatVersion in its `group` commit, and writes nothing there.
+    */
+  private def assertOlderLayoutRefused(dir: String, group: String): Unit = {
+    // every path under `dir`, with a file's bytes
+    def tree(): Map[String, Seq[Byte]] = {
+      val paths = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try paths.toArray.map(_.asInstanceOf[java.nio.file.Path]).map(p => p.toString ->
+          (if (java.nio.file.Files.isRegularFile(p)) java.nio.file.Files.readAllBytes(p).toSeq
+           else Nil)).toMap
+      finally paths.close()
     }
+    val before = tree()
+    val e = intercept[IllegalStateException](IndexBuilder.build(spark, corpusDf, dir, matrixCfg))
+    assertFormatRefused(e, dir, "(none)")
+    assert(e.getMessage.contains(s"the $group commit"), e.getMessage)
+    // nothing was written over the old partial index
+    assert(tree() == before)
+  }
+
+  /** A partial index whose log holds only `manifest`, as `name`. */
+  private def olderLog(layout: String, name: String, manifest: String): String = {
+    val dir = tmpDir(s"graft-format-$layout")
+    java.nio.file.Files.writeString(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "_commits")).resolve(name),
+      manifest)
+    dir
+  }
+
+  test("a partial index with a docmap commit fails loudly") {
+    val dir = killedCopy("seg-0", "commit")
+    // a docmap manifest as the joined-docmap layout wrote it, first in the
+    // log, before a seg-0 commit of the current layout
+    val commits = java.nio.file.Paths.get(dir, "_commits")
+    java.nio.file.Files.move(commits.resolve("00000-seg-0.json"), commits.resolve("00001-seg-0.json"))
+    java.nio.file.Files.writeString(commits.resolve("00000-docmap.json"),
+      """{"group": "docmap", "rowCount": 80, "files": ["docmap"],
+        | "metrics": {"stage": "docmap"}, "elapsedSec": 0.1}""".stripMargin)
+    assertOlderLayoutRefused(dir, "docmap")
+    assert(new IcebergLikeStore(dir).committedGroups() == Set("docmap", "seg-0"))
+  }
+
+  test("a partial index with an old-layout seg-0 commit fails loudly") {
+    // a seg-0 manifest as the exploded-segments layout wrote it
+    val dir = olderLog("segments", "00000-seg-0.json",
+      """{"group": "seg-0", "rowCount": 40, "files": ["segments/g=0"],
+        | "metrics": {"stage": "segments", "group": "0"}, "elapsedSec": 0.1}""".stripMargin)
+    assertOlderLayoutRefused(dir, "seg-0")
+    assert(!new java.io.File(s"$dir/docvecs").exists())
+  }
+
+  test("a partial index of an older layout is refused and left as it was") {
+    // the hand-written manifest (an always-empty sha256 key) of the store
+    // before it used Jackson
+    val dir = olderLog("handwritten", "00000-seg-0.json",
+      """{"group": "seg-0", "rowCount": 40,
+        | "files": ["docvecs/g=0"],
+        | "metrics": {"stage": "segments","group": "0","format": "packed"}, "elapsedSec": 4.0E-4,
+        | "sha256": ""}""".stripMargin)
+    assertOlderLayoutRefused(dir, "seg-0")
+    assert(new java.io.File(dir).list().toSeq == Seq("_commits"))
   }
 
   test("a build over a complete index of another formatVersion is refused") {

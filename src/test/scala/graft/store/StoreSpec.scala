@@ -7,8 +7,9 @@ import graft.index.IndexBuilder
 import graft.query.{BM25Index, QueryEngine}
 import graft.util.SynthCorpus
 
-/** The index store: paths resolve through Spark's Hadoop filesystem, and
-  * the manifest log and properties round-trip any text.
+/** The index store: paths resolve through Spark's Hadoop filesystem, the
+  * manifest log and properties round-trip any text, and files written in
+  * the earlier hand-rolled JSON format read back where they are JSON.
   */
 class StoreSpec extends SparkTestBase {
 
@@ -84,6 +85,48 @@ class StoreSpec extends SparkTestBase {
     assert(new IcebergLikeStore(dir).readProperties() == tricky)
     store.writeProperties(tricky + ("k" -> "v")) // replaces the file
     assert(new IcebergLikeStore(dir).readProperties() == tricky + ("k" -> "v"))
+  }
+
+  test("a manifest log and properties in the earlier hand-written format read back") {
+    val dir = tmpDir("graft-store-legacy")
+    val commits = Files.createDirectories(Paths.get(dir, "_commits"))
+    // verbatim output of the earlier writer: escapes only `"` and `\`, and
+    // records an (always empty) sha256 key
+    Files.writeString(commits.resolve("00000-seg-0.json"),
+      """{"group": "seg-0", "rowCount": 40,
+        | "files": ["segments/g=0"],
+        | "metrics": {"stage": "segments","group": "0"}, "elapsedSec": 4.0E-4,
+        | "sha256": ""}""".stripMargin)
+    Files.writeString(commits.resolve("00001-docvecs.json"),
+      """{"group": "docvecs", "rowCount": 80,
+        | "files": ["docvecs"],
+        | "metrics": {"stage": "docvecs","format": "packed"}, "elapsedSec": 1.25,
+        | "sha256": ""}""".stripMargin)
+    val props = Paths.get(dir, "_properties.json")
+    Files.writeString(props,
+      "{\"avgdl\": \"12.5\",\n" +
+        "\"note\": \"say \\\"hi\\\"\",\n" +
+        "\"tokenPattern\": \"[\\\\p{L}\\\\p{N}]+\"}")
+
+    val store = new IcebergLikeStore(dir)
+    assert(store.committedGroups() == Set("seg-0", "docvecs"))
+    assert(store.readCommits() == Seq(
+      PartitionCommit("seg-0", Seq("segments/g=0"), 40,
+        Map("stage" -> "segments", "group" -> "0"), 4.0e-4),
+      PartitionCommit("docvecs", Seq("docvecs"), 80,
+        Map("stage" -> "docvecs", "format" -> "packed"), 1.25)))
+    assert(store.lastCommit("docvecs").flatMap(_.metrics.get("format")).contains("packed"))
+    assert(store.isComplete)
+    assert(store.readProperties() == Map(
+      "avgdl" -> "12.5",
+      "note" -> "say \"hi\"",
+      "tokenPattern" -> "[\\p{L}\\p{N}]+"))
+    // a control character the earlier writer left unescaped is not JSON:
+    // it fails naming the file (such an index also records no
+    // formatVersion, so it is refused on open and on resume)
+    Files.writeString(props, "{\"note\": \"one\ntwo\"}")
+    val e = intercept[IllegalStateException](store.readProperties())
+    assert(e.getMessage.contains("_properties.json is empty or incomplete"), e.getMessage)
   }
 }
 
